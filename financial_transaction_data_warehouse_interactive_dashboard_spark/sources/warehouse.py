@@ -183,7 +183,7 @@ def upsert_partition_overwrite(
 
 
 
-def _write_tables(spark: SparkSession, writes) -> None:
+def _write_tables(writes) -> None:
     """Run independent table writes CONCURRENTLY (guide section 2.6 —
     overlap independent jobs): each item is (table, thunk) where the
     thunk performs the drop+saveAsTable for its own table. The publish
@@ -192,17 +192,24 @@ def _write_tables(spark: SparkSession, writes) -> None:
     full commit-protocol latency while the cluster idles — from a small
     thread pool the sidecar commits hide inside the codes job's tail.
     Thread-safety: different target tables, and Spark's scheduler is
-    explicitly designed for concurrent jobs from driver threads."""
+    explicitly designed for concurrent jobs from driver threads.
+
+    Every write runs to completion even when another fails; the failures
+    are then raised together as one ExceptionGroup that names each
+    failed table, so a partial publish says exactly what it left
+    unwritten."""
     from concurrent.futures import ThreadPoolExecutor
 
-    if len(writes) <= 1:
-        for _, thunk in writes:
-            thunk()
-        return
-    with ThreadPoolExecutor(max_workers=min(3, len(writes))) as pool:
-        futures = [pool.submit(thunk) for _, thunk in writes]
-        for f in futures:
-            f.result()
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = [(table, pool.submit(thunk)) for table, thunk in writes]
+    failed = [(t, f.exception()) for t, f in futures if f.exception()]
+    for table, e in failed:
+        e.add_note(f"while writing table {table}")
+    if failed:
+        raise ExceptionGroup(
+            "table writes failed: " + ", ".join(t for t, _ in failed),
+            [e for _, e in failed],
+        )
 
 
 def write_ivf_layout(emb: DataFrame, table: str, n_cells: int = 16) -> None:
@@ -276,10 +283,11 @@ def publish_ivfpq_layout(
             f"{prefix}_codebooks"
         )
 
-    _write_tables(
-        emb.sparkSession,
-        [("codes", _w_codes), ("centroids", _w_cells), ("books", _w_books)],
-    )
+    _write_tables([
+        (f"{prefix}_codes", _w_codes),
+        (f"{prefix}_centroids", _w_cells),
+        (f"{prefix}_codebooks", _w_books),
+    ])
 
 
 def publish_ivfpq256_layout(
@@ -334,10 +342,11 @@ def publish_ivfpq256_layout(
             "parquet"
         ).saveAsTable(f"{prefix}_books")
 
-    _write_tables(
-        spark,
-        [("codes", _w_codes), ("centroids", _w_cells), ("books", _w_books)],
-    )
+    _write_tables([
+        (f"{prefix}_codes", _w_codes),
+        (f"{prefix}_centroids", _w_cells),
+        (f"{prefix}_books", _w_books),
+    ])
 
 
 def append_ivfpq_vectors(new_emb: DataFrame, prefix: str) -> None:
@@ -479,9 +488,11 @@ def publish_opq256_layout(
             f"{prefix}_codes"
         )
 
-    _write_tables(
-        spark, [("rot", _w_rot), ("books", _w_books), ("codes", _w_codes)]
-    )
+    _write_tables([
+        (f"{prefix}_rot", _w_rot),
+        (f"{prefix}_books", _w_books),
+        (f"{prefix}_codes", _w_codes),
+    ])
 
 
 def append_ivfpq256_vectors(new_emb: DataFrame, prefix: str) -> None:

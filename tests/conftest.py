@@ -17,6 +17,16 @@ from financial_transaction_data_warehouse_interactive_dashboard_spark.session im
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
+# Small synthetic raw CSVs with the reference's three schemas and its
+# SURVEY.md section 1.3-1.4 quirks (UTF-8 BOM, ';' with a trailing ';',
+# DIVIDENT, symbols missing from the lookup, duplicate IDTransaction,
+# countries absent from country.csv), so the ETL runs without the
+# reference checkout.
+ETL_RAW_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "fixtures", "etl_raw")
+ETL_ACCOUNT = os.path.join(ETL_RAW_DIR, "account-statement.csv")
+ETL_SYMBOLS = os.path.join(ETL_RAW_DIR, "symbols.csv")
+ETL_COUNTRY = os.path.join(ETL_RAW_DIR, "country.csv")
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()

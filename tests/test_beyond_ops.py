@@ -680,13 +680,50 @@ def test_expectations_hostile_check_names(spark):
 def test_state_partitions_knob_restores_conf(spark):
     """The scoped state-partition knob must restore the session conf even
     when the streaming job throws — leaking a check-scale partition count
-    into the session would silently shrink every later batch shuffle."""
+    into the session would silently shrink every later batch shuffle.
+    With no explicit count the stores are sized one per core
+    (defaultParallelism), not to the batch shuffle default."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
-    with pytest.raises(ValueError):
-        with ST._state_partitions(spark, 4):
-            assert spark.conf.get("spark.sql.shuffle.partitions") == "4"
-            raise ValueError("boom")
-    assert spark.conf.get("spark.sql.shuffle.partitions") == old
+    per_core = str(spark.sparkContext.defaultParallelism)
+    for n, want in ((4, "4"), (None, per_core)):
+        with pytest.raises(ValueError):
+            with ST._state_partitions(spark, n):
+                assert spark.conf.get("spark.sql.shuffle.partitions") == want
+                raise ValueError("boom")
+        assert spark.conf.get("spark.sql.shuffle.partitions") == old
+        with ST._state_partitions(spark, n):
+            assert spark.conf.get("spark.sql.shuffle.partitions") == want
+        assert spark.conf.get("spark.sql.shuffle.partitions") == old
+
+
+def test_state_stores_sized_per_core_in_recorded_progress(spark):
+    """The ingest streams' state operators run one store per core when
+    the caller names no count, an explicit count is kept, and the
+    engine-side progress record shows it per microbatch."""
+    per_core = spark.sparkContext.defaultParallelism
+
+    def store_counts(query_name):
+        batches = ST.STREAM_PROGRESS[query_name]
+        assert batches and all("durationMs" in b for b in batches)
+        return {
+            op["numShufflePartitions"]
+            for b in batches
+            for op in b["stateOperators"]
+        }
+
+    ST.run_session_stream(spark, SF_SMOKE, query_name="st_sess_per_core")
+    ST.run_tumbling_stream(spark, SF_SMOKE, query_name="st_tumble_per_core")
+    ST.run_session_stream(
+        spark, SF_SMOKE, query_name="st_sess_eight", num_state_partitions=8
+    )
+    assert store_counts("st_sess_per_core") == {per_core}
+    assert store_counts("st_tumble_per_core") == {per_core}
+    assert store_counts("st_sess_eight") == {8}
+    sess = ST.STREAM_PROGRESS["st_sess_per_core"]
+    assert sum(b["numInputRows"] for b in sess) == (
+        load_table(spark, SF_SMOKE, "events").count() + 1  # + sentinel
+    )
+    assert sess[-1]["watermark"] > sess[0]["watermark"]
 
 
 def test_sessionizer_under_rocksdb_state_store(spark):

@@ -20,7 +20,7 @@ from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.re
     load_table,
 )
 
-from conftest import SF_SMOKE
+from conftest import ETL_ACCOUNT, ETL_COUNTRY, ETL_SYMBOLS, SF_SMOKE
 
 
 def plan_of(df) -> str:
@@ -724,11 +724,9 @@ def test_scale_safe_conf_knob_flips_all_sites(spark):
         etl as E,
     )
 
-    from test_etl_golden import ACCOUNT, COUNTRY, SYMBOLS
-
     spark.conf.set(SCALE_SAFE_CONF, "0")
     try:
-        account, symbols, _ = E.read_raw(spark, ACCOUNT, SYMBOLS, COUNTRY)
+        account, symbols, _ = E.read_raw(spark, ETL_ACCOUNT, ETL_SYMBOLS, ETL_COUNTRY)
         acc = E.clean_account(account, symbols)
         sym = E.remap_country(symbols, spark)
         for dim in E.build_dims(acc, sym, spark):
@@ -840,9 +838,7 @@ def test_build_dims_scale_safe_equivalence(spark):
         etl as E,
     )
 
-    from test_etl_golden import ACCOUNT, COUNTRY, SYMBOLS
-
-    account, symbols, _ = E.read_raw(spark, ACCOUNT, SYMBOLS, COUNTRY)
+    account, symbols, _ = E.read_raw(spark, ETL_ACCOUNT, ETL_SYMBOLS, ETL_COUNTRY)
     acc = E.clean_account(account, symbols)
     sym = E.remap_country(symbols, spark)
     dims = E.build_dims(acc, sym, spark)

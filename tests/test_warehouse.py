@@ -644,3 +644,38 @@ def test_ivfpq256_append_leaves_base_partitions_untouched(spark):
     )
     assert appended.count() > 0
     assert appended.select("m").distinct().count() == 8
+
+
+def test_write_tables_reports_every_failed_write():
+    """A failed write must not hide the others: every write runs to the
+    end, and one ExceptionGroup names each table whose write failed."""
+    import time
+
+    import pytest
+
+    written = []
+
+    def good():
+        time.sleep(0.2)  # still running when both failures have landed
+        written.append("t_good")
+
+    def failing(msg):
+        def thunk():
+            raise RuntimeError(msg)
+
+        return thunk
+
+    with pytest.raises(ExceptionGroup) as info:
+        WH._write_tables([
+            ("t_bad_a", failing("disk full")),
+            ("t_good", good),
+            ("t_bad_b", failing("executor lost")),
+        ])
+    assert written == ["t_good"]
+    msg = str(info.value)
+    assert "t_bad_a" in msg and "t_bad_b" in msg and "t_good" not in msg
+    assert sorted(str(e) for e in info.value.exceptions) == [
+        "disk full", "executor lost",
+    ]
+    WH._write_tables([("t_good", good)])  # no failure, no group
+    assert written == ["t_good", "t_good"]
