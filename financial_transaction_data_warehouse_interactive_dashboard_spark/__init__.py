@@ -5,8 +5,9 @@ Brand-new implementation on the Spark DataFrame/SQL stack (Catalyst, AQE,
 whole-stage codegen, Structured Streaming). The reference is a single-process
 pandas warehouse (etl.ipynb + streamlit.py); this engine re-expresses every
 operator it executes (SURVEY.md section 2) as lazy, distributed Spark plans,
-and adds the large-scale training-data operators (dedup, similarity search,
-text analysis, windowed event analytics) a 100 TB pipeline needs.
+and adds the large-scale training-data operators (dedup, exact and flat-index
+similarity search, text analysis, windowed event analytics) a 100 TB
+pipeline needs.
 
 Layout:
     session.py    SparkSession factory (AQE on, UTC, tuned shuffle partitions)

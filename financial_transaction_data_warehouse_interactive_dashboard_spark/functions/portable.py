@@ -182,8 +182,7 @@ def dot_fixed(a: str, b: str, n: int) -> Column:
     that whole-stage codegen compiles: Spark evaluates higher-order
     functions (zip_with/aggregate) interpreted, per row, with an
     intermediate array allocation — on a corpus x 2048-row candidate
-    frame that is ~10x the cost of the unrolled expression (measured
-    9s -> <1s on sim_ann_pq256's assignment at sf0.1)."""
+    frame that is ~10x the cost of the unrolled expression."""
     return F.expr(spark_dot_fixed_sql(a, b, n))
 
 

@@ -356,8 +356,8 @@ def bpe_vocab_case_sql() -> str:
 
 def bpe_token_ids_sql(engine: str, text_col: str = "text") -> str:
     """The full text -> array<token id> expression, generated for either
-    engine from the same merge table and vocab (the _sql_ivf_kmeans
-    discipline: one generator, two dialects, zero semantic drift).
+    engine from the same merge table and vocab (one generator, two
+    dialects, zero semantic drift).
 
     Pipeline: lowercase -> non-alpha to space -> delimiter-encode the
     WHOLE document in one pass ('/t/h/e/ /c/a/t/' — every character,

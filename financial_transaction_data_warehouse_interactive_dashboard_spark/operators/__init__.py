@@ -1,1 +1,1 @@
-"""Beyond-reference operators: dedup, similarity search, multimodal."""
+"""Beyond-reference operators: dedup, similarity search, multimodal, graph, sketches."""

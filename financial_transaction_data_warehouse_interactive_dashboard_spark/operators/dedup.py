@@ -889,7 +889,8 @@ def embedding_near_dup(
     join with expression cosines benches ~10x slower at sf0.1 (1.25M
     interpreted zip_with folds) and degrades quadratically in lambda
     evals; GEMM rides BLAS. For unlabeled corpora substitute a sign-LSH
-    bucket (operators.similarity.sign_bucket) as the block key.
+    bucket (sign of the dot product with random hyperplanes) as the
+    block key.
 
     Scale notes: a block is one task, so block size must fit executor
     memory (n x dim floats + the n x n score tile); beyond ~50k vectors

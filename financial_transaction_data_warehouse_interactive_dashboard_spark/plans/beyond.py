@@ -43,9 +43,6 @@ from ..operators import multimodal as M
 from ..operators import sampling as SP
 
 
-from ..operators import similarity as S
-
-
 from ..streaming import stream as ST
 
 
@@ -238,56 +235,6 @@ def _sql_ivf_kmeans(iters: int) -> str:
         " af.vec_id ASC) <= 5\n"
         "ORDER BY query_id, cosine DESC, neighbor_id"
     )
-
-
-
-
-def _sql_pq_adc() -> str:
-    """DuckDB oracle for 1-Lloyd-iteration PQ + ADC (operators.similarity
-    topk_ann_pq): subspace split -> seeded codebooks -> decimal-exact
-    refine -> encode -> per-subspace dot-product terms -> exact DECIMAL
-    ADC sum -> top-5."""
-    sd = S.PQ_SUBDIM
-    assign = (
-        "(SELECT sub.vec_id, sub.m, sub.sv, code FROM sub JOIN {books} USING (m)\n"
-        "   QUALIFY row_number() OVER (PARTITION BY sub.vec_id, sub.m\n"
-        "     ORDER BY round(list_cosine_similarity(sv, cv), 6) DESC,"
-        " code ASC) = 1)"
-    )
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    sub AS (SELECT vec_id, r.range AS m,
-                   v[r.range * {sd} + 1 : r.range * {sd} + {sd}] AS sv
-            FROM e, range(0, {S.PQ_M}) r),
-    b0 AS (SELECT m, vec_id AS code, sv AS cv FROM sub
-           WHERE vec_id < {S.PQ_K}),
-    a0 AS {assign.format(books='b0')},
-    px0 AS (SELECT m, code, u.p AS pos, u.x AS val FROM a0,
-            unnest([{{'p': i, 'x': sv[i]}}
-                    for i in range(1, len(sv) + 1)]) AS t(u)),
-    c0 AS (SELECT m, code, pos,
-                  CAST(sum(CAST(val AS DECIMAL(38,12))) AS DOUBLE)
-                    / count(*) AS cv_e
-           FROM px0 GROUP BY 1, 2, 3),
-    b1 AS (SELECT m, code, list(cv_e ORDER BY pos) AS cv
-           FROM c0 GROUP BY 1, 2),
-    enc AS {assign.format(books='b1')},
-    q AS (SELECT vec_id AS query_id, m, sv AS qsv FROM sub
-          WHERE vec_id < 8),
-    terms AS (SELECT query_id, enc.vec_id,
-                     CAST(round(list_dot_product(qsv, cv), 6)
-                          AS DECIMAL(18,6)) AS term
-              FROM enc JOIN b1 USING (m, code) JOIN q USING (m)),
-    scores AS (SELECT query_id, vec_id,
-                      CAST(sum(term) AS DOUBLE) AS approx_ip
-               FROM terms WHERE vec_id != query_id GROUP BY 1, 2)
-    SELECT query_id, vec_id AS neighbor_id,
-           round(approx_ip, 6) AS approx_ip
-    FROM scores
-    QUALIFY row_number() OVER (PARTITION BY query_id
-      ORDER BY approx_ip DESC, vec_id ASC) <= 5
-    ORDER BY query_id, approx_ip DESC, neighbor_id
-    """
 
 
 
@@ -1003,12 +950,10 @@ from .beyond_events import *  # noqa: E402,F401,F403
 from .beyond_multimodal import *  # noqa: E402,F401,F403
 from .beyond_streaming import *  # noqa: E402,F401,F403
 from .beyond_warehouse import *  # noqa: E402,F401,F403
-from .beyond_pipeline import *  # noqa: E402,F401,F403
 
 _TIER_MODULES = (
     "beyond_dedup", "beyond_similarity", "beyond_text", "beyond_events",
     "beyond_multimodal", "beyond_streaming", "beyond_warehouse",
-    "beyond_pipeline",
 )
 
 

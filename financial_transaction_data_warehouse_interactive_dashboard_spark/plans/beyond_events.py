@@ -493,7 +493,7 @@ def ev_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM t ORDER BY src, dst
     """,
     # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def ev_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type transition matrix (first-order Markov estimate of user

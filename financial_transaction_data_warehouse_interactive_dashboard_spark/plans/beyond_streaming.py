@@ -173,22 +173,20 @@ def st_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     balances state-store maintenance against Python-worker parallelism
     (measured best at check scale).
 
-    PERF STATUS — documented pedagogical baseline, like
-    sim_topk_bruteforce (adjudicated r9, VERDICT r8 ask #3, after three
-    rounds of measurement): this is the REFERENCE implementation of a
-    custom stateful operator (the applyInPandasWithState pattern a user
-    writes when session semantics outgrow session_window — e.g. value-
-    dependent gaps or emit-on-update); the production default for plain
+    PERF STATUS — documented pedagogical baseline (adjudicated r9,
+    VERDICT r8 ask #3, after three rounds of measurement): this is the
+    REFERENCE implementation of a custom stateful operator (the
+    applyInPandasWithState pattern a user writes when session semantics
+    outgrow session_window — e.g. value-dependent gaps or
+    emit-on-update); the production default for plain
     gap sessionization is the session_window twin. Interleaved
     median-of-3 vs the twin reads 1.3-2.7x across identical-code runs
     (microbatch scheduling + one Python call/key/batch dominate; 1.38x
     in the r9 decision experiment at the shipped 16-partition setting,
     with 8 -> 1.46x and 4 -> 1.92x measured worse; r13 idle-host
     recheck 1.34x after the r12 driver pass read 2.15x on twin-side
-    host variance — see the bench.py baseline_ratios note). The gap is
-    the intrinsic price of the Python state hook at local-mode scale,
-    not open engineering: bench.py now reports the pair under
-    ``baseline_ratios``, and the ratio stays measured every round."""
+    host variance). The gap is the intrinsic price of the Python state
+    hook at local-mode scale, not open engineering."""
     return ST.run_session_stream_stateful(
         spark, sf_dir, user_mod=10, num_state_partitions=16
     ).orderBy("user_id", "first_ts")
@@ -465,10 +463,10 @@ def st_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "st_bpe_tokenize_learned",
-    # tx_bpe_train_apply's oracle VERBATIM (the wh_ivfpq_publish twin
-    # discipline): stream == batch for the LEARNED tokenizer is the
-    # checked contract — the streamed two-microbatch union must
-    # reproduce every symbol of the batch train->apply composition.
+    # tx_bpe_train_apply's oracle VERBATIM (the twin discipline):
+    # stream == batch for the LEARNED tokenizer is the checked
+    # contract — the streamed two-microbatch union must reproduce
+    # every symbol of the batch train->apply composition.
     _T.bpe_train_apply_sql(),
     # New r11 (VERDICT r10 ask #5); first-timer on the r11 surface
     # after all-three-scale pre-validation (plans/rotation.py).
@@ -492,102 +490,3 @@ def st_bpe_tokenize_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     per executor and tokenizes at scan speed. Reference analogue:
     none."""
     return ST.run_stream_tokenize_learned(spark, sf_dir).orderBy("doc_id")
-
-
-# ---------------------------------------------------------------------------
-# st_ivfpq_monitor: the drift monitor running AT INGEST (r11; r12 queue)
-# ---------------------------------------------------------------------------
-
-# Shared cohort boundaries come from the LEAF module, not the sibling
-# tier (ADVICE r11: importing plans.beyond_similarity here creates a
-# circular import when beyond_similarity is the first tier imported in
-# a fresh interpreter — beyond_similarity -> beyond -> beyond_streaming
-# -> beyond_similarity, partially initialized).
-from ..operators.similarity import (  # noqa: E402
-    IVFPQ_APPEND_BASE as _IVFPQ_NEW_FROM,
-)
-from ..operators.similarity import (  # noqa: E402
-    IVFPQ_DRIFT_TRAIN as _IVFPQ_TRAIN,
-)
-
-
-@query(
-    "st_ivfpq_monitor",
-    # sim_ivfpq_drift's oracle shape restricted to the two ARRIVING
-    # cohorts (the streamed microbatches): same frozen-quantizer CTEs
-    # (train < IVFPQ_DRIFT_TRAIN, seeds < 16, one Lloyd), same exact
-    # DECIMAL fit mean, same occupancy share and threshold decision
-    # from the emitted rounded value.
-    f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    et AS (SELECT * FROM e WHERE vec_id < {_IVFPQ_TRAIN}),
-    c0 AS (SELECT vec_id AS cell, v AS cv FROM et WHERE vec_id < 16),
-    ia0 AS (SELECT et.vec_id, et.v, cell FROM et, c0
-            QUALIFY row_number() OVER (PARTITION BY et.vec_id
-              ORDER BY round(list_cosine_similarity(v, cv), 6) DESC,
-              cell ASC) = 1),
-    ipx0 AS (SELECT cell, u.p AS pos, u.x AS val FROM ia0,
-             unnest([{{'p': i, 'x': v[i]}}
-                     for i in range(1, len(v) + 1)]) AS t(u)),
-    icent0 AS (SELECT cell, pos,
-                 CAST(sum(CAST(val AS DECIMAL(38,12))) AS DOUBLE)
-                   / count(*) AS cv_e
-               FROM ipx0 GROUP BY 1, 2),
-    c1 AS (SELECT cell, list(cv_e ORDER BY pos) AS cv
-           FROM icent0 GROUP BY 1),
-    co AS (
-      SELECT 'new_iid' AS cohort, vec_id, v FROM e
-      WHERE vec_id >= {_IVFPQ_NEW_FROM}
-      UNION ALL
-      SELECT 'new_shifted', vec_id,
-             [x * CAST('0.05' AS DOUBLE) + CAST('1.0' AS DOUBLE)
-              for x in v]
-      FROM e WHERE vec_id >= {_IVFPQ_NEW_FROM}),
-    af AS (SELECT co.cohort, co.vec_id, cell,
-                  CAST(round(list_cosine_similarity(v, cv), 6)
-                       AS DECIMAL(18,6)) AS q
-           FROM co, c1
-           QUALIFY row_number() OVER (PARTITION BY co.cohort, co.vec_id
-             ORDER BY round(list_cosine_similarity(v, cv), 6) DESC,
-             cell ASC) = 1),
-    gc AS (SELECT cohort, cell, count(*) AS nc, sum(q) AS sq
-           FROM af GROUP BY 1, 2),
-    g AS (SELECT cohort, sum(nc) AS n, sum(sq) AS sq, max(nc) AS max_nc
-          FROM gc GROUP BY 1)
-    SELECT cohort, CAST(n AS BIGINT) AS n,
-           round(CAST(sq AS DOUBLE) / n, 6) AS mean_cos6,
-           round(CAST(max_nc AS DOUBLE) / n, 6) AS max_share6,
-           round(CAST(max_nc AS DOUBLE) / n, 6) > CAST('0.5' AS DOUBLE)
-             AS drifted
-    FROM g ORDER BY cohort
-    """,
-    # Authored r11 (after the r11 flip); queued for r12, whose
-    # interrupted landing never flipped the rotation (VERDICT r12) —
-    # locally oracle-pinned at all three scales meanwhile.
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
-)
-def st_ivfpq_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The index drift monitor running AT INGEST — the streaming face
-    of sim_ivfpq_drift, completing the lifecycle's control loop at the
-    place a 100 TB deployment actually needs it (a nightly sweep
-    notices a poisoned batch a day late; a per-arriving-batch monitor
-    raises wh_ivfpq_retrain's flag the moment it lands): the frozen
-    quantizer is computed batch-side and broadcast, and each arriving
-    microbatch (streaming.stream.run_ivfpq_monitor_stream — the iid
-    batch, then the planted x*0.05+1 concentrated batch, genuinely
-    separate files under maxFilesPerTrigger=1) flows through
-    foreachBatch into the per-cohort fit/occupancy aggregate and is
-    appended to a parquet sink, exactly-once under the checkpoint. The
-    read-back sink is the result: one row per arriving batch, iid MUST
-    NOT flag, the spike-in MUST flag (decision from the same rounded
-    max_share6 the row emits — the sim_ivfpq_drift discipline), and a
-    dropped / doubled / cross-contaminated microbatch changes the row
-    set against the batch oracle.
-
-    Scale: one map-side-combinable pass per microbatch against a
-    broadcast centroid table + a 1-row parquet append — the monitor
-    costs less than the scan that delivers the batch. Reference
-    analogue: none (beyond-reference LLM-pipeline tier)."""
-    return ST.run_ivfpq_monitor_stream(
-        spark, sf_dir, train_below=_IVFPQ_TRAIN, new_from=_IVFPQ_NEW_FROM
-    ).orderBy("cohort")

@@ -1002,7 +1002,7 @@ def tx_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM lp GROUP BY doc_id ORDER BY doc_id
     """,
     # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated BIGRAM language-model scoring — the second-order
@@ -1519,8 +1519,8 @@ def tx_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @query(
     "tx_bpe_apply_arrow",
-    # Shares tx_bpe_apply's oracle STRING verbatim (the wh_ivfpq_publish
-    # twin discipline): Arrow path == expression path is the checked
+    # Shares tx_bpe_apply's oracle STRING verbatim (the twin
+    # discipline): Arrow path == expression path is the checked
     # contract — the mapInPandas tokenizer must reproduce every token id
     # of every document that the generated nested-replace expression
     # produces, or the hash fails.

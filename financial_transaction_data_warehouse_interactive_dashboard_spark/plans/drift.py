@@ -29,7 +29,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..operators.similarity import IVFPQ_APPEND_BASE
 from ..operators.surrogate import resolve_scale_safe, two_phase_cumsum
 from .queries import _t, query
 
@@ -1894,275 +1893,4 @@ def qa_fdr_storey_spike_in(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
         )
         .orderBy("bh_rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# qa_psi_embedding_drift: per-dimension PSI drift monitor on embeddings
-# (r13, authored after the flip — r14 queue)
-# ---------------------------------------------------------------------------
-
-#: Fixed-width PSI bins over a single embedding coordinate: the fixture
-#: holds unit-normalized 64-dim vectors, so per-coordinate values live
-#: in ~[-0.58, 0.52] with sd ~1/8 — 8 bins of width 0.125 covering
-#: [-0.5, 0.5) (clamped at the edges) give every bin real mass on the
-#: reference cohort while the planted x*0.05+1 blob collapses onto the
-#: top bin. Edges are exact binary doubles, so floor((x+0.5)/0.125) is
-#: bit-identical across engines.
-EMB_PSI_BINS = 8
-EMB_DIM = 64
-#: The span the bins tile: [-EMB_PSI_GRID_SPAN/2, +EMB_PSI_GRID_SPAN/2),
-#: clamped at both ends. Width and offset are DERIVED from this pair
-#: everywhere (batch _bin, the stream's _bin via explicit parameters,
-#: and the oracle SQL below), so the three implementations cannot
-#: drift independently (ADVICE r14). 1.0/8 = 0.125 stays an exact
-#: binary double.
-EMB_PSI_GRID_SPAN = 1.0
-EMB_PSI_BIN_WIDTH = EMB_PSI_GRID_SPAN / EMB_PSI_BINS
-_EMB_PSI_BIN_SQL = (
-    f"least(greatest(CAST(floor((val + {EMB_PSI_GRID_SPAN / 2!r}) / "
-    f"{EMB_PSI_BIN_WIDTH!r}) AS BIGINT), 0), "
-    f"{EMB_PSI_BINS - 1})"
-)
-
-
-def _sql_psi_embedding() -> str:
-    """DuckDB oracle for qa_psi_embedding_drift AND its ingest twin
-    st_psi_embedding_drift (shared STRING VERBATIM — stream == batch
-    is the checked contract: each cohort arrives in exactly one
-    microbatch and PSI is per-cohort, so the union of per-batch
-    reports equals this batch replay row-for-row)."""
-    return f"""
-    WITH e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-    refx AS (SELECT u.p - 1 AS dim, u.x AS val
-             FROM (SELECT * FROM e WHERE vec_id < {IVFPQ_APPEND_BASE}),
-             unnest([{{'p': i, 'x': v[i]}}
-                     for i in range(1, len(v) + 1)]) AS t(u)),
-    newv AS (SELECT vec_id, v FROM e WHERE vec_id >= {IVFPQ_APPEND_BASE}),
-    candx AS (
-      SELECT 'new_iid' AS cohort, u.p - 1 AS dim, u.x AS val
-      FROM newv, unnest([{{'p': i, 'x': v[i]}}
-                         for i in range(1, len(v) + 1)]) AS t(u)
-      UNION ALL
-      SELECT 'new_shifted', u.p - 1,
-             u.x * CAST('0.05' AS DOUBLE) + CAST('1.0' AS DOUBLE)
-      FROM newv, unnest([{{'p': i, 'x': v[i]}}
-                         for i in range(1, len(v) + 1)]) AS t(u)),
-    rc AS (SELECT dim, {_EMB_PSI_BIN_SQL} AS bin, count(*) AS cnt
-           FROM refx GROUP BY 1, 2),
-    cc AS (SELECT cohort, dim, {_EMB_PSI_BIN_SQL} AS bin, count(*) AS cnt
-           FROM candx GROUP BY 1, 2, 3),
-    grid AS (SELECT co.cohort, d.range AS dim, b.range AS bin
-             FROM (SELECT DISTINCT cohort FROM candx) co,
-                  range(0, {EMB_DIM}) d, range(0, {EMB_PSI_BINS}) b),
-    wide AS (SELECT g.cohort, g.dim, g.bin,
-                    coalesce(rc.cnt, 0) AS ca, coalesce(cc.cnt, 0) AS cb
-             FROM grid g
-             LEFT JOIN rc ON rc.dim = g.dim AND rc.bin = g.bin
-             LEFT JOIN cc ON cc.cohort = g.cohort AND cc.dim = g.dim
-                         AND cc.bin = g.bin),
-    tot AS (SELECT cohort, dim, sum(ca) AS na, sum(cb) AS nb
-            FROM wide GROUP BY 1, 2),
-    pq AS (SELECT w.cohort, w.dim, w.bin,
-                  (w.ca + 1)::DOUBLE / (t.na + {EMB_PSI_BINS})::DOUBLE AS p,
-                  (w.cb + 1)::DOUBLE / (t.nb + {EMB_PSI_BINS})::DOUBLE AS q
-           FROM wide w JOIN tot t ON t.cohort = w.cohort AND t.dim = w.dim),
-    contrib AS (SELECT cohort, dim,
-                       CAST(round((p - q) * ln(p / q), 6)
-                            AS DECIMAL(18,6)) AS x
-                FROM pq),
-    psi AS (SELECT cohort, dim,
-                   round(CAST(sum(x) AS DOUBLE), 6) AS psi6
-            FROM contrib GROUP BY 1, 2),
-    ranked AS (SELECT cohort, dim, psi6,
-                      row_number() OVER (PARTITION BY cohort
-                        ORDER BY psi6 DESC, dim ASC) AS rnk
-               FROM psi)
-    SELECT cohort, CAST(rnk AS INTEGER) AS rnk, CAST(dim AS INTEGER) AS dim,
-           psi6, psi6 > CAST('0.25' AS DOUBLE) AS drifted
-    FROM ranked WHERE rnk <= 5
-    ORDER BY cohort, rnk
-    """
-
-
-@query(
-    "qa_psi_embedding_drift",
-    _sql_psi_embedding(),
-    # Authored r13 AFTER the flip commit (the landing-checklist
-    # discipline): three-scale verified at authoring time, queued in
-    # NEXT_QUEUE for the r14 surface.
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
-)
-def qa_psi_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-DIMENSION Population Stability Index on the embedding
-    corpus — the DISTRIBUTIONAL drift monitor that complements
-    sim_ivfpq_drift's quantizer-fit view: a production feature store
-    tracks every embedding coordinate's distribution between the index
-    snapshot (reference = the wh_ivfpq_append base, vec_id <
-    operators.similarity.IVFPQ_APPEND_BASE — single-sourced here AND in
-    the oracle so the stated coupling cannot silently drift) and
-    the arriving batch, because a fit drop tells you THAT the index is
-    stale while per-dim PSI tells you WHERE the distribution moved.
-    Two candidate cohorts, the standing spike-in discipline: new_iid
-    (the raw remainder — must NOT flag) and new_shifted (the x*0.05+1
-    plant — every top dim collapses into one bin and MUST flag at the
-    industry PSI > 0.25 threshold).
-
-    Mechanics mirror qa_psi_price_drift exactly (fixed-width bins over
-    exact-binary edges, Laplace +1 smoothing so empty bins never hit
-    ln(0), round-6 terms summed as exact DECIMAL): per cohort the
-    top-5 drifted dims by (psi6 DESC, dim ASC). Both decisions are
-    in-hash — a drifted bin edge, a smoothing slip, a wrong cohort
-    split, or a rank tie-break error shifts (cohort, rnk, dim, psi6,
-    drifted).
-
-    Scale: ONE corpus pass (posexplode rides the scan), one
-    (cohort, dim, bin) grouped count — map-side combinable — against a
-    literal 2 x 64 x 8 grid; everything downstream is grid-sized.
-    At 10^9 vectors this is the cheapest whole-distribution monitor
-    that exists. Reference analogue: none (beyond-reference
-    LLM-pipeline tier)."""
-    vecs = _t(spark, sf_dir, "embeddings").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("v")
-    )
-    ref = vecs.filter(F.col("vec_id") < IVFPQ_APPEND_BASE)
-    new = vecs.filter(F.col("vec_id") >= IVFPQ_APPEND_BASE)
-    shifted = new.select(
-        "vec_id",
-        F.expr(
-            "transform(v, x -> x * CAST('0.05' AS DOUBLE)"
-            " + CAST('1.0' AS DOUBLE))"
-        ).alias("v"),
-    )
-    cand = new.select(F.lit("new_iid").alias("cohort"), "v").unionAll(
-        shifted.select(F.lit("new_shifted").alias("cohort"), "v")
-    )
-
-    def _bin(col: str = "val") -> F.Column:
-        return F.least(
-            F.greatest(
-                F.floor(
-                    (F.col(col) + F.lit(EMB_PSI_GRID_SPAN / 2))
-                    / F.lit(EMB_PSI_BIN_WIDTH)
-                ).cast("bigint"),
-                F.lit(0).cast("bigint"),
-            ),
-            F.lit(EMB_PSI_BINS - 1).cast("bigint"),
-        )
-
-    refx = ref.select(F.posexplode("v").alias("dim", "val"))
-    rc = refx.select("dim", _bin().alias("bin")).groupBy("dim", "bin").agg(
-        F.count("*").alias("ca")
-    )
-    candx = cand.select("cohort", F.posexplode("v").alias("dim", "val"))
-    cc = (
-        candx.select("cohort", "dim", _bin().alias("bin"))
-        .groupBy("cohort", "dim", "bin")
-        .agg(F.count("*").alias("cb"))
-    )
-    cohorts = spark.createDataFrame(
-        [("new_iid",), ("new_shifted",)], "cohort string"
-    )
-    grid = (
-        cohorts.crossJoin(
-            spark.range(EMB_DIM).select(F.col("id").alias("dim"))
-        ).crossJoin(
-            spark.range(EMB_PSI_BINS).select(F.col("id").alias("bin"))
-        )
-    )
-    wide = (
-        grid.join(F.broadcast(rc), ["dim", "bin"], "left")
-        .join(F.broadcast(cc), ["cohort", "dim", "bin"], "left")
-        .select(
-            "cohort",
-            "dim",
-            "bin",
-            F.coalesce("ca", F.lit(0)).alias("ca"),
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-    )
-    tot = wide.groupBy("cohort", "dim").agg(
-        F.sum("ca").alias("na"), F.sum("cb").alias("nb")
-    )
-    pq = wide.join(F.broadcast(tot), ["cohort", "dim"]).select(
-        "cohort",
-        "dim",
-        ((F.col("ca") + F.lit(1)).cast("double")
-         / (F.col("na") + F.lit(EMB_PSI_BINS)).cast("double")).alias("p"),
-        ((F.col("cb") + F.lit(1)).cast("double")
-         / (F.col("nb") + F.lit(EMB_PSI_BINS)).cast("double")).alias("q"),
-    )
-    contrib = pq.select(
-        "cohort",
-        "dim",
-        F.round(
-            (F.col("p") - F.col("q")) * F.log(F.col("p") / F.col("q")), 6
-        )
-        .cast("decimal(18,6)")
-        .alias("x"),
-    )
-    psi = contrib.groupBy("cohort", "dim").agg(
-        F.round(F.sum("x").cast("double"), 6).alias("psi6")
-    )
-    w = Window.partitionBy("cohort").orderBy(F.desc("psi6"), F.asc("dim"))
-    return (
-        psi.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select(
-            "cohort",
-            F.col("rnk").cast("int").alias("rnk"),
-            F.col("dim").cast("int").alias("dim"),
-            "psi6",
-            (F.col("psi6") > F.expr("CAST('0.25' AS DOUBLE)")).alias(
-                "drifted"
-            ),
-        )
-        .orderBy("cohort", "rnk")
-    )
-
-
-@query(
-    "st_psi_embedding_drift",
-    # Shares qa_psi_embedding_drift's oracle STRING VERBATIM: each
-    # cohort arrives in exactly one microbatch and PSI is per-cohort,
-    # so the union of per-batch reports must equal the batch replay
-    # row-for-row (stream == batch, the st_ivfpq_monitor discipline).
-    _sql_psi_embedding(),
-    # Authored r14 AFTER the flip commit (the landing-checklist
-    # discipline): queued in NEXT_QUEUE for the r15 surface.
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
-)
-def st_psi_embedding_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The per-dimension PSI monitor LIFTED TO INGEST (VERDICT r13 ask
-    #5; streaming.stream.run_psi_embedding_stream) — the composition
-    of the two proven harnesses the ask names: st_ivfpq_monitor's
-    foreachBatch monitor shape and qa_psi_embedding_drift's fixed-bin
-    Laplace-smoothed PSI math. The reference per-(dim, bin) histogram
-    of the base corpus (vec_id < operators.similarity.
-    IVFPQ_APPEND_BASE) is computed once and PUBLISHED as a parquet
-    table; each ARRIVING microbatch (two genuine microbatches,
-    maxFilesPerTrigger=1: the iid remainder — must NOT flag — and the
-    x*0.05+1 plant — MUST flag) is binned, counted, and PSI-scored
-    against the READ-BACK published grid, emitting its cohort's top-5
-    drifted dims into an exactly-once parquet sink.
-
-    The oracle is the batch entry's VERBATIM: a dropped or doubled
-    microbatch, cross-batch contamination, a lossy reference publish,
-    or any drift in the bin edges / smoothing / DECIMAL term sum /
-    rank tie-break inside EITHER batch changes (cohort, rnk, dim,
-    psi6, drifted) and fails the hash. At 100 TB: one map-side-
-    combinable pass per arriving batch against a broadcast
-    literal-sized grid — the whole-distribution companion to
-    st_ivfpq_monitor's quantizer-fit guard at the same standing cost,
-    and the streaming half of the monitor -> retrain loop. Reference
-    analogue: none (beyond-reference LLM-pipeline tier)."""
-    from ..streaming import stream as ST
-
-    return ST.run_psi_embedding_stream(
-        spark,
-        sf_dir,
-        base=IVFPQ_APPEND_BASE,
-        n_dims=EMB_DIM,
-        n_bins=EMB_PSI_BINS,
-        grid_span=EMB_PSI_GRID_SPAN,
     )

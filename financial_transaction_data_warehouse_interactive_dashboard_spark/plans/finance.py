@@ -1814,17 +1814,16 @@ def a28_customer_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABULAR k-means — customer segmentation by (order frequency,
     total spend) into {KM_K} clusters, {KM_ITER} Lloyd iterations from
     deterministic seeds (the {KM_K} smallest custkeys' feature points):
-    the classic warehouse clustering panel, on scalar features where
-    the IVF tier's Lloyd (operators.similarity) runs on embedding
-    vectors. Raw features, deliberately unnormalized (spend dominates
+    the classic warehouse clustering panel, on scalar features. Raw
+    features, deliberately unnormalized (spend dominates
     the metric; a27/a16 cover scaled views) — what's under test is the
     ITERATION machinery on tabular data.
 
     Determinism: centroid means are exact decimal sums cast double
     (order-independent); distances are identical double expressions
     with a rounded-distance + cluster-id total order on the argmin; the
-    oracle unrolls assignment/recompute rounds as CTEs (the
-    _sql_ivf_kmeans pattern on named scalar columns). Spend stays in
+    oracle unrolls assignment/recompute rounds as CTEs, one block per
+    Lloyd round. Spend stays in
     integer CENTS until the final display division.
 
     Scale: per-customer aggregate (the corpus shuffle), then per round

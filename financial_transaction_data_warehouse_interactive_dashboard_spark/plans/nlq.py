@@ -8,8 +8,8 @@ parameterized, tested queries, (2) a SQL surface over registered views,
 and (3) a routing hook an NL layer can target. This module provides the
 hook with a deterministic keyword router (no network, no codegen, fully
 testable); an LLM-backed router can replace `route` without touching
-anything downstream, and free-form SQL from such a layer runs through
-`run_sql` against the same registered views.
+anything downstream, and free-form read-only SQL from such a layer runs
+through `run_sql` against the same registered views.
 
 Coverage policy: ROUTES and NO_ROUTE partition the registry exactly —
 every NL-plausible entry is routed; operator-shape parity entries and
@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import re
 
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
 from ..sources.registry import register_views
@@ -100,8 +101,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "mm_wav_features": ("audio", "wav", "waveform", "rms", "loudness"),
     "mm_bmp_pixels": ("image", "pixels", "brightness", "bmp", "decode"),
     "mm_ahash_clusters": ("ahash", "perceptual", "images", "visually", "identical"),
-    "wh_ivfpq_publish": ("publish", "published", "persisted", "serve", "deployed"),
-    "wh_ivfpq_append": ("append", "appended", "incremental", "freshness", "batch"),
     "mm_avi_frames": ("video", "frames", "avi", "sample", "container"),
     "ev_attribution_first_touch": ("first", "earliest", "touch", "attribution", "origin"),
     "tx_bigram_logprob": ("bigram", "coherence", "transitions", "fluent", "interpolated"),
@@ -169,8 +168,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "a29_cohort_ltv": ("ltv", "lifetime", "value", "cumulative", "cohort"),
     "wh_time_travel": ("travel", "version", "versions", "rollback", "roll", "earlier", "snapshot"),
     "sim_embedding_covariance": ("covariance", "correlated", "whitening", "health", "dimensions"),
-    "sim_ann_pq_adc": ("quantization", "compressed", "compression", "pq", "codes"),
-    "sim_ann_ivf_pq": ("ivfpq", "faiss", "billion", "combined", "adc"),
     "sim_random_projection": ("projection", "project", "dimensionality", "reduce", "johnson"),
     "qa_chi_square_segment_status": ("independence", "independent", "chisquare", "chi", "association", "status"),
     "qa_psi_price_drift": ("drift", "drifted", "drifting", "psi", "stability", "population", "distribution"),
@@ -179,14 +176,11 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "qa_fdr_bh_segments": ("fdr", "benjamini", "hochberg", "multiple", "corrected"),
     # Round-10 batch (VERDICT r9 asks #3-#6).
     "qa_fdr_bh_spike_in": ("spike", "spikein", "calibration", "planted", "controls"),
-    "sim_ann_ivfadc_residual": ("residual", "residuals", "ivfadc", "fidelity", "compression"),
     "mm_ahash_neardups": ("neardup", "neardups", "perturbed", "reencoded", "flipped"),
     "tx_bpe_train_apply": ("retokenize", "retokenized", "applying", "trained", "tokenization"),
     "tx_bpe_fertility": ("fertility", "fertile", "efficiency", "multilingual", "coverage"),
-    "sim_ivfpq_drift": ("stale", "retrain", "monitor", "drifted", "occupancy"),
     "st_bpe_tokenize": ("tokenizing", "ingest", "arriving", "land", "landing"),
     # Round-11 batch (VERDICT r10 asks #2/#4/#5).
-    "wh_ivfpq_retrain": ("retrained", "retraining", "republish", "restore", "restored"),
     "qa_fdr_storey_spike_in": ("storey", "adaptive", "qvalue", "pi0", "null", "fraction"),
     "sim_pca_power": ("pca", "principal", "component", "eigenvector", "whitening"),
     "tpch_q1_pricing_summary": ("pricing", "lineitem", "returnflag", "charge", "shipped"),
@@ -225,20 +219,13 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "a35_survival_km": ("survival", "churn", "churned", "kaplan", "meier", "censored"),
     "tx_curriculum_order": ("curriculum", "ordering", "easy", "hard", "difficulty", "training", "schedule"),
     "wh_orphan_audit": ("orphans", "orphan", "referential", "foreign", "broken", "keys"),
-    # Round-15 batch (pipeline-fusion tier).
-    "pl_dedup_before_index": ("dedup", "deduplicate", "canonical", "before", "indexing", "pipeline"),
-    "pl_hybrid_rerank": ("rerank", "reranker", "hybrid", "lexical", "blend", "second", "stage"),
+    # Round-15 batch.
     "tpch_q7_volume_shipping": ("shipping", "volume", "between", "nations", "bilateral", "trade"),
     "tpch_q8_market_share": ("market", "share", "national", "promo", "america"),
     "tpch_q9_product_profit": ("profit", "product", "line", "nation", "yearly"),
-    "st_canonical_serve": ("serve", "serving", "online", "queries", "deduplicated"),
-    "wh_canonical_publish": ("store", "stored", "curated", "index", "warehouse"),
-    "pl_incremental_curate": ("arriving", "batch", "curate", "incrementally", "freshness", "loop"),
     # Round-16 batch.
     "tpch_q17_small_qty_revenue": ("small", "quantity", "forgone", "lost", "below", "fifth"),
-    "pl_retrain_on_drift": ("react", "recover", "reseed", "adaptive", "detected", "automatically"),
     "tpch_q18_large_volume_customer": ("biggest", "largest", "volume", "bulk", "customers", "placed"),
-    "pl_learned_rerank": ("learned", "weighted", "idf", "scoring", "weights", "informative"),
     "tpch_q22_dormant_rich_customers": ("dormant", "inactive", "wealthy", "balance", "havent", "lapsed"),
     # Round-16 suite-completion batch (the remaining eleven TPC-H shapes).
     "tpch_q2_min_cost_supplier": ("lowest", "cost", "offering", "minimum", "sourcing"),
@@ -284,21 +271,6 @@ NO_ROUTE: frozenset[str] = frozenset({
     "tx_bpe_apply_arrow",         # tx_bpe_apply is the routed face (twin)
     "tx_bpe_apply64",             # tx_bpe_apply is the routed face (depth twin)
     "st_bpe_tokenize_learned",    # tx_bpe_train_apply is the routed face (stream twin)
-    "st_ivfpq_monitor",           # sim_ivfpq_drift is the routed face (stream twin)
-    "wh_ivfpq_compact",           # wh_compaction is the routed face (layout twin)
-    "sim_ann_pq256",              # sim_ann_ivf_pq is the routed face (256-code production twin)
-    "sim_ann_ivfpq256",           # sim_ann_ivf_pq is the routed face (256-code + probe twin)
-    "wh_ivfpq256_publish",        # wh_ivfpq_publish is the routed face (256-code layout twin)
-    "st_ivfpq256_serve",          # sim_ann_ivf_pq is the routed face (stream-serve twin)
-    "sim_ann_pq256_rotated",      # sim_ann_ivf_pq is the routed face (rotated-corpus twin)
-    "sim_ann_opq256",             # sim_ann_ivf_pq is the routed face (rotated-trained-books twin)
-    "wh_ivfpq256_append",         # wh_ivfpq_append is the routed face (256-code layout twin)
-    "st_psi_embedding_drift",     # qa_psi_price_drift is the routed face (ingest twin of the embedding PSI)
-    "wh_ivfpq256_compact",        # wh_compaction is the routed face (256-code layout twin)
-    "wh_ivfpq256_retrain",        # wh_ivfpq_retrain is the routed face (256-code twin)
-    "wh_opq256_publish",          # wh_ivfpq_publish is the routed face (stored-OPQ twin)
-    "st_opq256_serve",            # sim_ann_ivf_pq is the routed face (OPQ stream-serve twin)
-    "qa_psi_embedding_drift",     # qa_psi_price_drift is the routed face (embedding-domain twin)
     "sim_pca_deflate",            # sim_pca_power is the routed face (top-k deflation variant)
     "st_sessionize_stateful",     # st_sessionize is the routed face
     "st_tumbling_hourly",         # ev_tumbling_hourly is the routed face
@@ -329,9 +301,20 @@ def answer(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    """Free-form SQL surface: register the warehouse views, run the text.
-    This is the sanctioned target for an LLM NL->SQL layer — generated SQL
-    executes on the same governed views as everything else, instead of
-    exec-ing generated host code like the reference does."""
+    """Free-form, read-only SQL surface over the warehouse views.
+
+    The text must be ONE query (``SELECT``, ``WITH``, ``VALUES``,
+    ``TABLE t``, set operations). Spark's own query-only parser checks it
+    before any view is registered, so a command or a write (DDL, DML,
+    ``SET``, ``CACHE``, ``ADD JAR``, ``EXPLAIN``, a multi-statement
+    script) raises ``ValueError`` without starting a Spark job. This is
+    the sanctioned target for an LLM NL->SQL layer, instead of exec-ing
+    generated host code like the reference does."""
+    try:
+        spark._jsparkSession.sessionState().sqlParser().parseQuery(sql)
+    except ParseException as e:
+        raise ValueError(
+            f"run_sql accepts only a single read-only query; rejected {sql!r}"
+        ) from e
     register_views(spark, sf_dir)
     return spark.sql(sql)

@@ -23,7 +23,7 @@ SURFACE_SIZE = 50
 
 #: The round whose rotation is in flight (CORRECTNESS_r{CURRENT_ROUND}
 #: does not exist yet when this round's code is committed).
-CURRENT_ROUND = 16
+CURRENT_ROUND = 18
 
 #: Per-round promotions/demotions. Rounds 1-4 predate the protocol: the
 #: surface was the initial 50 picks with ad-hoc swaps recorded only in
@@ -495,7 +495,45 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
             "mm_avi_frames", "mm_bmp_pixels",
         ),
     },
+    18: {
+        # The product-quantization search tier (the PQ/IVF-PQ/OPQ sim_*
+        # entries, its stream and warehouse lifecycle, the pl_* pipeline
+        # tier built on it and the embedding-PSI monitors; RETIRED
+        # below) was deleted from the registry, taking six driver seats
+        # with it. NO first-timers: the six seats refill as REFRESH
+        # promotions, the head of REFRESH_QUEUE once the retired names
+        # are dropped (ev_transition_matrix, sim_embedding_covariance,
+        # sim_hybrid_rrf, sim_ndcg_at_k, sim_random_projection,
+        # tx_bigram_logprob) — deliberately NOT listed as "in".
+        "in": (),
+        "out": (
+            # deleted with the PQ search tier (not demoted: these
+            # names are no longer registered)
+            "sim_ann_pq_adc", "pl_dedup_before_index", "pl_hybrid_rerank",
+            "st_canonical_serve", "wh_canonical_publish",
+            "pl_incremental_curate",
+        ),
+    },
 }
+
+#: Registry entries deleted with the product-quantization search tier
+#: (PQ / IVF-PQ / OPQ search and its warehouse and stream lifecycle, the
+#: pipeline-fusion tier built on it, and the embedding-PSI monitors).
+#: The history above still names them; they may no longer appear on the
+#: surface or in any queue.
+RETIRED: frozenset[str] = frozenset({
+    "pl_dedup_before_index", "pl_hybrid_rerank",
+    "pl_incremental_curate", "pl_learned_rerank", "pl_retrain_on_drift",
+    "qa_psi_embedding_drift", "sim_ann_ivf_pq",
+    "sim_ann_ivfadc_residual", "sim_ann_ivfpq256", "sim_ann_opq256",
+    "sim_ann_pq256", "sim_ann_pq256_rotated", "sim_ann_pq_adc",
+    "sim_ivfpq_drift", "st_canonical_serve", "st_ivfpq256_serve",
+    "st_ivfpq_monitor", "st_opq256_serve", "st_psi_embedding_drift",
+    "wh_canonical_publish", "wh_ivfpq256_append", "wh_ivfpq256_compact",
+    "wh_ivfpq256_publish", "wh_ivfpq256_retrain", "wh_ivfpq_append",
+    "wh_ivfpq_compact", "wh_ivfpq_publish", "wh_ivfpq_retrain",
+    "wh_opq256_publish",
+})
 
 #: Re-promotions: entries that already held a driver row but were
 #: swapped back in because their IMPLEMENTATION changed enough that the
@@ -524,9 +562,7 @@ NEXT_QUEUE: tuple[str, ...] = (
     # after a green r16 — 229/229 driver-row coverage. Operators
     # authored after the r16 flip queue here for r17:
     "tpch_q17_small_qty_revenue",  # the correlated SCALAR subquery decorrelated (VERDICT r15 ask #4): per-part avg-quantity aggregate-then-rejoin, exact integer predicate 5*cnt*qty < sum_qty (authored r16 post-flip, three-scale verified)
-    "pl_retrain_on_drift",  # the pl tier's deliberately-chosen lifecycle edge (VERDICT r15 ask #8 option a): curated monitor -> data-driven append/retrain decision -> re-seeded Lloyd recovery, 4-row phase x cohort proof (authored r16 post-flip, three-scale verified)
     "tpch_q18_large_volume_customer",  # completes the subquery matrix: aggregate-IN (HAVING) semi-join next to EXISTS/NOT-IN/correlated-scalar; BIGINT-exact threshold, top-100 with orderkey tie-break (authored r16 post-flip, three-scale verified)
-    "pl_learned_rerank",  # the rerank slot's LEARNED broadcast scoring table (ask #8 option b as ask #3's measured follow-through): corpus-trained round-6 IDF weights, decimal-exact pair sums, plan shape verbatim (authored r16 post-flip, three-scale verified)
     "tpch_q22_dormant_rich_customers",  # the last subquery-bearing TPC-H form: uncorrelated scalar threshold (decimal-exact bal*cnt > sum) COMPOSED with NOT EXISTS (broadcast anti-join); recent-year deviation documented (authored r16 post-flip, three-scale verified)
     # --- r16 suite completion: the remaining eleven spec queries, taking
     # --- the registry to ALL 22 TPC-H shapes (each authored r16
@@ -577,16 +613,15 @@ NEXT_QUEUE: tuple[str, ...] = (
 REFRESH_QUEUE: tuple[str, ...] = (
     # The round-16 flip consumed the previous queue's 25-name prefix
     # (the r8-rest names through tx_stratified_sample, plus the r9
-    # vintage head through ev_top_paths); what remains is the tail of
-    # the r9 vintage followed by the full r10 and r12 vintages
-    # (alphabetical within a vintage = the ties-by-name rule).
-    # Recomputed this round from the committed CORRECTNESS files, as
-    # every round.
+    # vintage head through ev_top_paths). Round 18 dropped the
+    # RETIRED search-tier names and promoted the next six
+    # (ev_transition_matrix through tx_bigram_logprob) into the seats
+    # the retired entries left; what remains is the tail of the r9
+    # vintage followed by the full r10 and r12 vintages (alphabetical
+    # within a vintage = the ties-by-name rule).
     # r9 rest
-    "ev_transition_matrix", "sim_ann_ivf_pq", "sim_embedding_covariance",
-    "sim_hybrid_rrf", "sim_ndcg_at_k", "sim_random_projection",
-    "tx_bigram_logprob", "tx_bpe_apply", "tx_bpe_pack",
-    "tx_chunk_documents", "tx_heavy_collocations", "tx_mixture_weights",
+    "tx_bpe_apply", "tx_bpe_pack", "tx_chunk_documents",
+    "tx_heavy_collocations", "tx_mixture_weights",
     "tx_negative_sampling", "tx_pack_sequences", "tx_repetition_ratio",
     "tx_unigram_logprob", "tx_weighted_sample", "w6_user_day_gapfill",
     # r10 vintage
@@ -609,10 +644,10 @@ REFRESH_QUEUE: tuple[str, ...] = (
     "dd_minhash_lsh", "dd_neardup_components", "dd_ngram_jaccard",
     "ev_asof_purchase", "ev_funnel_vcp", "ev_rolling_7d",
     "mm_features_resize", "q2_top_priorities_q4", "q3_quarter_ranking",
-    "sim_ann_ivfadc_residual", "sim_ivfpq_drift", "sim_topk_bruteforce",
+    "sim_topk_bruteforce",
     "st_bpe_tokenize", "st_bpe_tokenize_learned", "st_sessionize_stateful",
     "st_tumbling_hourly", "tx_bpe_apply64", "tx_bpe_fertility",
-    "w4_surrogate_keys", "wh_ivfpq_append",
+    "w4_surrogate_keys",
 )
 
 #: KEEP-SET CAP POLICY (r13; VERDICT r11 ask #8 / r12 ask #6). The
@@ -643,6 +678,8 @@ REFRESH_QUEUE: tuple[str, ...] = (
 #: production-sized shape) REPLACES wh_ivfpq256_publish as the
 #: index-lifecycle seat; the raw-corpus twin — green r14/r15 — moves
 #: to the refresh pool. The set stays at the cap.
+#: r18: wh_canonical_publish was RETIRED with the PQ search tier;
+#: its seat stays empty (17 members).
 KEEP_SET_CAP = 18
 
 #: Keep-set admissions ledger (name -> round admitted). A member
@@ -663,10 +700,10 @@ KEEP_SET: tuple[str, ...] = (
     "a24_revenue_gini_scale_safe",
     "st_cdc_apply", "st_daily_actives_hll", "st_late_data",
     "st_stream_merge_rollup", "st_stream_static_enrich",
-    "wh_bloom_prune", "wh_bucketed_join", "wh_canonical_publish",
-    "wh_cdc_apply", "wh_compaction", "wh_incremental_join",
-    "wh_incremental_rollup", "wh_orphan_audit", "wh_scd2_lookup",
-    "wh_schema_evolution", "wh_time_travel", "wh_vacuum_retention",
+    "wh_bloom_prune", "wh_bucketed_join", "wh_cdc_apply",
+    "wh_compaction", "wh_incremental_join", "wh_incremental_rollup",
+    "wh_orphan_audit", "wh_scd2_lookup", "wh_schema_evolution",
+    "wh_time_travel", "wh_vacuum_retention",
 )
 
 #: LANDING CHECKLIST (r13; VERDICT r12 ask #8 — a single interrupted

@@ -110,7 +110,7 @@ def _cov_oracle() -> str:
     "sim_embedding_covariance",
     _cov_oracle(),
     # New r6 (locally pinned; r7 rotation candidate).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def sim_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population covariance of the leading 8x8 block of the embedding
@@ -201,7 +201,7 @@ def _rp_oracle() -> str:
     "sim_random_projection",
     _rp_oracle(),
     # New r6 (locally pinned; r7 rotation candidate).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def sim_random_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss Rademacher projection 64d -> 4d: each

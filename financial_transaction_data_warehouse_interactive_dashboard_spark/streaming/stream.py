@@ -1219,544 +1219,3 @@ def run_stream_tokenize_learned(
 #: test-side "genuinely >= 2 microbatches" audit (the part of the
 #: stream==batch contract a result comparison can't see).
 TOKENIZE_BATCHES: dict[str, int] = {}
-
-
-def run_ivfpq_monitor_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    train_below: int = 200,
-    new_from: int = 250,
-) -> DataFrame:
-    """The index drift monitor (sim_ivfpq_drift's fit/occupancy pass)
-    run AT INGEST — one monitor row per ARRIVING microbatch instead of
-    a nightly batch sweep, so a concentrated batch raises the retrain
-    flag the moment it lands. The frozen quantizer (seeds + one Lloyd
-    over the training slice, vec_id < ``train_below``) is computed
-    batch-side and broadcast; the stream delivers two genuinely
-    separate arriving batches (maxFilesPerTrigger=1): an iid batch (the
-    raw vectors past ``new_from``) and the planted concentrated batch
-    (the same vectors x*0.05+1 — sim_ivfpq_drift's spike-in). Each
-    microbatch flows through foreachBatch into the per-cohort monitor
-    aggregate (assign -> exact DECIMAL fit mean -> occupancy share ->
-    threshold decision from the same rounded value the row emits) and
-    is APPENDED to a parquet sink; the read-back is the returned frame,
-    so a dropped, doubled, or cross-contaminated microbatch changes the
-    row set and fails the batch oracle.
-
-    At 100 TB: the monitor is one map-side-combinable pass per arriving
-    batch against a broadcast centroid table — the cheapest possible
-    standing guard in front of wh_ivfpq_retrain's expensive action."""
-    from ..functions import portable as P
-    from ..operators.similarity import _vecs, refine_centroids
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    vecs = _vecs(spark.read.parquet(path))
-    train = vecs.filter(F.col("vec_id") < train_below)
-    seeds = train.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    )
-    frozen = refine_centroids(train, seeds).localCheckpoint(eager=True)
-
-    key = f"{path}::ivfpq-monitor"
-    if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="ftdw-stream-ivfmon-")
-        new = vecs.filter(F.col("vec_id") >= new_from)
-        _write_single_parquet(
-            new.select(F.lit("new_iid").alias("cohort"), "vec_id", "v"),
-            d,
-            "0-iid.parquet",
-        )
-        shifted = F.expr(
-            "transform(v, x -> x * CAST('0.05' AS DOUBLE)"
-            " + CAST('1.0' AS DOUBLE))"
-        )
-        _write_single_parquet(
-            new.select(
-                F.lit("new_shifted").alias("cohort"),
-                "vec_id",
-                shifted.alias("v"),
-            ),
-            d,
-            "1-shifted.parquet",
-        )
-        now = int(__import__("time").time())
-        for i, f in enumerate(sorted(os.listdir(d))):
-            os.utime(os.path.join(d, f), (now + i, now + i))
-        _STREAM_DIRS[key] = d
-
-    sink_key = f"{path}::ivfpq-monitor-sink"
-    if sink_key not in _SINK_DIRS:
-        _SINK_DIRS[sink_key] = (
-            tempfile.mkdtemp(prefix="ftdw-ivfmon-sink-"),
-            tempfile.mkdtemp(prefix="ftdw-ivfmon-chk-"),
-        )
-    sink_dir, chk_dir = _SINK_DIRS[sink_key]
-
-    src = (
-        spark.readStream.schema(
-            "cohort string, vec_id bigint, v array<double>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_STREAM_DIRS[key])
-    )
-
-    def monitor_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from ..operators.similarity import nearest_cell_scored
-
-        # shuffle-free nearest-cell + fit score (r16: the batch-tier
-        # monitor rewrite applied verbatim — stream == batch plans)
-        af = nearest_cell_scored(batch_df, frozen, ["cohort"]).select(
-            "cohort",
-            "cell",
-            F.col("cell_cos").cast("decimal(18,6)").alias("q"),
-        )
-        gc_ = af.groupBy("cohort", "cell").agg(
-            F.count("*").alias("nc"), F.sum("q").alias("sq")
-        )
-        out = (
-            gc_.groupBy("cohort")
-            .agg(
-                F.sum("nc").alias("n"),
-                F.sum("sq").alias("sq"),
-                F.max("nc").alias("mx"),
-            )
-            .selectExpr(
-                "cohort",
-                "CAST(n AS BIGINT) AS n",
-                "round(CAST(sq AS DOUBLE) / n, 6) AS mean_cos6",
-                "round(CAST(mx AS DOUBLE) / n, 6) AS max_share6",
-                "round(CAST(mx AS DOUBLE) / n, 6)"
-                " > CAST('0.5' AS DOUBLE) AS drifted",
-            )
-        )
-        out.write.mode("append").parquet(sink_dir)
-
-    q = (
-        src.writeStream.foreachBatch(monitor_batch)
-        .option("checkpointLocation", chk_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink_dir)
-
-
-def run_ivfpq256_serve_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    cells: DataFrame,
-    books: DataFrame,
-    inv: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-    nprobe: int = 2,
-    shortlist: int | None = None,
-    emb: DataFrame | None = None,
-    key_tag: str = "ivfpq256-serve",
-) -> DataFrame:
-    """ANN SERVE-AT-INGEST at the production index configuration
-    (st_ivfpq256_serve): queries ARRIVE as a stream (two genuinely
-    separate microbatches — maxFilesPerTrigger=1 over two files holding
-    query ids 0..n/2-1 and n/2..n-1) and each microbatch is answered by
-    the full IVF+PQ256 serve path (operators.similarity.ivfpq256_query)
-    against the passed-in index frames — the caller hands the READ-BACK
-    published tables, so this is the stored-index online-serving
-    pattern: broadcast centroid/book sidecars, partition-prunable code
-    table, stream of queries folded per batch via foreachBatch into an
-    exactly-once parquet sink.
-
-    Stream == batch is the checked contract: per-query results are
-    independent, so the union of per-batch outputs equals the
-    all-queries batch run row-for-row, and the batch oracle
-    (_sql_ivfpq256, shared VERBATIM by the registry entry) pins every
-    stage of every microbatch — a dropped/doubled batch or a
-    cross-batch contamination changes the row set and fails the hash.
-
-    At 100 TB: this is one broadcast-probe + pruned-ADC pass per
-    arriving query batch — state-free (the index IS the state, owned by
-    the warehouse), so the stream scales with query rate, not corpus
-    size."""
-    from ..operators.similarity import PQ256_SHORTLIST, _vecs, ivfpq256_query
-
-    if shortlist is None:
-        shortlist = PQ256_SHORTLIST
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    # ``emb``/``key_tag`` (r15, st_canonical_serve): the served CORPUS
-    # may be an already-curated frame (the dedup-before-index canonical
-    # corpus) instead of the raw table — queries then draw from the
-    # same curated pool (vec_id < n_queries of the survivors, the
-    # fused oracle's qv convention), and the tag keeps the per-variant
-    # stream/sink dirs separate. Defaults preserve st_ivfpq256_serve
-    # byte-for-byte.
-    if emb is None:
-        emb = spark.read.parquet(path)
-    vecs = _vecs(emb)
-
-    key = f"{path}::{key_tag}"
-    if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="ftdw-stream-annserve-")
-        qs = vecs.filter(F.col("vec_id") < n_queries)
-        half = n_queries // 2
-        _write_single_parquet(
-            qs.filter(F.col("vec_id") < half), d, "0-first.parquet"
-        )
-        _write_single_parquet(
-            qs.filter(F.col("vec_id") >= half), d, "1-second.parquet"
-        )
-        now = int(__import__("time").time())
-        for i, f in enumerate(sorted(os.listdir(d))):
-            os.utime(os.path.join(d, f), (now + i, now + i))
-        _STREAM_DIRS[key] = d
-
-    sink_key = f"{path}::{key_tag}-sink"
-    if sink_key not in _SINK_DIRS:
-        _SINK_DIRS[sink_key] = (
-            tempfile.mkdtemp(prefix="ftdw-annserve-sink-"),
-            tempfile.mkdtemp(prefix="ftdw-annserve-chk-"),
-        )
-    sink_dir, chk_dir = _SINK_DIRS[sink_key]
-
-    src = (
-        spark.readStream.schema("vec_id bigint, v array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_STREAM_DIRS[key])
-    )
-
-    def serve_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        out = ivfpq256_query(
-            emb,
-            cells,
-            books,
-            inv,
-            n_queries=n_queries,
-            k=k,
-            nprobe=nprobe,
-            shortlist=shortlist,
-            queries=batch_df,
-        )
-        out.write.mode("append").parquet(sink_dir)
-
-    q = (
-        src.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", chk_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink_dir).orderBy("query_id", "rnk")
-
-
-def run_psi_embedding_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    base: int,
-    n_dims: int,
-    n_bins: int,
-    grid_span: float,
-) -> DataFrame:
-    """The per-dimension PSI drift monitor (qa_psi_embedding_drift's
-    pass) run AT INGEST (VERDICT r13 ask #5) — one top-5-drifted-dims
-    report per ARRIVING microbatch instead of a nightly batch sweep,
-    composed from the two proven harnesses: st_ivfpq_monitor's
-    foreachBatch fit-monitor shape and qa_psi_embedding_drift's
-    fixed-bin Laplace-smoothed PSI math.
-
-    The REFERENCE histogram — per-(dim, bin) counts of the base corpus
-    (vec_id < ``base``, the index snapshot) — is computed batch-side
-    ONCE and PUBLISHED as a parquet table (the wh_ivfpq_publish sidecar
-    discipline); every microbatch monitors against the READ-BACK
-    published grid (n_dims x n_bins rows — broadcast-sized at any
-    corpus size), so a lossy publish or a stale-reference drift fails
-    the oracle hash. The stream delivers two genuinely separate
-    arriving batches (maxFilesPerTrigger=1): the iid batch (raw
-    remainder vectors — must NOT flag) and the planted concentrated
-    batch (x*0.05+1 — MUST flag; the standing spike-in discipline).
-    Each microbatch flows through foreachBatch: posexplode -> exact-
-    binary-edge bin -> (cohort, dim, bin) count -> PSI vs the published
-    reference -> per-cohort top-5 (psi6 DESC, dim ASC) -> APPEND to an
-    exactly-once parquet sink. Each cohort arrives in exactly one
-    microbatch and PSI is per-cohort, so the union of per-batch
-    reports equals the batch run row-for-row — stream == batch under
-    qa_psi_embedding_drift's oracle VERBATIM.
-
-    At 100 TB: one map-side-combinable pass per arriving batch against
-    a broadcast literal-sized grid — the whole-distribution companion
-    to st_ivfpq_monitor's quantizer-fit guard, at the same (cheapest
-    possible) standing cost."""
-    import hashlib
-
-    from ..operators.similarity import _vecs
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    vecs = _vecs(spark.read.parquet(path))
-
-    def _bin(col: str = "val"):
-        # Width/offset DERIVED from (grid_span, n_bins) — the caller
-        # passes both from the single constant pair next to
-        # _EMB_PSI_BIN_SQL in plans/drift.py, so this histogram cannot
-        # drift from the batch entry or the shared oracle (ADVICE r14).
-        return F.least(
-            F.greatest(
-                F.floor(
-                    (F.col(col) + F.lit(grid_span / 2))
-                    / F.lit(grid_span / n_bins)
-                ).cast("bigint"),
-                F.lit(0).cast("bigint"),
-            ),
-            F.lit(n_bins - 1).cast("bigint"),
-        )
-
-    # Publish the reference histogram (full dense grid incl. empty
-    # bins, so the read-back is the complete broadcast monitor state).
-    tag = hashlib.md5(os.path.normpath(sf_dir).encode()).hexdigest()[:8]
-    ref_table = f"psi_ref_hist_{tag}"
-    refx = (
-        vecs.filter(F.col("vec_id") < base)
-        .select(F.posexplode("v").alias("dim", "val"))
-        .select("dim", _bin().alias("bin"))
-        .groupBy("dim", "bin")
-        .agg(F.count("*").alias("ca"))
-    )
-    ref_grid = (
-        spark.range(n_dims)
-        .select(F.col("id").alias("dim"))
-        .crossJoin(
-            spark.range(n_bins).select(F.col("id").alias("bin"))
-        )
-        .join(F.broadcast(refx), ["dim", "bin"], "left")
-        .select(
-            "dim", "bin", F.coalesce("ca", F.lit(0)).alias("ca")
-        )
-    )
-    from ..sources.warehouse import _drop_stale
-
-    # _drop_stale, not bare DROP TABLE: the shared warehouse dir
-    # outlives the session, and a location orphaned by a previous
-    # process fails saveAsTable with LOCATION_ALREADY_EXISTS even in
-    # overwrite mode (bit the r14 bench, whose fresh process followed
-    # a sweep process).
-    _drop_stale(spark, ref_table)
-    ref_grid.write.mode("overwrite").format("parquet").saveAsTable(
-        ref_table
-    )
-    ref = spark.table(ref_table)
-
-    key = f"{path}::psi-monitor"
-    if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="ftdw-stream-psimon-")
-        new = vecs.filter(F.col("vec_id") >= base)
-        _write_single_parquet(
-            new.select(F.lit("new_iid").alias("cohort"), "vec_id", "v"),
-            d,
-            "0-iid.parquet",
-        )
-        shifted = F.expr(
-            "transform(v, x -> x * CAST('0.05' AS DOUBLE)"
-            " + CAST('1.0' AS DOUBLE))"
-        )
-        _write_single_parquet(
-            new.select(
-                F.lit("new_shifted").alias("cohort"),
-                "vec_id",
-                shifted.alias("v"),
-            ),
-            d,
-            "1-shifted.parquet",
-        )
-        now = int(__import__("time").time())
-        for i, f in enumerate(sorted(os.listdir(d))):
-            os.utime(os.path.join(d, f), (now + i, now + i))
-        _STREAM_DIRS[key] = d
-
-    sink_key = f"{path}::psi-monitor-sink"
-    if sink_key not in _SINK_DIRS:
-        _SINK_DIRS[sink_key] = (
-            tempfile.mkdtemp(prefix="ftdw-psimon-sink-"),
-            tempfile.mkdtemp(prefix="ftdw-psimon-chk-"),
-        )
-    sink_dir, chk_dir = _SINK_DIRS[sink_key]
-
-    src = (
-        spark.readStream.schema(
-            "cohort string, vec_id bigint, v array<double>"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_STREAM_DIRS[key])
-    )
-
-    def psi_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        from pyspark.sql.window import Window as W_
-
-        cc = (
-            batch_df.select(
-                "cohort", F.posexplode("v").alias("dim", "val")
-            )
-            .select("cohort", "dim", _bin().alias("bin"))
-            .groupBy("cohort", "dim", "bin")
-            .agg(F.count("*").alias("cb"))
-        )
-        grid = (
-            batch_df.select("cohort")
-            .distinct()
-            .crossJoin(F.broadcast(ref))
-        )
-        wide = grid.join(
-            F.broadcast(cc), ["cohort", "dim", "bin"], "left"
-        ).select(
-            "cohort",
-            "dim",
-            "bin",
-            "ca",
-            F.coalesce("cb", F.lit(0)).alias("cb"),
-        )
-        tot = wide.groupBy("cohort", "dim").agg(
-            F.sum("ca").alias("na"), F.sum("cb").alias("nb")
-        )
-        pq_ = wide.join(F.broadcast(tot), ["cohort", "dim"]).select(
-            "cohort",
-            "dim",
-            (
-                (F.col("ca") + F.lit(1)).cast("double")
-                / (F.col("na") + F.lit(n_bins)).cast("double")
-            ).alias("p"),
-            (
-                (F.col("cb") + F.lit(1)).cast("double")
-                / (F.col("nb") + F.lit(n_bins)).cast("double")
-            ).alias("q"),
-        )
-        contrib = pq_.select(
-            "cohort",
-            "dim",
-            F.round(
-                (F.col("p") - F.col("q"))
-                * F.log(F.col("p") / F.col("q")),
-                6,
-            )
-            .cast("decimal(18,6)")
-            .alias("x"),
-        )
-        psi = contrib.groupBy("cohort", "dim").agg(
-            F.round(F.sum("x").cast("double"), 6).alias("psi6")
-        )
-        w = W_.partitionBy("cohort").orderBy(
-            F.desc("psi6"), F.asc("dim")
-        )
-        out = (
-            psi.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= 5)
-            .select(
-                "cohort",
-                F.col("rnk").cast("int").alias("rnk"),
-                F.col("dim").cast("int").alias("dim"),
-                "psi6",
-                (
-                    F.col("psi6") > F.expr("CAST('0.25' AS DOUBLE)")
-                ).alias("drifted"),
-            )
-        )
-        out.write.mode("append").parquet(sink_dir)
-
-    q = (
-        src.writeStream.foreachBatch(psi_batch)
-        .option("checkpointLocation", chk_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink_dir).orderBy("cohort", "rnk")
-
-
-def run_opq256_serve_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    rotated_emb: DataFrame,
-    rot: DataFrame,
-    books: DataFrame,
-    codes: DataFrame,
-    n_queries: int = 8,
-    k: int = 5,
-) -> DataFrame:
-    """OPQ SERVE-AT-INGEST (st_opq256_serve): queries ARRIVE as a
-    stream of RAW (unrotated) vectors — two genuinely separate
-    microbatches, maxFilesPerTrigger=1 over two files holding query
-    ids 0..n/2-1 and n/2..n-1 — and each microbatch is first ROTATED
-    by the caller's rot frame (the STORED matrix, read back from the
-    published ``_rot`` sidecar: the OPQ server's first move on every
-    arriving query), then answered by the full-scan ADC + exact
-    re-rank path (operators.similarity.topk_ann_pq256) against the
-    caller's rotated corpus / stored books / stored codes, into an
-    exactly-once parquet sink.
-
-    Stream == batch is the checked contract: rotation is per-row and
-    per-query results are independent, so the union of per-batch
-    outputs equals the all-queries batch run row-for-row, and the
-    batch oracle (_sql_opq256, shared VERBATIM by the registry entry)
-    pins every stage of every microbatch — a dropped/doubled batch, a
-    cross-batch contamination, or a stale rotation sidecar changes
-    the row set and fails the hash.
-
-    At 100 TB: one broadcast 64x64 rotate + one compressed ADC scan
-    per arriving query batch — state-free (the published index IS the
-    state), so the stream scales with query rate, not corpus size."""
-    from ..operators.similarity import _vecs, rotate_corpus, topk_ann_pq256
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    vecs = _vecs(spark.read.parquet(path))
-
-    key = f"{path}::opq256-serve"
-    if key not in _STREAM_DIRS:
-        d = tempfile.mkdtemp(prefix="ftdw-stream-opqserve-")
-        qs = vecs.filter(F.col("vec_id") < n_queries)
-        half = n_queries // 2
-        _write_single_parquet(
-            qs.filter(F.col("vec_id") < half), d, "0-first.parquet"
-        )
-        _write_single_parquet(
-            qs.filter(F.col("vec_id") >= half), d, "1-second.parquet"
-        )
-        now = int(__import__("time").time())
-        for i, f in enumerate(sorted(os.listdir(d))):
-            os.utime(os.path.join(d, f), (now + i, now + i))
-        _STREAM_DIRS[key] = d
-
-    sink_key = f"{path}::opq256-serve-sink"
-    if sink_key not in _SINK_DIRS:
-        _SINK_DIRS[sink_key] = (
-            tempfile.mkdtemp(prefix="ftdw-opqserve-sink-"),
-            tempfile.mkdtemp(prefix="ftdw-opqserve-chk-"),
-        )
-    sink_dir, chk_dir = _SINK_DIRS[sink_key]
-
-    src = (
-        spark.readStream.schema("vec_id bigint, v array<double>")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(_STREAM_DIRS[key])
-    )
-
-    def serve_batch(batch_df: DataFrame, epoch_id: int) -> None:
-        rq = _vecs(
-            rotate_corpus(
-                batch_df.select(
-                    "vec_id", F.col("v").alias("embedding")
-                ),
-                rot,
-            )
-        )
-        out = topk_ann_pq256(
-            rotated_emb,
-            n_queries=n_queries,
-            k=k,
-            books=books,
-            codes=codes,
-            queries=rq,
-        )
-        out.write.mode("append").parquet(sink_dir)
-
-    q = (
-        src.writeStream.foreachBatch(serve_batch)
-        .option("checkpointLocation", chk_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(sink_dir).orderBy("query_id", "rnk")

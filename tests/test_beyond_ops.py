@@ -1436,9 +1436,6 @@ def test_nlq_routing(spark):
     assert nlq.route("ndcg graded ranking quality of the index") == (
         "sim_ndcg_at_k"
     )
-    assert nlq.route("faiss style ivfpq combined index") == (
-        "sim_ann_ivf_pq"
-    )
     assert nlq.route("bpe tokenizer merges subword") == "tx_bpe_apply"
     assert nlq.route("packed tokenized context budgets") == "tx_bpe_pack"
     assert nlq.route("learn the vocab merges from the corpus") == (
@@ -1449,9 +1446,6 @@ def test_nlq_routing(spark):
     )
     assert nlq.route("find visually identical images perceptual") == (
         "mm_ahash_clusters"
-    )
-    assert nlq.route("publish the persisted vector index for serving") == (
-        "wh_ivfpq_publish"
     )
     assert nlq.route("detect communities by label propagation") == (
         "a26_brand_communities"
@@ -1881,69 +1875,6 @@ def test_incremental_dedup_folds_to_batch_operator(spark):
     # survivor's count (batch-1 'alpha' stays at 1 despite 2 replays).
     assert survivors[10] == 2
     assert survivors[0] == 1
-
-
-def test_pq_adc_recall_beats_chance(spark):
-    """PQ/ADC is approximate, but 8x8 codebooks on 64d must land far
-    above chance: mean recall@5 vs exact cosine top-5 >= 0.2 (measured
-    0.35 at sf0.001; chance is 5/499 ~ 0.01). A broken codebook or a
-    garbled ADC sum collapses this to ~chance."""
-    from collections import defaultdict
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    pq, bf = defaultdict(set), defaultdict(set)
-    for r in R["sim_ann_pq_adc"].spark(spark, SF_SMOKE).collect():
-        pq[r["query_id"]].add(r["neighbor_id"])
-    for r in R["sim_topk_bruteforce"].spark(spark, SF_SMOKE).collect():
-        bf[r["query_id"]].add(r["neighbor_id"])
-    recalls = [len(pq[q] & bf[q]) / 5 for q in sorted(bf)]
-    assert sum(recalls) / len(recalls) >= 0.2, recalls
-
-
-def test_ivf_pq_recall_column_is_self_consistent(spark):
-    """sim_ann_ivf_pq carries its own recall@5 measurement; that column
-    must equal the recall recomputed independently from the exact
-    brute-force frontier, every query must emit at most 5 neighbors
-    with no self-matches, and mean recall must beat chance (~0.01) —
-    a broken probe (wrong cells) or a garbled LUT join collapses it."""
-    from collections import defaultdict
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-
-    rows = R["sim_ann_ivf_pq"].spark(spark, SF_SMOKE).collect()
-    bf = defaultdict(set)
-    # Exact top-5 (the entry's denominator) — the registry bruteforce
-    # entry returns top-10, which is the wrong ground-truth set here.
-    exact5 = S.topk_bruteforce(
-        load_table(spark, SF_SMOKE, "embeddings"), n_queries=8, k=5
-    )
-    for r in exact5.collect():
-        bf[r["query_id"]].add(r["neighbor_id"])
-    by_q = defaultdict(list)
-    for r in rows:
-        assert r["neighbor_id"] != r["query_id"]
-        by_q[r["query_id"]].append(r)
-    recalls = []
-    for q, rs in by_q.items():
-        assert len(rs) <= 5
-        n_hits = len({r["neighbor_id"] for r in rs} & bf[q])
-        for r in rs:
-            assert r["n_hits"] == n_hits, (q, r["n_hits"], n_hits)
-            assert r["recall_at_5"] == round(n_hits / 5, 6)
-        recalls.append(n_hits / 5)
-    assert sum(recalls) / len(recalls) >= 0.2, recalls
 
 
 def test_ahash_clusters_planted_duplicates(spark):
@@ -2538,67 +2469,6 @@ def test_partial_window_convention_unified(spark):
         assert days == observed, (name, days ^ observed)
 
 
-def test_ivfadc_residual_beats_raw_recall(spark):
-    """The residual-vs-raw A/B (VERDICT r9 ask #5): with the same
-    coarse quantizer and the same PQ training budget, residual encoding
-    must recall at least as well as raw-vector encoding — the Jegou
-    IVFADC fidelity property, pinned on the fixture where it was
-    measured to hold STRICTLY at every scale. Since r11 the driver
-    entry is single-pipeline (VERDICT r10 ask #3: the raw yardstick
-    leg was bench weight re-proving a static claim), so the A/B lives
-    HERE over the two-leg operator. Also pins the driver entry's
-    recall-column self-consistency (per-query constants, <= 5
-    neighbors, no self-matches) and that the single-pipeline entry
-    reproduces the two-leg operator's residual leg exactly."""
-    from collections import defaultdict
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    ann_res, ann_raw = S.topk_ann_ivfadc_residual_vs_raw(
-        emb, n_queries=8, k=5
-    )
-    exact = {
-        (r["query_id"], r["neighbor_id"])
-        for r in S.topk_bruteforce(emb, n_queries=8, k=5).collect()
-    }
-
-    def recalls(ann) -> dict[int, float]:
-        hits: dict[int, int] = defaultdict(int)
-        for r in ann.collect():
-            if (r["query_id"], r["neighbor_id"]) in exact:
-                hits[r["query_id"]] += 1
-        return {q: hits[q] / 5 for q, _ in exact}
-
-    res, raw = recalls(ann_res), recalls(ann_raw)
-    mean = lambda d: sum(d.values()) / len(d)  # noqa: E731
-    assert mean(res) >= mean(raw), (res, raw)
-    assert mean(res) > 0  # the residual index must actually recall
-
-    rows = R["sim_ann_ivfadc_residual"].spark(spark, SF_SMOKE).collect()
-    by_q = defaultdict(list)
-    for r in rows:
-        assert r["neighbor_id"] != r["query_id"]
-        by_q[r["query_id"]].append(r)
-    for q, rs in by_q.items():
-        assert len(rs) <= 5
-        assert len({r["recall_at_5"] for r in rs}) == 1
-        assert rs[0]["recall_at_5"] == res[q], (q, rs[0], res[q])
-    # the single-pipeline entry serves the SAME frontier as the two-leg
-    # operator's residual leg
-    assert {(r["query_id"], r["neighbor_id"]) for r in rows} == {
-        (r["query_id"], r["neighbor_id"]) for r in ann_res.collect()
-    }
-
-
 def test_ahash_neardup_planted_twins_all_surface(spark):
     """mm_ahash_neardups' planted control (VERDICT r9 ask #4): every
     100th document's 1-bit-flipped twin must surface with
@@ -2725,57 +2595,6 @@ def test_pca_power_recovers_planted_dominant_direction(spark):
     assert len({r["lambda9"] for r in out}) == 1
 
 
-def test_ivfpq_compact_defragments_without_changing_rows(spark):
-    """wh_ivfpq_compact's file-level claim (the part its verbatim
-    oracle cannot see): publish + append really fragments the touched
-    cells to >= 2 files, compaction brings every cell back to exactly
-    one file, and the code table's ROWS are byte-identical across the
-    rewrite."""
-    import glob as _glob
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.beyond_similarity import (
-        IVFPQ_APPEND_BASE,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        append_ivfpq_vectors,
-        compact_partitions,
-        publish_ivfpq_layout,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < IVFPQ_APPEND_BASE)
-    new = emb.filter(F.col("vec_id") >= IVFPQ_APPEND_BASE)
-    publish_ivfpq_layout(base, "ivfpq_fragchk")
-    append_ivfpq_vectors(new, "ivfpq_fragchk")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-
-    def counts():
-        return {
-            d.rsplit("=", 1)[1]: len(_glob.glob(f"{d}/*.parquet"))
-            for d in _glob.glob(f"{wh}/ivfpq_fragchk_codes/cell=*")
-        }
-
-    before = counts()
-    assert max(before.values()) >= 2, before
-    rows_before = sorted(
-        tuple(r) for r in spark.table("ivfpq_fragchk_codes").collect()
-    )
-    victims = compact_partitions(
-        spark, "ivfpq_fragchk_codes", "cell", min_files=2
-    )
-    assert victims, "compaction found no fragmented cells"
-    after = counts()
-    assert set(after) == set(before)
-    assert max(after.values()) == 1, after
-    rows_after = sorted(
-        tuple(r) for r in spark.table("ivfpq_fragchk_codes").collect()
-    )
-    assert rows_before == rows_after
-
-
 def test_storey_adaptive_fdr_superset_and_calibration(spark):
     """qa_fdr_storey_spike_in's planted contract: the adaptive
     rejection set must be a SUPERSET of plain BH's (pi0_hat <= 1 by
@@ -2801,120 +2620,6 @@ def test_storey_adaptive_fdr_superset_and_calibration(spark):
     assert 0 < len(st) < m
     for r in rows:
         assert r["storey_thr6"] >= r["bh_thr6"], r
-
-
-def test_st_ivfpq_monitor_flags_only_the_spike_in(spark):
-    """st_ivfpq_monitor's planted contract: exactly one monitor row per
-    arriving microbatch (two batches, exactly-once through the
-    foreachBatch sink — a dropped or doubled batch changes the row
-    set), the iid batch must NOT flag, and the planted concentrated
-    batch MUST (occupancy collapsed to a single cell)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    rows = R["st_ivfpq_monitor"].spark(spark, SF_SMOKE).collect()
-    assert len(rows) == 2
-    by = {r["cohort"]: r for r in rows}
-    assert set(by) == {"new_iid", "new_shifted"}
-    assert by["new_iid"]["drifted"] is False
-    assert by["new_shifted"]["drifted"] is True
-    assert by["new_shifted"]["max_share6"] == 1.0
-    assert by["new_iid"]["max_share6"] < 0.5
-    assert by["new_iid"]["n"] == by["new_shifted"]["n"]
-
-
-def test_st_ivfpq256_serve_two_microbatches(spark):
-    """st_ivfpq256_serve's streaming claim: the two query halves arrive
-    in two genuinely SEPARATE microbatches, each appended to the sink
-    by its own foreachBatch write — so the sink files holding query
-    ids 0..3 must be disjoint from those holding 4..7 (one serve pass
-    per arriving batch, exactly-once) — and every query carries its
-    full ranked top-5. The value-level stream == batch contract is the
-    shared VERBATIM oracle (tests/test_oracle_parity.py)."""
-    from collections import Counter
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.streaming import (
-        stream as ST,
-    )
-
-    rows = R["st_ivfpq256_serve"].spark(spark, SF_SMOKE).collect()
-    assert len(rows) == 40  # 8 queries x k=5
-    counts = Counter(r["query_id"] for r in rows)
-    assert set(counts) == set(range(8))
-    assert all(v == 5 for v in counts.values())
-    # Per-batch write provenance: read the exactly-once sink DIRECTLY
-    # (the entry's orderBy exchange erases input_file_name) — files
-    # holding the first half's queries must be disjoint from the
-    # second half's.
-    sink_dir, _ = ST._SINK_DIRS[
-        os.path.join(SF_SMOKE, "embeddings.parquet") + "::ivfpq256-serve-sink"
-    ]
-    raw = (
-        spark.read.parquet(sink_dir)
-        .withColumn("f", F.input_file_name())
-        .collect()
-    )
-    by_q: dict[int, set] = {}
-    for r in raw:
-        by_q.setdefault(r["query_id"], set()).add(r["f"])
-    first = set().union(*(by_q[q] for q in range(4)))
-    second = set().union(*(by_q[q] for q in range(4, 8)))
-    assert first and second and not (first & second), (first, second)
-
-
-def test_qa_psi_embedding_drift_spike_in(spark):
-    """qa_psi_embedding_drift's planted contract (the spike-in
-    discipline): per cohort exactly the top-5 ranked dims; the iid
-    candidate must NOT flag on any of them (same distribution as the
-    reference — its PSI is pure sampling noise, comfortably under the
-    0.25 industry threshold), and the x*0.05+1 plant MUST flag on all
-    five (every coordinate collapses into one bin)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    rows = R["qa_psi_embedding_drift"].spark(spark, SF_SMOKE).collect()
-    assert len(rows) == 10
-    by = {}
-    for r in rows:
-        by.setdefault(r["cohort"], []).append(r)
-    assert set(by) == {"new_iid", "new_shifted"}
-    for cohort, rs in by.items():
-        assert [r["rnk"] for r in rs] == [1, 2, 3, 4, 5]
-    assert all(not r["drifted"] for r in by["new_iid"])
-    assert all(r["psi6"] < 0.25 for r in by["new_iid"])
-    assert all(r["drifted"] for r in by["new_shifted"])
-    # the plant is not merely over threshold — it is catastrophic
-    assert all(r["psi6"] > 2.0 for r in by["new_shifted"])
-
-
-def test_ivfpq_retrain_spike_in(spark):
-    """wh_ivfpq_retrain's planted contract: the concentrated batch's
-    quantizer fit must be RESTORED by retraining (fit ~0.2 -> ~1.0,
-    retrain_effective true), the healthy base cohort must NOT flip
-    (retraining can't pretend to improve what wasn't broken), and the
-    point-mass occupancy invariant must hold (share 1.0 under BOTH
-    quantizers — concentration is a property of the cohort)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    rows = {
-        r["cohort"]: r
-        for r in R["wh_ivfpq_retrain"].spark(spark, SF_SMOKE).collect()
-    }
-    assert set(rows) == {"base_insample", "new_shifted"}
-    blob, base = rows["new_shifted"], rows["base_insample"]
-    assert blob["retrain_effective"] is True
-    assert base["retrain_effective"] is False
-    assert blob["fit_retrained6"] > 0.99 > 0.5 > blob["fit_frozen6"]
-    assert blob["share_frozen6"] == blob["share_retrained6"] == 1.0
-    assert abs(base["fit_gain6"]) < 0.05
 
 
 def test_st_bpe_tokenize_learned_stream_equals_batch(spark):
@@ -3049,147 +2754,6 @@ def test_bpe_train_apply_composition(spark):
         assert r["tokens_md5"] == hashlib.md5(
             " ".join(ts).encode()
         ).hexdigest(), r["doc_id"]
-
-
-def test_ivfpq_drift_monitor_separates_cohorts(spark):
-    """sim_ivfpq_drift's planted-outcome contract: the concentrated
-    batch MUST flag (occupancy collapses to one cell), the iid batch
-    and the holdout must NOT, and the in-sample cohort's fit must
-    exceed the holdout's (the optimism bias the docstring warns a
-    monitor against calibrating on)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    rows = {
-        r["cohort"]: r
-        for r in R["sim_ivfpq_drift"].spark(spark, SF_SMOKE).collect()
-    }
-    assert set(rows) == {
-        "base_insample", "base_holdout", "new_iid", "new_shifted",
-    }
-    assert rows["new_shifted"]["drifted"]
-    assert rows["new_shifted"]["max_share6"] == 1.0
-    assert not rows["new_iid"]["drifted"]
-    assert not rows["base_holdout"]["drifted"]
-    assert not rows["base_insample"]["drifted"]
-    assert (
-        rows["base_insample"]["mean_cos6"] > rows["base_holdout"]["mean_cos6"]
-    )
-
-
-def test_st_psi_embedding_drift_stream_equals_batch(spark):
-    """st_psi_embedding_drift's streaming claim: the two cohorts
-    arrive as two genuinely separate microbatches (distinct sink files
-    per cohort — exactly-once per batch), and the union of per-batch
-    PSI reports equals the batch entry row-for-row (the entries share
-    one oracle string, but this pins the equality engine-side too)."""
-    import os
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.streaming import (
-        stream as ST,
-    )
-
-    st_rows = R["st_psi_embedding_drift"].spark(spark, SF_SMOKE).collect()
-    qa_rows = R["qa_psi_embedding_drift"].spark(spark, SF_SMOKE).collect()
-    assert sorted(map(tuple, st_rows)) == sorted(map(tuple, qa_rows))
-    # two microbatches -> per-cohort rows come from disjoint sink files
-    sink_dir, _ = ST._SINK_DIRS[
-        os.path.join(SF_SMOKE, "embeddings.parquet") + "::psi-monitor-sink"
-    ]
-    raw = (
-        spark.read.parquet(sink_dir)
-        .select("cohort", F.input_file_name().alias("f"))
-        .collect()
-    )
-    by_c: dict[str, set] = {}
-    for r in raw:
-        by_c.setdefault(r["cohort"], set()).add(r["f"])
-    assert set(by_c) == {"new_iid", "new_shifted"}
-    assert not (by_c["new_iid"] & by_c["new_shifted"])
-
-
-def test_pq256r_books_are_rotated_trained_siblings(spark):
-    """The true-OPQ book table (operators.pq256r_book) must be a real
-    sibling of the unrotated table — same frozen geometry (m=8 x 256
-    codes x 8 dims, integer thousandths), but trained on a DIFFERENT
-    (rotated) corpus, so the tables must not be identical (guards a
-    regeneration that silently trained unrotated)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        pq256_book as B,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        pq256r_book as BR,
-    )
-
-    assert (BR.M, BR.SUBDIM, BR.N_CODES, BR.SCALE) == (
-        B.M,
-        B.SUBDIM,
-        B.N_CODES,
-        B.SCALE,
-    )
-    rows_b, rows_r = B.book_rows(), BR.book_rows()
-    assert len(rows_b) == len(rows_r) == B.M * B.N_CODES
-    assert rows_b != rows_r
-    # unit-normalized corpus -> every centroid well inside the ball
-    import math
-
-    for _, _, cv in rows_r[:256]:
-        assert math.sqrt(sum(x * x for x in cv)) < 2.0
-
-
-def test_ivfpq256_compact_defragments_without_changing_rows(spark):
-    """wh_ivfpq256_compact's file-level claim (the part its verbatim
-    oracle cannot see), at the production codebook size: publish +
-    append fragments touched cells to >= 2 files, compaction brings
-    every cell back to one file, and the 256-code table's rows are
-    byte-identical across the rewrite."""
-    import glob as _glob
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.beyond_similarity import (
-        IVFPQ_APPEND_BASE,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        append_ivfpq256_vectors,
-        compact_partitions,
-        publish_ivfpq256_layout,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < IVFPQ_APPEND_BASE)
-    new = emb.filter(F.col("vec_id") >= IVFPQ_APPEND_BASE)
-    publish_ivfpq256_layout(base, "ivfpq256_fragchk")
-    append_ivfpq256_vectors(new, "ivfpq256_fragchk")
-    wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-
-    def counts():
-        return {
-            d.rsplit("=", 1)[1]: len(_glob.glob(f"{d}/*.parquet"))
-            for d in _glob.glob(f"{wh}/ivfpq256_fragchk_codes/cell=*")
-        }
-
-    before = counts()
-    assert max(before.values()) >= 2, before
-    rows_before = sorted(
-        tuple(r) for r in spark.table("ivfpq256_fragchk_codes").collect()
-    )
-    victims = compact_partitions(
-        spark, "ivfpq256_fragchk_codes", "cell", min_files=2
-    )
-    assert victims, "compaction found no fragmented cells"
-    after = counts()
-    assert set(after) == set(before)
-    assert max(after.values()) == 1, after
-    rows_after = sorted(
-        tuple(r) for r in spark.table("ivfpq256_fragchk_codes").collect()
-    )
-    assert rows_before == rows_after
 
 
 def test_interval_overlap_join_matches_naive_and_is_exactly_once(spark):

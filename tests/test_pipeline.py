@@ -1,202 +1,15 @@
-"""Pipeline-fusion tier (pl_*) invariants — the properties the fused
-oracle pins only implicitly. Bit-exact oracle parity itself is covered
-by tests/test_oracle_parity.py's full-registry sweep; these tests pin
-the SEMANTIC claims of the composition."""
+"""Plan-shape and semantic checks for the subquery-bearing TPC-H entries
+(Q17, Q18, Q22) — the properties their oracles pin only implicitly.
+Bit-exact oracle parity itself is covered by
+tests/test_oracle_parity.py's full-registry sweep."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
-
-from financial_transaction_data_warehouse_interactive_dashboard_spark.functions import (
-    portable as _P,
-)
-from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (
-    beyond_pipeline as PL,
-)
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
     REGISTRY,
-    _t,
 )
 
 from conftest import SF_ORACLE
-
-
-def test_dedup_drop_set_is_nonempty_and_dropped_ids_never_served(spark):
-    """The fixture corpus contains near-dups at sf0.01 (the dd_* family
-    depends on that), so the drop set must be non-empty — and no
-    dropped id may ever appear in the served results, as a query OR a
-    neighbor: it was never encoded into the index. This is the entry's
-    whole claim stated directly."""
-    drop = {
-        r["vec_id"]
-        for r in PL._shared_dedup_drop(spark, SF_ORACLE).collect()
-    }
-    assert drop, "fixture should contain near-duplicates at sf0.01"
-    served = REGISTRY["pl_dedup_before_index"].spark(
-        spark, SF_ORACLE
-    ).collect()
-    assert served, "served results should be non-empty"
-    touched = {r["neighbor_id"] for r in served} | {
-        r["query_id"] for r in served
-    }
-    assert not touched & drop, touched & drop
-
-
-def test_canonical_index_is_strictly_smaller(spark):
-    """Dedup-before-index must actually shrink the index: the kept
-    corpus row count is the raw corpus minus the drop set, exactly."""
-    kept, _, inv = PL._shared_canonical_index(spark, SF_ORACLE)
-    n_raw = _t(spark, SF_ORACLE, "embeddings").count()
-    n_drop = PL._shared_dedup_drop(spark, SF_ORACLE).count()
-    n_kept = kept.count()
-    assert n_kept == n_raw - n_drop
-    assert n_kept < n_raw
-    # the inverted file encodes exactly the kept rows (m=8 codes each)
-    assert inv.select("vec_id").distinct().count() == n_kept
-
-
-def test_hybrid_rerank_is_a_permutation_of_the_shortlist(spark):
-    """The reranker may only REORDER the ANN shortlist, never inject a
-    candidate the first stage did not propose — every (query_id,
-    neighbor_id) it returns must be in the 50-deep first-stage
-    shortlist, and blend6 must equal the committed 0.8/0.2 formula of
-    its own columns."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-
-    out = REGISTRY["pl_hybrid_rerank"].spark(spark, SF_ORACLE)
-    rows = out.collect()
-    assert rows
-    kept, cells, inv = PL._shared_canonical_index(spark, SF_ORACLE)
-    short = {
-        (r["query_id"], r["neighbor_id"])
-        for r in S.ivfpq256_query(
-            kept, cells, S.pq256_books(spark), inv, k=S.PQ256_SHORTLIST
-        ).collect()
-    }
-    assert {(r["query_id"], r["neighbor_id"]) for r in rows} <= short
-    for r in rows:
-        assert abs(
-            r["blend6"] - round(0.8 * r["cos6"] + 0.2 * r["jacc6"], 6)
-        ) < 1e-9, r
-
-
-def test_scaled_shortlist_default_matches_formula(spark):
-    """ivfpq256_query(shortlist=None) must size the shortlist as
-    max(PQ256_SHORTLIST, ceil(rho * max_per_query_scanned)) where
-    max_per_query_scanned is the ACTUAL probed-cell occupancy of the
-    heaviest query (ADVICE r15: real occupancy, not the uniform
-    nprobe/n_cells proxy) — at fixture scale that floors to the pinned
-    constant, so the scaled default and the pinned default must return
-    IDENTICAL rows (the oracle-pinned entries rely on exactly this
-    coincidence; the audit proves the scaled branch at 20k corpus)."""
-    import math
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-
-    emb = _t(spark, SF_ORACLE, "embeddings")
-    vecs = S._vecs(emb)
-    seeds = vecs.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    )
-    cells = S.refine_centroids(vecs, seeds).localCheckpoint(eager=True)
-    inv = S.build_ivfpq256_inv(emb, cells).localCheckpoint(eager=True)
-    books = S.pq256_books(spark)
-    # mirror the sizing: VECTOR occupancy (inv carries m rows/vector —
-    # count the m == 0 subspace) of each default query's probed cells
-    occ = {r["cell"]: r["n"] for r in
-           inv.filter(F.col("m") == 0)
-           .groupBy("cell").agg(F.count("*").alias("n")).collect()}
-    from pyspark.sql import Window
-
-    wp = Window.partitionBy("query_id").orderBy(
-        F.desc("probe_cos"), F.asc("cell")
-    )
-    probe_rows = (
-        vecs.filter(F.col("vec_id") < 8)
-        .select(F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
-        .crossJoin(F.broadcast(cells))
-        .withColumn("probe_cos", F.round(_P.cosine("qv", "cv"), 6))
-        .withColumn("rn", F.row_number().over(wp))
-        .filter(F.col("rn") <= 2)
-        .select("query_id", "cell")
-        .collect()
-    )
-    per_query: dict = {}
-    for r in probe_rows:
-        per_query[r["query_id"]] = per_query.get(r["query_id"], 0) + occ.get(
-            r["cell"], 0
-        )
-    realized = max(
-        S.PQ256_SHORTLIST,
-        math.ceil(S.PQ256_SHORTLIST_PER_SCANNED * max(per_query.values())),
-    )
-    assert realized == S.PQ256_SHORTLIST, (
-        "fixture scale should floor to the pinned constant"
-    )
-    pinned = S.ivfpq256_query(emb, cells, books, inv).collect()
-    scaled = S.ivfpq256_query(
-        emb, cells, books, inv, shortlist=None
-    ).collect()
-    assert pinned == scaled
-
-
-def test_pl_dedup_before_index_plan_shape(spark):
-    """Scale posture of the fused pipeline (the test_plan_quality
-    discipline): the drop set must meet the corpus as a BROADCAST
-    anti-join (a tiny id frame must never shuffle the corpus), and the
-    plan must contain no CartesianProduct. The corpus-side joins
-    (probe/ADC) may shuffle — that is their job."""
-    from test_plan_quality import plan_of
-
-    plan = plan_of(
-        REGISTRY["pl_dedup_before_index"].spark(spark, SF_ORACLE)
-    )
-    assert "CartesianProduct" not in plan
-    # the anti-join against the broadcast drop set
-    assert "BroadcastHashJoin" in plan and "LeftAnti" in plan
-
-
-def test_pl_retrain_on_drift_semantics(spark):
-    """The retrain-on-drift composition's claims stated directly
-    (oracle parity is covered by the registry sweep): the iid cohort
-    must not trigger (action append) and its 'after' stats must be
-    BYTE-IDENTICAL to its monitor stats (the quantizer is frozen — the
-    zero-retraining proof); the planted shifted cohort must trigger
-    (action retrain) on the monitor's occupancy signal; and BOTH
-    after-rows must read recovered (fit >= the cohort's monitor fit,
-    with the shifted cohort's fit jumping to ~1.0: the retrained
-    centroids live inside the blob)."""
-    rows = {
-        (r["phase"], r["cohort"]): r
-        for r in REGISTRY["pl_retrain_on_drift"].spark(
-            spark, SF_ORACLE
-        ).collect()
-    }
-    assert len(rows) == 4
-    for (_, cohort), r in rows.items():
-        assert r["action"] == (
-            "retrain" if cohort == "new_shifted" else "append"
-        ), r
-    assert rows[("monitor", "new_iid")]["drifted"] is False
-    assert rows[("monitor", "new_shifted")]["drifted"] is True
-    # frozen path: after == monitor, byte-identical stats
-    mi, ai = rows[("monitor", "new_iid")], rows[("after", "new_iid")]
-    assert (mi["n"], mi["mean_cos6"], mi["max_share6"]) == (
-        ai["n"], ai["mean_cos6"], ai["max_share6"]
-    )
-    # recovery is fit-judged and must hold for both after rows
-    assert ai["recovered"] is True
-    a_sh = rows[("after", "new_shifted")]
-    assert a_sh["recovered"] is True
-    assert a_sh["mean_cos6"] > 0.99, a_sh
-    assert rows[("monitor", "new_shifted")]["mean_cos6"] < 0.5
-    # monitor rows are never 'recovered'
-    assert rows[("monitor", "new_iid")]["recovered"] is False
-    assert rows[("monitor", "new_shifted")]["recovered"] is False
 
 
 def test_tpch_q17_decorrelated_plan_shape(spark):
@@ -214,52 +27,6 @@ def test_tpch_q17_decorrelated_plan_shape(spark):
     assert "SortMergeJoin" not in plan
     row = df.collect()[0]
     assert row["n_small"] > 0 and row["avg_yearly"] > 0
-
-
-def test_learned_rerank_is_a_permutation_with_informative_weights(spark):
-    """The learned twin may only REORDER the shortlist (the
-    hybrid_rerank permutation contract), its blend must equal the
-    committed 0.8/0.2 formula of its own columns, and the learned
-    table must actually be informative: rare tokens must outweigh
-    ubiquitous ones (idf strictly decreasing in document frequency),
-    with every weight positive."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-
-    out = REGISTRY["pl_learned_rerank"].spark(spark, SF_ORACLE)
-    rows = out.collect()
-    assert rows
-    kept, cells, inv = PL._shared_canonical_index(spark, SF_ORACLE)
-    short = {
-        (r["query_id"], r["neighbor_id"])
-        for r in S.ivfpq256_query(
-            kept, cells, S.pq256_books(spark), inv, k=S.PQ256_SHORTLIST
-        ).collect()
-    }
-    assert {(r["query_id"], r["neighbor_id"]) for r in rows} <= short
-    for r in rows:
-        assert abs(
-            r["blend6"] - round(0.8 * r["cos6"] + 0.2 * float(r["wjacc6"]), 6)
-        ) < 1e-9, r
-    docs = _t(spark, SF_ORACLE, "documents")
-    docw = docs.select(
-        "doc_id", F.array_distinct(F.split("text", " ")).alias("w")
-    )
-    idf = {
-        r["t"]: float(r["iw"]) for r in PL.corpus_idf(docw).collect()
-    }
-    tok = docw.select(F.explode("w").alias("t"))
-    df = {
-        r["t"]: r["n"]
-        for r in tok.groupBy("t").agg(F.count("*").alias("n")).collect()
-    }
-    assert all(w > 0 for w in idf.values())
-    # idf must be strictly decreasing in df: pick the extreme tokens
-    rare = min(df, key=lambda t: (df[t], t))
-    common = max(df, key=lambda t: (df[t], t))
-    if df[rare] < df[common]:
-        assert idf[rare] > idf[common], (rare, common)
 
 
 def test_tpch_q18_semijoin_plan_and_threshold(spark):
@@ -296,18 +63,3 @@ def test_tpch_q22_composed_subquery_plan(spark):
     assert "BroadcastHashJoin" in plan or "BroadcastNestedLoopJoin" in plan
     rows = df.collect()
     assert rows and all(r["numcust"] > 0 for r in rows)
-
-
-def test_pl_learned_rerank_plan_has_no_corpus_broadcast(spark):
-    """The learned stage's plan must keep the hybrid stage's scale
-    posture: no CartesianProduct, and the pairwise/weight joins ride
-    broadcasts (the shortlist and the vocabulary-bounded IDF table are
-    the broadcast sides — never the documents corpus as a shuffle-free
-    giant)."""
-    from test_plan_quality import plan_of
-
-    plan = plan_of(
-        REGISTRY["pl_learned_rerank"].spark(spark, SF_ORACLE)
-    )
-    assert "CartesianProduct" not in plan
-    assert "BroadcastHashJoin" in plan

@@ -126,7 +126,6 @@ EAGER_ENTRIES = {
     "wh_vacuum_retention",
     "wh_schema_evolution",
     "wh_compaction",  # r8: small-files compaction JOB; audit frame only
-    "wh_ivfpq_publish",  # r9: publish-then-serve JOB; stored-read plan pinned below
 }
 
 
@@ -310,39 +309,9 @@ def test_dense_ids_matches_global_row_number(spark):
     assert [by_key[k] for k in ordered] == list(range(1, len(ordered) + 1))
 
 
-def test_ivf_cell_layout_prunes_partitions(spark):
-    """The similarity.py IVF docstring promise, made real: with the corpus
-    written cell-partitioned (sources.warehouse.write_ivf_layout), probing
-    a cell subset must (a) carry the predicate as a PartitionFilter, and
-    (b) actually read only the probed cells' files — nprobe/n_cells of
-    the corpus."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        write_ivf_layout,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    write_ivf_layout(emb, "ivf_corpus_planq", n_cells=16)
-    t = spark.table("ivf_corpus_planq")
-
-    occupied = sorted(r["cell"] for r in t.select("cell").distinct().collect())
-    assert len(occupied) >= 4, "quantizer should occupy several cells"
-    probe_cells = occupied[:2]
-
-    total_files = t.select(F.input_file_name()).distinct().count()
-    probed = t.filter(F.col("cell").isin(*probe_cells))
-    probed_files = probed.select(F.input_file_name()).distinct().count()
-
-    plan = plan_of(probed)
-    assert "PartitionFilters" in plan and "cell" in plan
-    # One file per occupied cell (repartition-by-cell write): the probe
-    # reads exactly the probed cells' files.
-    assert total_files == len(occupied)
-    assert probed_files == len(probe_cells)
-
-
 def test_gold_quarter_partitioning_prunes(spark):
-    """The warehouse gold path gets the same pruning proof as the IVF
-    layout (r4 verdict ask #6): gold written partitioned by quarter (the
+    """The warehouse gold path gets a partition-pruning proof (r4 verdict
+    ask #6): gold written partitioned by quarter (the
     reference dashboard's primary access pattern — streamlit.py:44-49
     filters the merged CSV by quarter in pandas, re-reading everything),
     then a quarter-filtered dashboard aggregate must (a) carry the
@@ -354,8 +323,7 @@ def test_gold_quarter_partitioning_prunes(spark):
 
     gold = REGISTRY["j3_gold_denorm"].spark(spark, SF_SMOKE)
     # Repartition by the partition column first: one file per quarter,
-    # not one per (write task x quarter) — same small-files posture as
-    # write_ivf_layout.
+    # not one per (write task x quarter).
     write_partitioned(gold.repartition("quarter"), "gold_quarter_planq", ["quarter"])
     t = spark.table("gold_quarter_planq")
 
@@ -380,107 +348,28 @@ def test_gold_quarter_partitioning_prunes(spark):
     assert files_read == 1
 
 
-def test_ivf_dynamic_partition_pruning(spark):
-    """When the probe set comes from a JOIN (centroid scoring) rather than
-    a literal IN-list, Spark must insert dynamic partition pruning: the
-    corpus scan's partition filter is fed at runtime from the broadcast
-    probe side."""
+def test_gold_quarter_dynamic_partition_pruning(spark):
+    """When the partition filter comes from a JOIN rather than a literal
+    IN-list, Spark must insert dynamic partition pruning: the
+    quarter-partitioned gold scan's partition filter is fed at runtime
+    from the broadcast probe side."""
     from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        write_ivf_layout,
+        write_partitioned,
     )
 
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    write_ivf_layout(emb, "ivf_corpus_dpp", n_cells=16)
-    t = spark.table("ivf_corpus_dpp")
+    gold = REGISTRY["j3_gold_denorm"].spark(spark, SF_SMOKE)
+    write_partitioned(gold.repartition("quarter"), "gold_quarter_dpp", ["quarter"])
+    t = spark.table("gold_quarter_dpp")
 
-    # Probe side with a selective predicate (DPP's insertion condition) —
-    # stands in for the centroid-scoring top-nprobe frame.
+    # Probe side with a selective predicate (DPP's insertion condition).
     probe = (
-        spark.range(0, 16)
-        .filter(F.col("id") % 8 == 3)
-        .select(F.col("id").cast("bigint").alias("cell"))
+        spark.range(1, 5)
+        .filter(F.col("id") % 4 == 2)
+        .select(F.col("id").cast(t.schema["quarter"].dataType).alias("quarter"))
     )
-    joined = t.join(F.broadcast(probe), "cell")
+    joined = t.join(F.broadcast(probe), "quarter")
     plan = plan_of(joined)
     assert "dynamicpruning" in plan.lower(), plan[:2000]
-
-
-def test_ivfpq_stored_probe_plans_dynamic_pruning(spark):
-    """wh_ivfpq_publish's serve path: probing the PUBLISHED code table
-    must plan dynamic partition pruning on cell (the probe set is a
-    centroid-scoring join output, not a literal), and the layout must
-    hold one file per occupied cell (the write_ivf_layout small-files
-    discipline applied to the inverted file)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        publish_ivfpq_layout,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    publish_ivfpq_layout(emb, "ivfpq_planq")
-    codes = spark.table("ivfpq_planq_codes")
-    cells = spark.table("ivfpq_planq_centroids")
-
-    # ADVICE r9: the stored partition column must read back with the
-    # in-memory frames' exact dtype (bigint) — the stored==in-memory
-    # claim must not ride implicit casts or inference config.
-    _, _, inv_mem = S.build_ivfpq_index(emb)
-    assert codes.schema["cell"].dataType == inv_mem.schema["cell"].dataType
-
-    occupied = codes.select("cell").distinct().count()
-    files = codes.select(F.input_file_name()).distinct().count()
-    assert files == occupied, (files, occupied)
-
-    # Mirror wh_ivfpq_publish's serve path exactly (defensive bigint
-    # cast included): the cast must be a Catalyst no-op that leaves
-    # dynamic partition pruning intact.
-    served = S.ivfpq_query(
-        emb,
-        cells,
-        spark.table("ivfpq_planq_codebooks"),
-        codes.withColumn("cell", F.col("cell").cast("bigint")),
-    )
-    plan = plan_of(served)
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
-    assert "SortMergeJoin" not in plan
-
-
-def test_ivfpq256_stored_probe_plans_dynamic_pruning(spark):
-    """wh_ivfpq256_publish's serve path — the same three pins as the
-    8-code layout, at the production codebook size: the stored
-    partition column keeps the in-memory dtype, the layout holds one
-    file per occupied cell, and probing the published 256-code table
-    plans dynamic partition pruning (no SortMergeJoin on the serve)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        publish_ivfpq256_layout,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    publish_ivfpq256_layout(emb, "ivfpq256_planq")
-    codes = spark.table("ivfpq256_planq_codes")
-    cells = spark.table("ivfpq256_planq_centroids")
-
-    inv_mem = S.build_ivfpq256_inv(emb, cells)
-    assert codes.schema["cell"].dataType == inv_mem.schema["cell"].dataType
-
-    occupied = codes.select("cell").distinct().count()
-    files = codes.select(F.input_file_name()).distinct().count()
-    assert files == occupied, (files, occupied)
-
-    served = S.ivfpq256_query(
-        emb,
-        cells,
-        spark.table("ivfpq256_planq_books"),
-        codes.withColumn("cell", F.col("cell").cast("bigint")),
-    )
-    plan = plan_of(served)
-    assert "dynamicpruning" in plan.lower(), plan[:2000]
-    assert "SortMergeJoin" not in plan
 
 
 def test_aqe_splits_skewed_join(spark):
@@ -561,33 +450,14 @@ def test_hybrid_rrf_broadcasts_small_sides(spark):
 
 
 def test_retrieval_eval_family_has_no_smj(spark):
-    """The retrieval-eval compositions (recall@k, NDCG@k, the IVFPQ
-    capstone) join only query-sample-bounded frames (per-query
-    aggregates, exact top-k frontiers) — every such join must broadcast
-    (r9 audit: these were silently SortMergeJoining 8-to-40-row frames,
-    paying 2-4 shuffles per entry)."""
-    for name in ("sim_recall_at_k", "sim_ndcg_at_k", "sim_ann_ivf_pq"):
+    """The retrieval-eval compositions (recall@k, NDCG@k) join only
+    query-sample-bounded frames (per-query aggregates, exact top-k
+    frontiers) — every such join must broadcast (r9 audit: these were
+    silently SortMergeJoining 8-to-40-row frames, paying 2-4 shuffles
+    per entry)."""
+    for name in ("sim_recall_at_k", "sim_ndcg_at_k"):
         plan = plan_of(REGISTRY[name].spark(spark, SF_SMOKE))
         assert "SortMergeJoin" not in plan, name
-
-
-def test_ivf_pq_plan_broadcasts_index_sides(spark):
-    """sim_ann_ivf_pq (the IVFPQ capstone): the centroid table, the PQ
-    codebooks, the per-query ADC LUT, and the probe map are all tiny —
-    every join in the query path must be a BroadcastHashJoin. A
-    SortMergeJoin anywhere means an index-sized structure is being
-    shuffled with the corpus-sized code table; at 10^9 vectors that is
-    the difference between an ADC gather and a full re-shuffle."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-
-    plan = plan_of(
-        S.topk_ann_ivf_pq(load_table(spark, SF_SMOKE, "embeddings"))
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "CartesianProduct" not in plan
 
 
 def test_bpe_apply_is_map_only(spark):
@@ -1361,28 +1231,4 @@ def test_pin_barrier_survives_in_assign_cells(spark):
         assert "sqrt(" not in ln, (
             "norm fold inlined into the HOF lambda (re-evaluated per "
             "centroid): " + ln[:200]
-        )
-
-
-def test_pin_barrier_survives_in_nearest_cell_scored(spark):
-    """Same guard for the monitor-shape helper (drift/retrain paths)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    vecs = S._vecs(emb)
-    cells = vecs.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    )
-    plan = plan_of(S.nearest_cell_scored(vecs, cells, ["vec_id"]))
-    assert re.search(r"\(\d+\) Generate", plan)
-    assert "explode(array(" in plan
-    argmax = [
-        ln for ln in plan.splitlines() if "array_max(transform(" in ln
-    ]
-    assert argmax, "argmax projection missing from plan"
-    for ln in argmax:
-        assert "sqrt(" not in ln, (
-            "norm fold inlined into the HOF lambda: " + ln[:200]
         )

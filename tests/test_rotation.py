@@ -59,12 +59,16 @@ def test_surface_is_exactly_surface_size():
 
 
 def test_every_ledger_name_is_registered():
+    """History may name RETIRED (deleted) entries; the forward-looking
+    queues may not."""
     names = set(Q.REGISTRY)
+    assert not R.RETIRED & names, R.RETIRED & names
     for rnd, swap in R.ROTATION_HISTORY.items():
         for key in ("in", "out"):
-            missing = set(swap[key]) - names
+            missing = set(swap[key]) - names - R.RETIRED
             assert not missing, (rnd, key, missing)
     assert not set(R.NEXT_QUEUE) - names
+    assert not set(R.REFRESH_QUEUE) - names
 
 
 def test_driver_entries_are_green_or_declared_first_timers():

@@ -64,20 +64,15 @@ COLLECT_ALLOWED: dict[str, int] = {
     # a production 50k-merge vocab is still MBs — bounded by Heaps'
     # law, never by corpus size) to feed the Arrow tokenizer.
     f"{PKG}/plans/beyond_text.py": 1,
-    # r16 (ADVICE r15): ivfpq256_query's shortlist=None sizing collects
-    # ONE row — the max per-query probed-cell occupancy (probe joined
-    # to broadcast per-cell counts, aggregated to a single max). Only
-    # the scaled-default branch pays it; registry entries pass the
-    # pinned constant and never hit this site.
-    # r16 optimization round adds the two power-iteration sites: the
-    # d-row (pos, mu, n) seed collect (_mu_and_n) and the 1-row
+    # r16 optimization round: the two power-iteration sites — the d-row
+    # (pos, mu, n) seed collect (_mu_and_n) and the 1-row
     # (x_arr, vx_arr, nrm) iterate collect per power step
     # (_power_step_lit) — both bounded by the embedding DIMENSION
     # (d doubles), never by corpus size; this is the classic
     # iterative-algorithm driver loop (graph.py's convergence count is
     # the same shape) and it replaced a per-iteration corpus-wide
     # window Exchange + eager checkpoint + broadcast build.
-    f"{PKG}/operators/similarity.py": 3,
+    f"{PKG}/operators/similarity.py": 2,
 }
 
 
@@ -117,13 +112,13 @@ def test_beyond_tier_first_import_order():
     import sys as _sys
 
     # EVERY tier module must be importable first (ADVICE r11: only
-    # beyond_text was pinned, so a beyond_streaming -> beyond_similarity
-    # module-level import silently broke the invariant for
-    # beyond_similarity-first while CI stayed green).
+    # beyond_text was pinned, so a tier-to-tier module-level import
+    # silently broke the invariant for the other tiers while CI stayed
+    # green).
     tiers = [
         "beyond_dedup", "beyond_events", "beyond_multimodal",
-        "beyond_pipeline", "beyond_similarity", "beyond_streaming",
-        "beyond_text", "beyond_warehouse",
+        "beyond_similarity", "beyond_streaming", "beyond_text",
+        "beyond_warehouse",
     ]
     pkg = "financial_transaction_data_warehouse_interactive_dashboard_spark"
     # The expected count is the NORMAL-order registry size, read from
@@ -151,38 +146,3 @@ def test_beyond_tier_first_import_order():
         assert res.returncode == 0 and "OK" in res.stdout, (
             tier, res.stderr[-2000:]
         )
-
-
-def test_bench_canary_contract(spark):
-    """The calibration canary (VERDICT r7 ask #3; informational-only
-    since r10 — VERDICT r9 ask #2 moved the vs_prev normalizer to the
-    median shared-entry ratio) must always produce its four keys with
-    positive sub-minute timings — a canary that errors or returns zeros
-    would break the cross-round continuity record."""
-    from bench import run_canary
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_tables,
-    )
-
-    from conftest import SF_SMOKE
-
-    out = run_canary(spark, load_tables(spark, SF_SMOKE))
-    assert set(out) == {"scan_agg", "bcast_join", "window_1k", "total_s"}
-    for k, v in out.items():
-        assert 0 < v < 60, (k, v)
-    assert abs(out["total_s"]
-               - (out["scan_agg"] + out["bcast_join"] + out["window_1k"])
-               ) < 0.01
-
-
-def test_bench_large_result_names_are_registered():
-    """A typo in bench.LARGE_RESULT silently demotes that entry back to
-    collect-timing; pin membership against the registry. (conftest.py
-    already puts the repo root on sys.path — no mutation here.)"""
-    from bench import LARGE_RESULT
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY,
-    )
-
-    unknown = LARGE_RESULT - set(REGISTRY)
-    assert not unknown, unknown

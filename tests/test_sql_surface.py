@@ -8,6 +8,9 @@ from __future__ import annotations
 
 import pytest
 
+from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (
+    nlq,
+)
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
     REGISTRY,
 )
@@ -162,3 +165,61 @@ def test_engine_wide_analyst_phrases(phrase, expected):
     )
 
     assert route(phrase) == expected
+
+
+# run_sql is read-only: every command or write is rejected by Spark's
+# query-only parser before a view is registered or a job starts.
+NOT_A_QUERY = [
+    "CREATE TABLE probe_t (a INT)",
+    "DROP TABLE orders",
+    "INSERT INTO orders SELECT * FROM orders",
+    "INSERT OVERWRITE DIRECTORY 'run_sql_probe' SELECT 1",
+    "SET spark.sql.shuffle.partitions=1",
+    "CACHE TABLE orders",
+    "ADD JAR run_sql_probe.jar",
+    "CREATE TEMP VIEW probe_v AS SELECT 1",
+    "EXPLAIN SELECT 1",
+    "DESCRIBE orders",
+    "SHOW TABLES",
+    "REFRESH TABLE orders",
+    "BEGIN SELECT 1; END",
+    "SELECT 1; DROP TABLE orders",
+]
+
+
+def _jobs_in_group(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
+@pytest.mark.parametrize("sql", NOT_A_QUERY)
+def test_run_sql_rejects_non_queries_before_any_job(spark, sql):
+    def call():
+        with pytest.raises(ValueError, match="single read-only query"):
+            nlq.run_sql(spark, SF_ORACLE, sql)
+
+    assert _jobs_in_group(spark, "run_sql_reject", call) == []
+
+
+def test_run_sql_runs_read_only_queries(spark):
+    """The positive control for the rejection test: SELECT and WITH
+    queries still run, and their jobs are seen by the same tracker."""
+    rows = []
+
+    def call():
+        rows.append(nlq.run_sql(
+            spark, SF_ORACLE,
+            "WITH f AS (SELECT * FROM orders WHERE o_orderstatus = 'F') "
+            "SELECT count(*) AS n FROM f",
+        ).collect()[0]["n"])
+        rows.append(nlq.run_sql(
+            spark, SF_ORACLE, "SELECT count(*) AS n FROM orders"
+        ).collect()[0]["n"])
+
+    assert _jobs_in_group(spark, "run_sql_accept", call)
+    assert 0 < rows[0] < rows[1]

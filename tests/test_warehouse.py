@@ -535,147 +535,3 @@ def test_schema_evolution_null_backfill(spark):
     assert rows[1]["n_null_channel"] == rows[1]["n_rows"]
     assert rows[2]["n_null_channel"] == 0
     assert rows[2]["n_channel"] == rows[2]["n_rows"]
-
-
-def test_ivfpq_append_leaves_base_partitions_untouched(spark):
-    """wh_ivfpq_append's layout claim: appending a batch must not
-    rewrite existing partitions — every parquet file present after
-    publish is still present after append, and each cell touched by
-    the new batch gains exactly ONE new file (the repartition-by-cell
-    small-files discipline). The ORACLE checks answers; this checks
-    the physical write pattern the answers ride on."""
-    from pyspark.sql import functions as F
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        append_ivfpq_vectors,
-        publish_ivfpq_layout,
-    )
-
-    from conftest import SF_SMOKE
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < 250)
-    new = emb.filter(F.col("vec_id") >= 250)
-    publish_ivfpq_layout(base, "ivfpq_appt")
-
-    def files_by_cell():
-        rows = (
-            spark.table("ivfpq_appt_codes")
-            .select("cell", F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
-        out: dict[int, set] = {}
-        for r in rows:
-            out.setdefault(r["cell"], set()).add(r["f"])
-        return out
-
-    before = files_by_cell()
-    append_ivfpq_vectors(new, "ivfpq_appt")
-    after = files_by_cell()
-    for cell, fs in before.items():
-        assert fs <= after[cell], f"base files rewritten in cell {cell}"
-        extra = len(after[cell]) - len(fs)
-        assert extra in (0, 1), (cell, extra)
-    n_before = sum(len(v) for v in before.values())
-    n_after = sum(len(v) for v in after.values())
-    assert n_after > n_before  # the batch actually landed
-    # appended rows visible through the standard read path
-    assert (
-        spark.table("ivfpq_appt_codes")
-        .filter(F.col("vec_id") >= 250)
-        .count()
-        > 0
-    )
-
-
-def test_ivfpq256_append_leaves_base_partitions_untouched(spark):
-    """wh_ivfpq256_append's layout claim at the production codebook
-    size: appending a batch must not rewrite existing partitions —
-    every parquet file present after publish is still present after
-    append, and each cell touched by the new batch gains exactly ONE
-    new file. The ORACLE checks answers; this checks the physical
-    write pattern (the 8-code twin's test, at 256 codes)."""
-    from pyspark.sql import functions as F
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.warehouse import (
-        append_ivfpq256_vectors,
-        publish_ivfpq256_layout,
-    )
-
-    from conftest import SF_SMOKE
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    base = emb.filter(F.col("vec_id") < 250)
-    new = emb.filter(F.col("vec_id") >= 250)
-    publish_ivfpq256_layout(base, "ivfpq256_appt")
-
-    def files_by_cell():
-        rows = (
-            spark.table("ivfpq256_appt_codes")
-            .select("cell", F.input_file_name().alias("f"))
-            .distinct()
-            .collect()
-        )
-        out: dict[int, set] = {}
-        for r in rows:
-            out.setdefault(r["cell"], set()).add(r["f"])
-        return out
-
-    before = files_by_cell()
-    append_ivfpq256_vectors(new, "ivfpq256_appt")
-    after = files_by_cell()
-    for cell, fs in before.items():
-        assert fs <= after[cell], f"base files rewritten in cell {cell}"
-        extra = len(after[cell]) - len(fs)
-        assert extra in (0, 1), (cell, extra)
-    n_before = sum(len(v) for v in before.values())
-    n_after = sum(len(v) for v in after.values())
-    assert n_after > n_before  # the batch actually landed
-    # appended rows visible through the standard read path, fully coded
-    appended = spark.table("ivfpq256_appt_codes").filter(
-        F.col("vec_id") >= 250
-    )
-    assert appended.count() > 0
-    assert appended.select("m").distinct().count() == 8
-
-
-def test_write_tables_reports_every_failed_write():
-    """A failed write must not hide the others: every write runs to the
-    end, and one ExceptionGroup names each table whose write failed."""
-    import time
-
-    import pytest
-
-    written = []
-
-    def good():
-        time.sleep(0.2)  # still running when both failures have landed
-        written.append("t_good")
-
-    def failing(msg):
-        def thunk():
-            raise RuntimeError(msg)
-
-        return thunk
-
-    with pytest.raises(ExceptionGroup) as info:
-        WH._write_tables([
-            ("t_bad_a", failing("disk full")),
-            ("t_good", good),
-            ("t_bad_b", failing("executor lost")),
-        ])
-    assert written == ["t_good"]
-    msg = str(info.value)
-    assert "t_bad_a" in msg and "t_bad_b" in msg and "t_good" not in msg
-    assert sorted(str(e) for e in info.value.exceptions) == [
-        "disk full", "executor lost",
-    ]
-    WH._write_tables([("t_good", good)])  # no failure, no group
-    assert written == ["t_good", "t_good"]

@@ -3,14 +3,13 @@
 (round dir from $SPARK_GRAFT_PLANS_ROUND, default r17).
 
 Usage:
-    python tools/explain_capture.py before sim_pca_deflate wh_ivfpq_retrain ...
-    python tools/explain_capture.py after  sim_pca_deflate ...
+    python tools/explain_capture.py before a28_customer_kmeans wh_compaction ...
+    python tools/explain_capture.py after  a28_customer_kmeans ...
 
 Writes plans/r16/<name>_<tag>.txt with the formatted physical plan of the
 entry's DataFrame at $SPARK_GRAFT_SF_DIR (default sf0.1). Entries whose
 construction runs eager work (localCheckpoint, saveAsTable) execute that
-work; the captured plan is the final returned DataFrame's plan, which is
-what the bench times to its sink.
+work; the captured plan is the final returned DataFrame's plan.
 """
 
 from __future__ import annotations
