@@ -345,8 +345,7 @@ def bpe_vocab_case_sql() -> str:
     pass guarantees every 1-char token is in [a-z] (an out-of-alphabet
     single char would map arithmetically, not to the old form's -1).
     Token ids are bit-identical to the full-table CASE on that domain;
-    ELSE -1 still covers impossible multi-char symbols. Measured
-    (sf0.1, interleaved quiet-host A/B): see OPTIMIZATION_r17.md."""
+    ELSE -1 still covers impossible multi-char symbols."""
     merge_case = "CASE t " + " ".join(
         f"WHEN '{a + b}' THEN {BPE_BASE_ID + i}"
         for i, (a, b) in enumerate(BPE_MERGES)

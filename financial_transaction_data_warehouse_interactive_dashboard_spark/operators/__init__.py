@@ -1,1 +1,1 @@
-"""Beyond-reference operators: dedup, similarity search, multimodal, graph, sketches."""
+"""Beyond-reference operators: dedup, graph, sketches, sampling, temporal joins."""

@@ -1,4 +1,4 @@
-"""Beyond-reference named queries: dedup, similarity, text, events, multimodal.
+"""Beyond-reference named queries: dedup, text, events, streaming, warehouse.
 
 Each entry pairs an operator from operators/ / functions/ / streaming/ with
 a DuckDB oracle that implements the SAME algorithm on the same portable
@@ -35,9 +35,6 @@ from ..functions import text as T
 
 
 from ..operators import dedup as D
-
-
-from ..operators import multimodal as M
 
 
 from ..operators import sampling as SP
@@ -180,61 +177,6 @@ _CLUSTER_SPLIT_SALT = "cl1"
 _CLUSTER_SPLIT_CASE = SP.sql_split_column(
     "rep", _CLUSTER_SPLIT_WEIGHTS, salt=_CLUSTER_SPLIT_SALT
 )
-
-
-
-
-def _sql_ivf_kmeans(iters: int) -> str:
-    """Generate the DuckDB oracle for an ``iters``-iteration Lloyd refine:
-    the same CTE block (assign -> explode dims -> decimal-exact means ->
-    regroup) stacked once per iteration — the SQL mirror of the operator's
-    materialize-per-iteration loop."""
-    assign = (
-        "(SELECT e.vec_id, e.v, cell FROM e, {cells}\n"
-        "       QUALIFY row_number() OVER (\n"
-        "         PARTITION BY e.vec_id\n"
-        "         ORDER BY round(list_cosine_similarity(v, cv), 6) DESC,"
-        " cell ASC) = 1)"
-    )
-    ctes = [
-        "e AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)",
-        "c0 AS (SELECT vec_id AS cell, v AS cv FROM e WHERE vec_id < 16)",
-    ]
-    for i in range(iters):
-        ctes += [
-            f"a{i} AS " + assign.format(cells=f"c{i}"),
-            f"px{i} AS (SELECT cell, u.p AS pos, u.x AS val\n"
-            f"       FROM a{i},\n"
-            "            unnest([{'p': i, 'x': v[i]}"
-            " for i in range(1, len(v) + 1)]) AS t(u))",
-            f"cent{i} AS (SELECT cell, pos,\n"
-            "           CAST(sum(CAST(val AS DECIMAL(38,12))) AS DOUBLE)"
-            " / count(*) AS cv_e\n"
-            f"         FROM px{i} GROUP BY 1, 2)",
-            f"c{i + 1} AS (SELECT cell, list(cv_e ORDER BY pos) AS cv"
-            f" FROM cent{i} GROUP BY 1)",
-        ]
-    fin = f"c{iters}"
-    ctes += [
-        "af AS " + assign.format(cells=fin),
-        "q AS (SELECT vec_id AS query_id, v AS qv FROM e WHERE vec_id < 8)",
-        f"probe AS (SELECT query_id, qv, cell FROM q, {fin}\n"
-        "      QUALIFY row_number() OVER (\n"
-        "        PARTITION BY query_id\n"
-        "        ORDER BY round(list_cosine_similarity(qv, cv), 6) DESC,"
-        " cell ASC) <= 2)",
-    ]
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        "SELECT query_id, af.vec_id AS neighbor_id,\n"
-        "       round(list_cosine_similarity(qv, af.v), 6) AS cosine\n"
-        "FROM probe p JOIN af ON af.cell = p.cell AND af.vec_id != p.query_id\n"
-        "QUALIFY row_number() OVER (\n"
-        "  PARTITION BY query_id\n"
-        "  ORDER BY round(list_cosine_similarity(qv, af.v), 6) DESC,"
-        " af.vec_id ASC) <= 5\n"
-        "ORDER BY query_id, cosine DESC, neighbor_id"
-    )
 
 
 
@@ -944,16 +886,14 @@ def _orphan_edge_sql(rel, child, ck, parent, pk) -> str:
 # is mid-initialization. The star re-exports keep every historical
 # `from plans.beyond import <entry>` import path working.
 from .beyond_dedup import *  # noqa: E402,F401,F403
-from .beyond_similarity import *  # noqa: E402,F401,F403
 from .beyond_text import *  # noqa: E402,F401,F403
 from .beyond_events import *  # noqa: E402,F401,F403
-from .beyond_multimodal import *  # noqa: E402,F401,F403
 from .beyond_streaming import *  # noqa: E402,F401,F403
 from .beyond_warehouse import *  # noqa: E402,F401,F403
 
 _TIER_MODULES = (
-    "beyond_dedup", "beyond_similarity", "beyond_text", "beyond_events",
-    "beyond_multimodal", "beyond_streaming", "beyond_warehouse",
+    "beyond_dedup", "beyond_text", "beyond_events", "beyond_streaming",
+    "beyond_warehouse",
 )
 
 

@@ -316,7 +316,7 @@ def tx_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM pw, s ORDER BY source
     """,
     # New r6 (locally pinned; r7 rotation candidate).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source mixture (the multilingual-sampling
@@ -603,7 +603,7 @@ def tx_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, gram
     """,
     # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_heavy_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent collocations (word bigrams with >0.1% corpus share) via
@@ -756,7 +756,7 @@ def tx_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s ORDER BY doc_id, chunk_idx
     """,
     # New r6 (locally pinned; future rotation candidate).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document CHUNKING — the context-window splitter of
@@ -1382,7 +1382,7 @@ _BPE_PACK_BUDGET = 512  # tokens per packed training sequence
     """,
     # New r9 (VERDICT r8 ask #6); flipped onto the driver surface in the
     # r9 rotation commit after both-scale pre-validation.
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-grade BPE merge-table application
@@ -1459,7 +1459,7 @@ def tx_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # New r9 (VERDICT r8 ask #6 follow-through: packing consumes REAL
     # tokenizer lengths); flipped onto the driver surface in the r9
     # rotation commit after both-scale pre-validation.
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing over REAL tokenizer lengths: the offset-bin

@@ -59,6 +59,11 @@ def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# The gold columns a top-k widget may group by; o_orderkey (row identity)
+# and qnum (the quarter filter's key) are not dimensions.
+DIMENSIONS = ("quarter", "nation_name", "region_name", "segment", "status", "priority")
+
+
 class Dashboard:
     """Cached-gold query facade; one instance per session + scale dir."""
 
@@ -71,10 +76,17 @@ class Dashboard:
         quarters: tuple[int, int] = (1, 4),
         statuses: list[str] | None = None,
     ) -> DataFrame:
-        """query_data analogue (streamlit.py:44-49): widget filters."""
-        df = self.gold.filter(
-            F.col("qnum").between(quarters[0], quarters[1])
-        )
+        """query_data analogue (streamlit.py:44-49): widget filters.
+
+        Bad parameters raise ``ValueError`` here, before any Spark job."""
+        lo, hi = quarters
+        if not 1 <= lo <= hi <= 4:
+            raise ValueError(
+                f"quarters must be (lo, hi) with 1 <= lo <= hi <= 4; got {quarters!r}"
+            )
+        if statuses is not None and not statuses:
+            raise ValueError("statuses must be None (all) or a non-empty list; got []")
+        df = self.gold.filter(F.col("qnum").between(lo, hi))
         if statuses is not None:
             df = df.filter(F.col("status").isin(statuses))
         return df
@@ -99,6 +111,10 @@ class Dashboard:
 
     def top_groups(self, key: str = "segment", k: int = 5, **filters) -> DataFrame:
         """Top-k panel family (streamlit.py:249-356), deterministic ties."""
+        if key not in DIMENSIONS:
+            raise ValueError(f"key must be one of {DIMENSIONS}; got {key!r}")
+        if k < 1:
+            raise ValueError(f"k must be >= 1; got {k!r}")
         return (
             self._filtered(**filters)
             .groupBy(key)

@@ -40,15 +40,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "o2_top5_types": ("part", "type", "types", "popular"),
     "dd_exact_dedup": ("duplicate", "duplicates", "dedup", "exact"),
     "dd_minhash_lsh": ("near", "similar", "documents", "minhash"),
-    # Vector-search intent routes to the SCALE path (partition-pruned IVF
-    # over the k-means-refined quantizer) by default; the brute-force
-    # linear scan is reachable only by explicitly asking for exactness
-    # (round-1/2 review: never route a 100 TB user to a full corpus scan).
-    "sim_ann_ivf_kmeans_iter3": ("nearest", "neighbors", "embedding", "vector"),
-    # Shares the intent terms so "exact nearest neighbors" outscores the
-    # ANN route (3 vs 2); without an exactness term the tie breaks to the
-    # lexicographically-first name — the ANN scale path.
-    "sim_topk_bruteforce": ("exact", "exhaustive", "bruteforce", "nearest", "neighbors"),
     "ev_tumbling_hourly": ("hourly", "events", "window"),
     "ev_sessionize": ("session", "sessions", "user", "activity"),
     "ev_funnel_vcp": ("funnel", "conversion", "purchase"),
@@ -70,7 +61,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "tx_pack_sequences": ("pack", "packing", "sequences", "bins", "batches"),
     "tx_decontaminate": ("contamination", "decontaminate", "leak", "benchmark", "overlap"),
     "st_stream_static_enrich": ("enrich", "enrichment", "dimension", "lookup"),
-    "sim_quantize_int8": ("quantize", "quantization", "int8", "compress", "compression"),
     "wh_expectations": ("expectations", "checks", "validate", "integrity", "constraints"),
     "wh_table_profile": ("profile", "profiling", "describe", "columns", "nulls"),
     "wh_scd2_history": ("history", "versioned", "scd", "scd2", "slowly", "changing"),
@@ -81,7 +71,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "tx_split_by_cluster": ("leakage", "safe", "cluster", "split", "holdout", "contamination"),
     "a15_hll_mergeable": ("sketch", "sketches", "mergeable", "hll", "hyperloglog"),
     "wh_incremental_rollup": ("incremental", "refresh", "rollup", "materialized", "maintain"),
-    "sim_hybrid_rrf": ("hybrid", "fusion", "fuse", "rrf", "keyword", "rerank"),
     "tx_unigram_logprob": ("perplexity", "likelihood", "logprob", "fluency"),
     "tx_heavy_collocations": ("frequent", "collocations", "bigrams", "heavy", "hitters"),
     "a16_rfm_segmentation": ("rfm", "recency", "frequency", "monetary", "segmentation"),
@@ -98,10 +87,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "a21_order_reconciliation": ("reconcile", "reconciliation", "mismatch", "discrepancy", "close"),
     "a22_brand_pagerank": ("pagerank", "centrality", "influence", "influential", "graph"),
     "ev_equidepth_histogram": ("equidepth", "depth", "equal", "frequency", "binned"),
-    "mm_wav_features": ("audio", "wav", "waveform", "rms", "loudness"),
-    "mm_bmp_pixels": ("image", "pixels", "brightness", "bmp", "decode"),
-    "mm_ahash_clusters": ("ahash", "perceptual", "images", "visually", "identical"),
-    "mm_avi_frames": ("video", "frames", "avi", "sample", "container"),
     "ev_attribution_first_touch": ("first", "earliest", "touch", "attribution", "origin"),
     "tx_bigram_logprob": ("bigram", "coherence", "transitions", "fluent", "interpolated"),
     "ev_mad_outliers": ("robust", "mad", "median", "deviation", "contaminated"),
@@ -125,10 +110,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "dd_simhash": ("simhash", "hamming", "bitwise", "64bit"),
     "dd_embedding_neardup_blocked": ("semantic", "neardup", "cosine", "paraphrase", "embedding"),
     "dd_neardup_components": ("connected", "components", "clusters", "transitive"),
-    "sim_ann_signlsh": ("lsh", "hyperplane", "sign", "random", "projection"),
-    "mm_blob_meta": ("metadata", "blob", "blobs", "binary", "bytes"),
-    "mm_features_resize": ("resize", "thumbnail", "grayscale", "downsample"),
-    "mm_frame_sample": ("keyframe", "keyframes", "nth", "subsample"),
     "tx_lang_id": ("language", "lang", "identify", "detect", "detection"),
     "tx_quality_score": ("quality", "score", "scores", "heuristic", "lowquality"),
     "tx_token_count": ("token", "tokens", "count", "counts", "bpe"),
@@ -141,11 +122,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "wh_zorder_skipping": ("zorder", "morton", "skipping", "layout"),
     "ev_attribution_linear": ("linear", "multitouch", "split", "evenly", "shared"),
     "ev_winsorized_stats": ("winsorized", "winsorize", "clipped", "clip", "trimmed"),
-    # No bare "k" keyword (ADVICE r7): any phrase tokenizing to a lone
-    # 'k' ("evaluate top k segments") would score for the ANN-recall
-    # route; rely on the multi-token evidence instead.
-    "sim_recall_at_k": ("recall", "ann", "evaluate", "evaluation", "accuracy", "groundtruth"),
-    "sim_ndcg_at_k": ("ndcg", "dcg", "graded", "discounted", "gain"),
     "wh_cdc_apply": ("cdc", "changelog", "apply", "tombstone", "binlog"),
     "a26_brand_communities": ("community", "communities", "propagation", "modular"),
     "a30_brand_ppr": ("related", "personalized", "pagerank", "recommendations", "seeded", "seed", "anchor"),
@@ -167,8 +143,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "tx_bpe_pack": ("packed", "budgets", "budget", "contexts", "tokenized"),
     "a29_cohort_ltv": ("ltv", "lifetime", "value", "cumulative", "cohort"),
     "wh_time_travel": ("travel", "version", "versions", "rollback", "roll", "earlier", "snapshot"),
-    "sim_embedding_covariance": ("covariance", "correlated", "whitening", "health", "dimensions"),
-    "sim_random_projection": ("projection", "project", "dimensionality", "reduce", "johnson"),
     "qa_chi_square_segment_status": ("independence", "independent", "chisquare", "chi", "association", "status"),
     "qa_psi_price_drift": ("drift", "drifted", "drifting", "psi", "stability", "population", "distribution"),
     "qa_ks_two_sample": ("kolmogorov", "smirnov", "ks", "distributions", "differ"),
@@ -176,13 +150,11 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "qa_fdr_bh_segments": ("fdr", "benjamini", "hochberg", "multiple", "corrected"),
     # Round-10 batch (VERDICT r9 asks #3-#6).
     "qa_fdr_bh_spike_in": ("spike", "spikein", "calibration", "planted", "controls"),
-    "mm_ahash_neardups": ("neardup", "neardups", "perturbed", "reencoded", "flipped"),
     "tx_bpe_train_apply": ("retokenize", "retokenized", "applying", "trained", "tokenization"),
     "tx_bpe_fertility": ("fertility", "fertile", "efficiency", "multilingual", "coverage"),
     "st_bpe_tokenize": ("tokenizing", "ingest", "arriving", "land", "landing"),
     # Round-11 batch (VERDICT r10 asks #2/#4/#5).
     "qa_fdr_storey_spike_in": ("storey", "adaptive", "qvalue", "pi0", "null", "fraction"),
-    "sim_pca_power": ("pca", "principal", "component", "eigenvector", "whitening"),
     "tpch_q1_pricing_summary": ("pricing", "lineitem", "returnflag", "charge", "shipped"),
     "tpch_q3_shipping_priority": ("unshipped", "shipping", "highest", "orders", "building"),
     "tpch_q5_local_supplier_volume": ("supplier", "local", "volume", "region", "asia"),
@@ -265,19 +237,27 @@ NO_ROUTE: frozenset[str] = frozenset({
     "j6_topk_semi",               # J6 parity shape
     "j7_name_remap",              # J7 parity shape
     "o4_group_total_order",       # O4 parity shape
-    "sim_ann_ivf",                # iter3 k-means variant is routed
-    "sim_ann_ivf_kmeans",         # iter3 variant is routed
     "st_cdc_apply",               # wh_cdc_apply is the routed face
     "tx_bpe_apply_arrow",         # tx_bpe_apply is the routed face (twin)
     "tx_bpe_apply64",             # tx_bpe_apply is the routed face (depth twin)
     "st_bpe_tokenize_learned",    # tx_bpe_train_apply is the routed face (stream twin)
-    "sim_pca_deflate",            # sim_pca_power is the routed face (top-k deflation variant)
     "st_sessionize_stateful",     # st_sessionize is the routed face
     "st_tumbling_hourly",         # ev_tumbling_hourly is the routed face
     "w4_surrogate_keys",          # W4 parity shape
     "x1_except",                  # X1 parity shape
     "x2_union_intersect",         # X1 parity shape
 })
+
+
+# Functions that call arbitrary JVM methods from inside a query. In the
+# parsed (unresolved) plan a call prints as 'name( — optionally qualified,
+# as in 'system.builtin.reflect( — at any depth (CTEs, subqueries); a
+# string literal prints without the leading quote, so it cannot match.
+# The plan is printed with no field limit: the default toString elides
+# every select-list item past spark.sql.debug.maxToStringFields (25).
+_REFLECTION_CALL = re.compile(
+    r"'(?:[\w.]+\.)?(?:reflect|java_method|try_reflect)\(", re.IGNORECASE
+)
 
 
 def route(text: str) -> str:
@@ -307,14 +287,19 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     ``TABLE t``, set operations). Spark's own query-only parser checks it
     before any view is registered, so a command or a write (DDL, DML,
     ``SET``, ``CACHE``, ``ADD JAR``, ``EXPLAIN``, a multi-statement
-    script) raises ``ValueError`` without starting a Spark job. This is
-    the sanctioned target for an LLM NL->SQL layer, instead of exec-ing
-    generated host code like the reference does."""
+    script) raises ``ValueError`` without starting a Spark job, and so
+    does a query that calls ``reflect``, ``java_method`` or
+    ``try_reflect``. This is the sanctioned target for an LLM NL->SQL
+    layer, instead of exec-ing generated host code like the reference
+    does."""
+    rejected = f"run_sql accepts only a single read-only query; rejected {sql!r}"
     try:
-        spark._jsparkSession.sessionState().sqlParser().parseQuery(sql)
+        plan = spark._jsparkSession.sessionState().sqlParser().parseQuery(sql)
     except ParseException as e:
-        raise ValueError(
-            f"run_sql accepts only a single read-only query; rejected {sql!r}"
-        ) from e
+        raise ValueError(rejected) from e
+    # treeString(verbose, addSuffix, maxFields, printOperatorId,
+    # printOutputColumns)
+    if _REFLECTION_CALL.search(plan.treeString(True, False, 2**31 - 1, False, False)):
+        raise ValueError(rejected)
     register_views(spark, sf_dir)
     return spark.sql(sql)

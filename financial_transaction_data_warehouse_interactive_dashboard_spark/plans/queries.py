@@ -55,7 +55,7 @@ def query(name: str, oracle: str | None, driver: bool = True):
     The external driver caps its per-round correctness sweep at 50
     queries and samples beyond that, so the driver surface holds one
     entry per operator family; strict-subset/sibling variants (e.g. the
-    1-iteration Lloyd next to the 3-iteration one, or the per-metric
+    64-merge BPE twin next to the 12-merge one, or the per-metric
     text queries folded into tx_text_profile) are demoted to
     locally-pinned status so every driver-facing query gets a
     CORRECTNESS row every round.
@@ -1200,4 +1200,3 @@ from . import beyond  # noqa: E402,F401
 from . import drift  # noqa: E402,F401
 from . import finance  # noqa: E402,F401
 from . import tpch  # noqa: E402,F401
-from . import vectors  # noqa: E402,F401

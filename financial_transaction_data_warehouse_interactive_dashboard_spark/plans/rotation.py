@@ -500,11 +500,14 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
         # entries, its stream and warehouse lifecycle, the pl_* pipeline
         # tier built on it and the embedding-PSI monitors; RETIRED
         # below) was deleted from the registry, taking six driver seats
-        # with it. NO first-timers: the six seats refill as REFRESH
+        # with it. The rest of the vector-search tier and the multimodal
+        # tier followed, taking five more (four of them this round's own
+        # refills). NO first-timers: the seats refill as REFRESH
         # promotions, the head of REFRESH_QUEUE once the retired names
-        # are dropped (ev_transition_matrix, sim_embedding_covariance,
-        # sim_hybrid_rrf, sim_ndcg_at_k, sim_random_projection,
-        # tx_bigram_logprob) — deliberately NOT listed as "in".
+        # are dropped (ev_transition_matrix, tx_bigram_logprob,
+        # tx_bpe_apply, tx_bpe_pack, tx_chunk_documents,
+        # tx_heavy_collocations, tx_mixture_weights) — deliberately NOT
+        # listed as "in".
         "in": (),
         "out": (
             # deleted with the PQ search tier (not demoted: these
@@ -512,15 +515,20 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
             "sim_ann_pq_adc", "pl_dedup_before_index", "pl_hybrid_rerank",
             "st_canonical_serve", "wh_canonical_publish",
             "pl_incremental_curate",
+            # deleted with the vector-search and multimodal tiers
+            "sim_embedding_covariance", "sim_hybrid_rrf", "sim_ndcg_at_k",
+            "sim_random_projection", "sim_recall_at_k",
         ),
     },
 }
 
 #: Registry entries deleted with the product-quantization search tier
 #: (PQ / IVF-PQ / OPQ search and its warehouse and stream lifecycle, the
-#: pipeline-fusion tier built on it, and the embedding-PSI monitors).
-#: The history above still names them; they may no longer appear on the
-#: surface or in any queue.
+#: pipeline-fusion tier built on it, and the embedding-PSI monitors),
+#: then with the rest of the vector-search tier (exact and flat-index
+#: search, retrieval metrics, embedding linear algebra) and the
+#: multimodal tier. The history above still names them; they may no
+#: longer appear on the surface or in any queue.
 RETIRED: frozenset[str] = frozenset({
     "pl_dedup_before_index", "pl_hybrid_rerank",
     "pl_incremental_curate", "pl_learned_rerank", "pl_retrain_on_drift",
@@ -533,6 +541,16 @@ RETIRED: frozenset[str] = frozenset({
     "wh_ivfpq256_publish", "wh_ivfpq256_retrain", "wh_ivfpq_append",
     "wh_ivfpq_compact", "wh_ivfpq_publish", "wh_ivfpq_retrain",
     "wh_opq256_publish",
+    # vector-search tier
+    "sim_ann_ivf", "sim_ann_ivf_kmeans", "sim_ann_ivf_kmeans_iter3",
+    "sim_ann_signlsh", "sim_embedding_covariance", "sim_hybrid_rrf",
+    "sim_ndcg_at_k", "sim_pca_deflate", "sim_pca_power",
+    "sim_quantize_int8", "sim_random_projection", "sim_recall_at_k",
+    "sim_topk_bruteforce",
+    # multimodal tier
+    "mm_ahash_clusters", "mm_ahash_neardups", "mm_avi_frames",
+    "mm_blob_meta", "mm_bmp_pixels", "mm_features_resize",
+    "mm_frame_sample", "mm_wav_features",
 })
 
 #: Re-promotions: entries that already held a driver row but were
@@ -614,14 +632,12 @@ REFRESH_QUEUE: tuple[str, ...] = (
     # The round-16 flip consumed the previous queue's 25-name prefix
     # (the r8-rest names through tx_stratified_sample, plus the r9
     # vintage head through ev_top_paths). Round 18 dropped the
-    # RETIRED search-tier names and promoted the next six
-    # (ev_transition_matrix through tx_bigram_logprob) into the seats
-    # the retired entries left; what remains is the tail of the r9
-    # vintage followed by the full r10 and r12 vintages (alphabetical
-    # within a vintage = the ties-by-name rule).
+    # RETIRED names and promoted the next eleven (ev_transition_matrix
+    # through tx_mixture_weights) into the seats the retired entries
+    # left; what remains is the tail of the r9 vintage followed by the
+    # full r10 and r12 vintages (alphabetical within a vintage = the
+    # ties-by-name rule).
     # r9 rest
-    "tx_bpe_apply", "tx_bpe_pack", "tx_chunk_documents",
-    "tx_heavy_collocations", "tx_mixture_weights",
     "tx_negative_sampling", "tx_pack_sequences", "tx_repetition_ratio",
     "tx_unigram_logprob", "tx_weighted_sample", "w6_user_day_gapfill",
     # r10 vintage
@@ -630,10 +646,8 @@ REFRESH_QUEUE: tuple[str, ...] = (
     "c1_timestamp_roundtrip", "dd_embedding_neardup", "dd_simhash",
     "dd_simhash_pairs", "ev_props_extract", "ev_sessionize",
     "ev_tumbling_hourly", "ev_value_histogram", "f4_contains",
-    "j7_name_remap", "mm_ahash_clusters", "mm_ahash_neardups",
-    "mm_frame_sample", "o2_top5_types", "qa_fdr_bh_segments",
-    "qa_fdr_bh_spike_in", "sim_ann_ivf", "sim_ann_ivf_kmeans",
-    "tx_bpe_apply_arrow", "tx_bpe_train", "tx_bpe_train_apply",
+    "j7_name_remap", "o2_top5_types", "qa_fdr_bh_segments",
+    "qa_fdr_bh_spike_in", "tx_bpe_apply_arrow", "tx_bpe_train", "tx_bpe_train_apply",
     "tx_fingerprint", "tx_lang_id", "tx_quality_score", "tx_token_count",
     "x1_except",
     # r12 vintage
@@ -643,8 +657,7 @@ REFRESH_QUEUE: tuple[str, ...] = (
     "dd_corpus_clean", "dd_embedding_neardup_blocked", "dd_exact_dedup",
     "dd_minhash_lsh", "dd_neardup_components", "dd_ngram_jaccard",
     "ev_asof_purchase", "ev_funnel_vcp", "ev_rolling_7d",
-    "mm_features_resize", "q2_top_priorities_q4", "q3_quarter_ranking",
-    "sim_topk_bruteforce",
+    "q2_top_priorities_q4", "q3_quarter_ranking",
     "st_bpe_tokenize", "st_bpe_tokenize_learned", "st_sessionize_stateful",
     "st_tumbling_hourly", "tx_bpe_apply64", "tx_bpe_fertility",
     "w4_surrogate_keys",

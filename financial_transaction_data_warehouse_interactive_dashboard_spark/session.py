@@ -21,8 +21,6 @@ import os
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def get_spark(app_name: str = "ftdw-spark") -> SparkSession:
     """Build (or fetch) the engine's SparkSession.
@@ -33,26 +31,10 @@ def get_spark(app_name: str = "ftdw-spark") -> SparkSession:
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     shuffle_parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", "32")
-    # Join strategy / shuffle codec (r17, VERDICT r16 ask #9): measured
-    # on a cluster-shaped synthetic (30M-row join, 0.26-0.38 GB real
-    # shuffle, cold per run, guide section 9) rather than the suite's
-    # KB-scale shuffles: ShuffledHashJoin beat SortMergeJoin ~30%
-    # (3.9-4.2 s vs 5.3-7.2 s across 2 runs x 2 codecs) where its size
-    # conditions hold, and zstd cut shuffle bytes 32% (0.38 -> 0.26 GB)
-    # at equal-or-slightly-worse LOCAL wall (CPU-for-bytes — wins when
-    # the network is the bottleneck, loses on a single box with fast
-    # local disk). Local defaults therefore stay Spark's (SMJ preferred,
-    # lz4) so the ~89 pinned plans and the driver's bench remain
-    # comparable; a cluster deployment flips them with the env knobs.
-    # Full table in OPTIMIZATION_r17.md.
-    prefer_smj = os.environ.get("SPARK_GRAFT_PREFER_SMJ", "true")
-    io_codec = os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", shuffle_parts)
-        .config("spark.sql.join.preferSortMergeJoin", prefer_smj)
-        .config("spark.io.compression.codec", io_codec)
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")

@@ -49,6 +49,18 @@ def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
+def jobs_in_group(spark, group, fn):
+    """Run ``fn`` under a fresh job group; return the ids of the Spark
+    jobs it started (``[]`` proves a call failed before any job)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
+
+
 @pytest.fixture(scope="session")
 def duck_oracle():
     con = make_duck(SF_ORACLE)

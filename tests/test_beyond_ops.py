@@ -1,7 +1,7 @@
 """Beyond-reference operator tests: portable-hash parity pins, LSH recall,
-streaming == batch equivalence, the stateful sessionizer, and the
-multimodal decode plumbing. (Oracle parity for every registered query is
-covered generically by test_oracle_parity.py.)"""
+streaming == batch equivalence and the stateful sessionizer. (Oracle
+parity for every registered query is covered generically by
+test_oracle_parity.py.)"""
 
 from __future__ import annotations
 
@@ -17,9 +17,6 @@ from financial_transaction_data_warehouse_interactive_dashboard_spark.functions 
 )
 from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
     dedup as D,
-)
-from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-    multimodal as M,
 )
 from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
     sampling as SP,
@@ -130,34 +127,6 @@ def test_simhash_blocking_is_lossless(spark):
         (r["id_a"], r["id_b"]) for r in D.simhash_pairs(docs, max_hamming=3).collect()
     }
     assert blocked == brute
-
-
-def test_ann_recall_vs_bruteforce(spark):
-    """Approximation quality is part of the contract: both ANN variants
-    must recover a reasonable fraction of the true top-5 (they probe a
-    fraction of the corpus; on random fixture vectors the true neighbors
-    concentrate in no bucket, so recall here is a floor, not a showcase).
-    Exactness of what they DO return is oracle-checked elsewhere."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    true5 = {
-        (r["query_id"], r["neighbor_id"])
-        for r in S.topk_bruteforce(emb, n_queries=8, k=5).collect()
-    }
-
-    def recall(df):
-        got = {(r["query_id"], r["neighbor_id"]) for r in df.collect()}
-        return len(got & true5) / len(true5)
-
-    r_lsh = recall(S.topk_ann_signlsh(emb, n_queries=8, k=5))
-    r_ivf = recall(S.topk_ann_ivf(emb, n_queries=8, k=5))
-    assert r_lsh > 0.0 and r_ivf > 0.0
-    # IVF probes nprobe/n_cells = 1/8 of the corpus; sign-LSH one of 2^8
-    # buckets. Sanity floor only — structure quality needs structured data.
-    assert r_ivf >= 0.1
 
 
 def test_stream_equals_batch_tumbling(spark):
@@ -753,125 +722,6 @@ def test_sessionizer_under_rocksdb_state_store(spark):
     assert got == base and len(got) > 0
 
 
-def test_multimodal_plumbing(spark):
-    """Binary column + mapInPandas metadata: deterministic fake decode,
-    real Arrow batching; unknown magic is a data error (ValueError),
-    no stubs left."""
-    docs = M.attach_blob(load_table(spark, SF_SMOKE, "documents").limit(10))
-    assert dict(docs.dtypes)["blob"] == "binary"
-    meta = M.blob_metadata(docs).collect()
-    assert len(meta) == 10
-    for r in meta:
-        assert 1 <= r["width"] <= 1024 and 1 <= r["height"] <= 1024
-        assert r["format"] == "fake" and r["n_bytes"] > 0
-    with pytest.raises(ValueError, match="unrecognized media magic"):
-        M.decode_blob_meta(b"\x89PNG")
-
-
-def test_real_format_decoders():
-    """decode_blob_meta parses REAL format headers (no Spark needed).
-
-    BMP: encode_bmp writes an actual BITMAPFILEHEADER/BITMAPINFOHEADER +
-    padded scanlines; decode reads the dword dims back, including the
-    top-down (negative height) variant and the file-size arithmetic.
-    PPM: ASCII token header with interleaved comments. WAV: RIFF chunk
-    walk past a leading junk chunk, odd-size word alignment honored."""
-    import struct
-
-    # BMP round-trip at padding-relevant widths (w*3 % 4 cycles 0..3).
-    for w, h in [(1, 1), (2, 3), (3, 2), (4, 5), (64, 64), (641, 7)]:
-        blob = M.encode_bmp(w, h, gray=200)
-        assert M.decode_blob_meta(blob) == (w, h, "bmp")
-        row = w * 3
-        assert len(blob) == 54 + (row + (-row) % 4) * h
-    # Top-down BMP: negative biHeight, |h| decoded.
-    td = bytearray(M.encode_bmp(6, 4))
-    struct.pack_into("<i", td, 22, -4)
-    assert M.decode_blob_meta(bytes(td)) == (6, 4, "bmp")
-
-    # PPM with comments in the header.
-    ppm = b"P6\n# a comment\n  640 # inline\n480\n255\n" + b"\x00" * 9
-    assert M.decode_blob_meta(ppm) == (640, 480, "ppm")
-    assert M.decode_blob_meta(b"P3 2 3 255 0 0 0") == (2, 3, "ppm")
-
-    # WAV: junk chunk (odd size -> pad byte) before fmt; stereo 44.1k.
-    fmt = struct.pack("<HHIIHH", 1, 2, 44100, 176400, 4, 16)
-    wav = (
-        b"RIFF" + struct.pack("<I", 0) + b"WAVE"
-        + b"JUNK" + struct.pack("<I", 3) + b"abc\x00"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    )
-    assert M.decode_blob_meta(wav) == (44100, 2, "wav")
-
-    with pytest.raises(ValueError):
-        M.decode_blob_meta(b"RIFF\x00\x00\x00\x00AVI ")  # RIFF, not WAVE
-
-
-def test_bmp_roundtrip_pipeline_matches_module_api(spark):
-    """The self-contained task closure in bmp_roundtrip_meta must agree
-    with the module-level encode_bmp/decode_blob_meta API row for row
-    (the closure duplicates the struct layout to stay worker-import-safe;
-    this is the drift guard)."""
-    docs = load_table(spark, SF_SMOKE, "documents").limit(20)
-    got = {r["doc_id"]: r for r in M.bmp_roundtrip_meta(docs).collect()}
-    assert len(got) == 20
-    for i, r in got.items():
-        blob = M.encode_bmp(i % 64 + 1, i * 7 % 64 + 1, gray=i % 256)
-        w, h, fmt = M.decode_blob_meta(blob)
-        assert (r["width"], r["height"], r["format"]) == (w, h, fmt)
-        assert r["n_bytes"] == len(blob)
-
-
-def test_wav_features_agree_with_stdlib_wave(spark):
-    """The WAV byte path in wav_pcm_features must be a REAL WAV: write
-    the same samples through Python's stdlib `wave` module (an
-    independent RIFF implementation) and our chunk-walking decoder must
-    pull identical rate and samples from both files; features recomputed
-    over the stdlib-written bytes match the pipeline's output."""
-    import io
-    import math
-    import struct
-    import wave
-
-    import numpy as np
-
-    docs = load_table(spark, SF_SMOKE, "documents").limit(10)
-    got = {r["doc_id"]: r for r in M.wav_pcm_features(docs).collect()}
-    assert len(got) == 10
-    for i, r in got.items():
-        n = i % 100 + 50
-        rate = 8000 + (i % 4) * 4000
-        samples = np.array(
-            [((i * 37 + j * 17) % 2048) - 1024 for j in range(n)],
-            dtype="<i2",
-        )
-        buf = io.BytesIO()
-        with wave.open(buf, "wb") as w:
-            w.setnchannels(1)
-            w.setsampwidth(2)
-            w.setframerate(rate)
-            w.writeframes(samples.tobytes())
-        blob = buf.getvalue()
-        # Our generic header decoder reads the stdlib-written file.
-        got_rate, got_ch, fmt = M.decode_blob_meta(blob)
-        assert (got_rate, got_ch, fmt) == (rate, 1, "wav")
-        # Walk to the data chunk the same way the pipeline closure does.
-        pos, raw = 12, None
-        while pos + 8 <= len(blob):
-            cid, size = struct.unpack_from("<4sI", blob, pos)
-            if cid == b"data":
-                raw = blob[pos + 8 : pos + 8 + size]
-            pos += 8 + size + (size & 1)
-        s = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-        assert np.array_equal(s, samples.astype(np.int64))
-        sg = np.where(s >= 0, 1, -1)
-        assert r["n_samples"] == n
-        assert r["sample_rate"] == rate
-        assert r["peak"] == int(np.max(np.abs(s)))
-        assert r["rms"] == round(math.sqrt(int(np.sum(s * s)) / n), 6)
-        assert r["zero_crossings"] == int(np.sum(sg[1:] != sg[:-1]))
-
-
 def test_scd2_versioning_edges(spark):
     """scd2_from_changes: run-length collapse, NULL-safe attr compare,
     same-ts tie determinism; scd2_lookup: version-at-ts semantics incl.
@@ -1223,12 +1073,6 @@ def test_nlq_routing(spark):
         "ev_ewma_daily"
     )
     assert nlq.route("conversion funnel to purchase") == "ev_funnel_vcp"
-    # Vector-search intent defaults to the ANN SCALE path; the linear
-    # brute-force scan requires an explicit exactness term (round-2 ask).
-    assert nlq.route("nearest neighbors of this embedding vector") == (
-        "sim_ann_ivf_kmeans_iter3"
-    )
-    assert nlq.route("exact nearest neighbors") == "sim_topk_bruteforce"
     # Round-4 operator tier: one phrase per op (r4 verdict ask #5).
     assert nlq.route("redact pii like email addresses") == "tx_pii_scrub"
     assert nlq.route("decontaminate against the benchmark test set") == (
@@ -1240,7 +1084,6 @@ def test_nlq_routing(spark):
     assert nlq.route("profile the columns and nulls of this table") == (
         "wh_table_profile"
     )
-    assert nlq.route("quantize embeddings to int8") == "sim_quantize_int8"
     assert nlq.route("pack sequences into training batches") == (
         "tx_pack_sequences"
     )
@@ -1262,9 +1105,6 @@ def test_nlq_routing(spark):
     )
     assert nlq.route("mergeable hyperloglog sketches") == "a15_hll_mergeable"
     assert nlq.route("incremental rollup refresh") == "wh_incremental_rollup"
-    assert nlq.route("hybrid keyword vector fusion search") == (
-        "sim_hybrid_rrf"
-    )
     assert nlq.route("perplexity likelihood scoring") == (
         "tx_unigram_logprob"
     )
@@ -1313,15 +1153,6 @@ def test_nlq_routing(spark):
     )
     assert nlq.route("equi depth histogram equal frequency bins") == (
         "ev_equidepth_histogram"
-    )
-    assert nlq.route("audio waveform rms loudness features") == (
-        "mm_wav_features"
-    )
-    assert nlq.route("decode image pixels brightness stats") == (
-        "mm_bmp_pixels"
-    )
-    assert nlq.route("sample video frames from the container") == (
-        "mm_avi_frames"
     )
     assert nlq.route("first touch attribution earliest origin") == (
         "ev_attribution_first_touch"
@@ -1385,14 +1216,6 @@ def test_nlq_routing(spark):
     assert nlq.route("connected components transitive clusters") == (
         "dd_neardup_components"
     )
-    assert nlq.route("random hyperplane sign lsh projection") == (
-        "sim_ann_signlsh"
-    )
-    assert nlq.route("binary blob metadata bytes") == "mm_blob_meta"
-    assert nlq.route("resize to grayscale thumbnail") == (
-        "mm_features_resize"
-    )
-    assert nlq.route("subsample every nth keyframe") == "mm_frame_sample"
     assert nlq.route("identify the language of each document") == (
         "tx_lang_id"
     )
@@ -1424,17 +1247,11 @@ def test_nlq_routing(spark):
     assert nlq.route("winsorized stats clipped at percentiles") == (
         "ev_winsorized_stats"
     )
-    assert nlq.route("evaluate the recall accuracy of the index") == (
-        "sim_recall_at_k"
-    )
     assert nlq.route("apply the cdc changelog with tombstones") == (
         "wh_cdc_apply"
     )
     assert nlq.route("compact the fragmented partitions") == (
         "wh_compaction"
-    )
-    assert nlq.route("ndcg graded ranking quality of the index") == (
-        "sim_ndcg_at_k"
     )
     assert nlq.route("bpe tokenizer merges subword") == "tx_bpe_apply"
     assert nlq.route("packed tokenized context budgets") == "tx_bpe_pack"
@@ -1443,9 +1260,6 @@ def test_nlq_routing(spark):
     )
     assert nlq.route("benjamini hochberg fdr corrected tests") == (
         "qa_fdr_bh_segments"
-    )
-    assert nlq.route("find visually identical images perceptual") == (
-        "mm_ahash_clusters"
     )
     assert nlq.route("detect communities by label propagation") == (
         "a26_brand_communities"
@@ -1875,52 +1689,6 @@ def test_incremental_dedup_folds_to_batch_operator(spark):
     # survivor's count (batch-1 'alpha' stays at 1 despite 2 replays).
     assert survivors[10] == 2
     assert survivors[0] == 1
-
-
-def test_ahash_clusters_planted_duplicates(spark):
-    """The aHash clustering must find the fixture's REAL duplicate
-    structure: doc_id and doc_id+256 render byte-identical BMPs (same
-    w/h mod 64, same gray offset mod 256) so every such pair shares a
-    cluster; all doc_id % 64 == 0 images are 1x1 (uniform) and collapse
-    into the all-zero-hash class together."""
-    from collections import defaultdict
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        multimodal as M,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-
-    docs = load_table(spark, SF_SMOKE, "documents").select("doc_id")
-    n_docs = docs.count()
-    rows = M.bmp_ahash(docs).collect()
-    by_doc = {r["doc_id"]: (r["ahash_hi"], r["ahash_lo"]) for r in rows}
-    for d in range(n_docs - 256):
-        assert by_doc[d] == by_doc[d + 256], d
-    uniform = [d for d in by_doc if d % 64 == 0]
-    assert len(uniform) >= 2
-    assert {by_doc[d] for d in uniform} == {(0, 0)}
-    # and the registry entry reports those clusters
-    clusters = defaultdict(set)
-    for d, h in by_doc.items():
-        clusters[h].add(d)
-    want = {
-        (h, len(ds), min(ds), max(ds))
-        for h, ds in clusters.items()
-        if len(ds) >= 2
-    }
-    got = {
-        ((r["ahash_hi"], r["ahash_lo"]), r["n_docs"], r["min_doc"],
-         r["max_doc"])
-        for r in REGISTRY["mm_ahash_clusters"].spark(
-            spark, SF_SMOKE
-        ).collect()
-    }
-    assert got == want
 
 
 def test_segment_dedup_planted_boilerplate(spark):
@@ -2469,38 +2237,6 @@ def test_partial_window_convention_unified(spark):
         assert days == observed, (name, days ^ observed)
 
 
-def test_ahash_neardup_planted_twins_all_surface(spark):
-    """mm_ahash_neardups' planted control (VERDICT r9 ask #4): every
-    100th document's 1-bit-flipped twin must surface with
-    min_hamming == 1 and its source among the neighbors — banding must
-    be lossless on the minimal perturbation in every band (the flip
-    bit rotates through all four). Exact-duplicate classes (hamming 0)
-    must NOT appear as near-dups of themselves."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.beyond_multimodal import (
-        _AHASH_TWIN_OFFSET,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.registry import (
-        load_table,
-    )
-
-    rows = {
-        r["doc_id"]: r
-        for r in R["mm_ahash_neardups"].spark(spark, SF_SMOKE).collect()
-    }
-    n_docs = load_table(spark, SF_SMOKE, "documents").count()
-    planted = [d for d in range(0, n_docs, 100)]
-    assert planted, "fixture must contain planted ids"
-    for d in planted:
-        twin = d + _AHASH_TWIN_OFFSET
-        assert twin in rows, f"planted twin {twin} missing"
-        assert rows[twin]["min_hamming"] == 1, rows[twin]
-    for r in rows.values():
-        assert 1 <= r["min_hamming"] <= 3
-
-
 def test_bpe_arrow_path_equals_expression_path(spark):
     """tx_bpe_apply_arrow's whole claim, checked Spark-vs-Spark (the
     oracle twin checks it engine-cross): the Arrow mapInPandas
@@ -2550,49 +2286,6 @@ def test_bpe_arrow_path_null_text_contract(spark):
     assert arrow[2] == [] and expr[2] == []
     v = T.bpe_vocab()
     assert [v[t] for t in arrow[0]] == expr[0]
-
-
-def test_pca_power_recovers_planted_dominant_direction(spark):
-    """sim_pca_power's convergence claim, checked against numpy on a
-    PLANTED corpus with a dominant principal axis (the fixture's
-    isotropic embeddings have a small eigengap, so convergence quality
-    must be proven where ground truth exists): 3 power iterations must
-    align with numpy's top eigenvector of the centered covariance to
-    |cos| > 0.99 and estimate the top eigenvalue within 5%. Also pins
-    the fixture-run output shape and the sign convention (pc1_9[0] >= 0)."""
-    import numpy as np
-
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators.similarity import (
-        pca_power_top1,
-    )
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
-        REGISTRY as R,
-    )
-
-    rng_free = [
-        [float(i % 7) - 3.0 + 10.0 * ((i * 37) % 11 - 5), (i % 5) / 5.0,
-         ((i * 13) % 9) / 9.0, (i % 3) / 3.0]
-        for i in range(24)
-    ]
-    # dominant variance along axis 0 by construction
-    emb = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(rng_free)],
-        "vec_id bigint, embedding array<double>",
-    )
-    rows = pca_power_top1(emb, iterations=3).collect()
-    pc = np.array([r["pc1_9"] for r in sorted(rows, key=lambda r: r["pos"])])
-    lam = rows[0]["lambda9"]
-    X = np.array(rng_free)
-    C = np.cov(X.T, bias=True)
-    evals, evecs = np.linalg.eigh(C)
-    v1, l1 = evecs[:, -1], evals[-1]
-    assert abs(float(pc @ v1)) > 0.99, (pc, v1)
-    assert abs(lam - l1) / l1 < 0.05, (lam, l1)
-
-    out = R["sim_pca_power"].spark(spark, SF_SMOKE).collect()
-    assert len(out) == 64
-    assert out[0]["pc1_9"] >= 0  # sign convention
-    assert len({r["lambda9"] for r in out}) == 1
 
 
 def test_storey_adaptive_fdr_superset_and_calibration(spark):

@@ -3,6 +3,7 @@ consistent with the registry's star-join queries."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.dashboard import (
@@ -12,7 +13,7 @@ from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.quer
     REGISTRY,
 )
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, jobs_in_group
 
 
 def test_dashboard_widget_queries(spark):
@@ -41,3 +42,36 @@ def test_dashboard_widget_queries(spark):
         assert kpi["total"] == kpi["finished_tx"] == direct
     finally:
         d.close()
+
+
+@pytest.fixture(scope="module")
+def dash(spark):
+    d = Dashboard(spark, SF_SMOKE)
+    yield d
+    d.close()
+
+
+BAD_WIDGET_CALLS = [
+    ("kpis", {"statuses": []}),
+    ("kpis", {"quarters": (4, 1)}),
+    ("kpis", {"quarters": (0, 9)}),
+    ("top_groups", {"key": "o_orderkey"}),
+    ("top_groups", {"key": "bogus"}),
+    ("top_groups", {"k": 0}),
+]
+
+
+@pytest.mark.parametrize(
+    "widget,params",
+    BAD_WIDGET_CALLS,
+    ids=[f"{w}-{p}" for w, p in BAD_WIDGET_CALLS],
+)
+def test_widget_rejects_bad_parameters_before_any_job(spark, dash, widget, params):
+    """Each invalid widget input raises ValueError naming the allowed
+    values, and the status tracker sees no job for the call."""
+
+    def call():
+        with pytest.raises(ValueError, match="must be"):
+            getattr(dash, widget)(**params)
+
+    assert jobs_in_group(spark, f"widget_reject_{widget}", call) == []

@@ -436,30 +436,6 @@ def test_scd2_history_single_key_shuffle(spark):
     assert len(re.findall(r"Exchange rangepartitioning", plan)) == 1
 
 
-def test_hybrid_rrf_broadcasts_small_sides(spark):
-    """sim_hybrid_rrf: vocabulary-sized frames (document frequency, the
-    1-row corpus count, the per-query term lists) must ride broadcast
-    joins; a sort-merge join against the token stream would shuffle the
-    whole inverted index per query batch. The ONE allowed SMJ is the
-    full-outer rank-fusion join (both sides query-sample-bounded;
-    Spark's BroadcastHashJoin cannot build full outer)."""
-    plan = plan_of(REGISTRY["sim_hybrid_rrf"].spark(spark, SF_SMOKE))
-    assert "BroadcastHashJoin" in plan
-    assert plan.count("SortMergeJoin") <= 2  # tree + detail header once
-    assert "CartesianProduct" not in plan
-
-
-def test_retrieval_eval_family_has_no_smj(spark):
-    """The retrieval-eval compositions (recall@k, NDCG@k) join only
-    query-sample-bounded frames (per-query aggregates, exact top-k
-    frontiers) — every such join must broadcast (r9 audit: these were
-    silently SortMergeJoining 8-to-40-row frames, paying 2-4 shuffles
-    per entry)."""
-    for name in ("sim_recall_at_k", "sim_ndcg_at_k"):
-        plan = plan_of(REGISTRY[name].spark(spark, SF_SMOKE))
-        assert "SortMergeJoin" not in plan, name
-
-
 def test_bpe_apply_is_map_only(spark):
     """tx_bpe_apply must stay a zero-shuffle codegen stage over the
     documents scan (the tx_pii_scrub discipline): no Exchange in the
@@ -799,7 +775,7 @@ def test_two_phase_rank_edges(spark):
 
 
 # ---------------------------------------------------------------------------
-# r6 statistical/vector tier: plan-shape pins
+# r6 statistical tier: plan-shape pins
 # ---------------------------------------------------------------------------
 
 
@@ -813,24 +789,6 @@ def test_chi_square_broadcasts_all_dimension_sides(spark):
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
     assert "SortMergeJoin" not in plan
-
-
-def test_random_projection_is_map_only(spark):
-    """JL projection must fuse into the scan: no join anywhere, and the
-    only Exchange is the final presentation orderBy."""
-    plan = plan_of(REGISTRY["sim_random_projection"].spark(spark, SF_SMOKE))
-    assert "Join" not in plan
-    assert plan.count("Exchange") <= 2  # rangepartitioning for orderBy
-
-
-def test_covariance_is_single_reduction(spark):
-    """The 8x8 covariance block computes all 44 moments in ONE scalar
-    aggregate over one scan — no join, no window."""
-    plan = plan_of(
-        REGISTRY["sim_embedding_covariance"].spark(spark, SF_SMOKE)
-    )
-    assert "Join" not in plan
-    assert "windowspecdefinition" not in plan
 
 
 @pytest.mark.parametrize(
@@ -1196,39 +1154,3 @@ def test_tpch_q21_no_fact_self_join_and_reuse(spark):
     assert "CartesianProduct" not in plan
     assert "BroadcastNestedLoopJoin" not in plan
 
-
-def test_pin_barrier_survives_in_assign_cells(spark):
-    """The `_pin` one-element explode (similarity.py) defeats
-    CollapseProject by plan shape: the norm fold must reach the argmax
-    transform as a plain ATTRIBUTE below a Generate barrier. A Catalyst
-    change that collapses through single-element Generates would inline
-    the fold into the lambda and re-evaluate it once per centroid
-    (measured r16: sim_pca_deflate 17s) with no value check failing —
-    this test fails loudly instead (VERDICT r16 ask #7 / ADVICE r16)."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators import (
-        similarity as S,
-    )
-
-    emb = load_table(spark, SF_SMOKE, "embeddings")
-    vecs = S._vecs(emb)
-    cells = vecs.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("cell"), F.col("v").alias("cv")
-    )
-    plan = plan_of(S._assign_cells(vecs, cells))
-    # the barrier itself (formatted plans print the node name and its
-    # explode argument on separate lines)
-    assert re.search(r"\(\d+\) Generate", plan), (
-        "pin Generate barrier collapsed away"
-    )
-    assert "explode(array(" in plan, "pin explode argument missing"
-    # the argmax lambda must consume the pinned attribute, not an
-    # inlined per-element copy of the norm fold
-    argmax = [
-        ln for ln in plan.splitlines() if "array_max(transform(" in ln
-    ]
-    assert argmax, "argmax projection missing from plan"
-    for ln in argmax:
-        assert "sqrt(" not in ln, (
-            "norm fold inlined into the HOF lambda (re-evaluated per "
-            "centroid): " + ln[:200]
-        )

@@ -64,15 +64,6 @@ COLLECT_ALLOWED: dict[str, int] = {
     # a production 50k-merge vocab is still MBs — bounded by Heaps'
     # law, never by corpus size) to feed the Arrow tokenizer.
     f"{PKG}/plans/beyond_text.py": 1,
-    # r16 optimization round: the two power-iteration sites — the d-row
-    # (pos, mu, n) seed collect (_mu_and_n) and the 1-row
-    # (x_arr, vx_arr, nrm) iterate collect per power step
-    # (_power_step_lit) — both bounded by the embedding DIMENSION
-    # (d doubles), never by corpus size; this is the classic
-    # iterative-algorithm driver loop (graph.py's convergence count is
-    # the same shape) and it replaced a per-iteration corpus-wide
-    # window Exchange + eager checkpoint + broadcast build.
-    f"{PKG}/operators/similarity.py": 2,
 }
 
 
@@ -116,8 +107,7 @@ def test_beyond_tier_first_import_order():
     # silently broke the invariant for the other tiers while CI stayed
     # green).
     tiers = [
-        "beyond_dedup", "beyond_events", "beyond_multimodal",
-        "beyond_similarity", "beyond_streaming", "beyond_text",
+        "beyond_dedup", "beyond_events", "beyond_streaming", "beyond_text",
         "beyond_warehouse",
     ]
     pkg = "financial_transaction_data_warehouse_interactive_dashboard_spark"
