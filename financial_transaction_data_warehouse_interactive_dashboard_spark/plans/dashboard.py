@@ -59,11 +59,6 @@ def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The gold columns a top-k widget may group by; o_orderkey (row identity)
-# and qnum (the quarter filter's key) are not dimensions.
-DIMENSIONS = ("quarter", "nation_name", "region_name", "segment", "status", "priority")
-
-
 class Dashboard:
     """Cached-gold query facade; one instance per session + scale dir."""
 
@@ -111,8 +106,11 @@ class Dashboard:
 
     def top_groups(self, key: str = "segment", k: int = 5, **filters) -> DataFrame:
         """Top-k panel family (streamlit.py:249-356), deterministic ties."""
-        if key not in DIMENSIONS:
-            raise ValueError(f"key must be one of {DIMENSIONS}; got {key!r}")
+        # Every gold column but o_orderkey (row identity) and qnum (the
+        # quarter filter's key) is a dimension; the schema needs no job.
+        dims = tuple(c for c in self.gold.columns if c not in ("o_orderkey", "qnum"))
+        if key not in dims:
+            raise ValueError(f"key must be one of {dims}; got {key!r}")
         if k < 1:
             raise ValueError(f"k must be >= 1; got {k!r}")
         return (

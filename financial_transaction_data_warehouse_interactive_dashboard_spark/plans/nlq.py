@@ -249,15 +249,49 @@ NO_ROUTE: frozenset[str] = frozenset({
 })
 
 
-# Functions that call arbitrary JVM methods from inside a query. In the
-# parsed (unresolved) plan a call prints as 'name( — optionally qualified,
-# as in 'system.builtin.reflect( — at any depth (CTEs, subqueries); a
-# string literal prints without the leading quote, so it cannot match.
-# The plan is printed with no field limit: the default toString elides
-# every select-list item past spark.sql.debug.maxToStringFields (25).
-_REFLECTION_CALL = re.compile(
-    r"'(?:[\w.]+\.)?(?:reflect|java_method|try_reflect)\(", re.IGNORECASE
-)
+# Functions that call arbitrary JVM methods from inside a query.
+_REFLECTION_FUNCS = frozenset({"reflect", "java_method", "try_reflect"})
+
+
+def _seq(s) -> list:
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _runs_host_code(plan) -> bool:
+    """True if a parsed (unresolved) plan can run code outside the query
+    engine: a call to a reflection function under any spelling or
+    qualifier, an ``IDENTIFIER(...)`` clause (its name is only known at
+    analysis, so it could name a reflection function), or a script
+    transformation (``SELECT TRANSFORM ... USING 'cmd'``).
+
+    Walks the tree's structure, not its printed form: every plan node,
+    its inner plans (CTE definitions, subqueries) and every expression."""
+    plans = [plan]
+    while plans:
+        node = plans.pop()
+        name = node.nodeName()
+        if name == "ScriptTransformation" or name.endswith("WithUnresolvedIdentifier"):
+            return True
+        if name == "UnresolvedTableValuedFunction":
+            if node.name().last().lower() in _REFLECTION_FUNCS:
+                return True
+        plans += _seq(node.children()) + _seq(node.innerChildren())
+        exprs = _seq(node.expressions())
+        while exprs:
+            e = exprs.pop()
+            name = e.nodeName()
+            if name.endswith("WithUnresolvedIdentifier"):
+                return True
+            if name == "UnresolvedFunction":
+                fn = e.nameParts().last()
+            elif name == "UnresolvedGenerator":
+                fn = e.name().funcName()
+            else:
+                fn = ""
+            if fn.lower() in _REFLECTION_FUNCS:
+                return True
+            exprs += _seq(e.children())
+    return False
 
 
 def route(text: str) -> str:
@@ -288,8 +322,8 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
     before any view is registered, so a command or a write (DDL, DML,
     ``SET``, ``CACHE``, ``ADD JAR``, ``EXPLAIN``, a multi-statement
     script) raises ``ValueError`` without starting a Spark job, and so
-    does a query that calls ``reflect``, ``java_method`` or
-    ``try_reflect``. This is the sanctioned target for an LLM NL->SQL
+    does a query that can run code outside the engine (see
+    ``_runs_host_code``). This is the sanctioned target for an LLM NL->SQL
     layer, instead of exec-ing generated host code like the reference
     does."""
     rejected = f"run_sql accepts only a single read-only query; rejected {sql!r}"
@@ -297,9 +331,7 @@ def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
         plan = spark._jsparkSession.sessionState().sqlParser().parseQuery(sql)
     except ParseException as e:
         raise ValueError(rejected) from e
-    # treeString(verbose, addSuffix, maxFields, printOperatorId,
-    # printOutputColumns)
-    if _REFLECTION_CALL.search(plan.treeString(True, False, 2**31 - 1, False, False)):
+    if _runs_host_code(plan):
         raise ValueError(rejected)
     register_views(spark, sf_dir)
     return spark.sql(sql)

@@ -186,9 +186,16 @@ NOT_A_QUERY = [
     "SELECT system.builtin.reflect('java.lang.Math', 'abs', -1)",
     "WITH t AS (SELECT reflect('java.lang.Math', 'abs', -1) AS x) SELECT * FROM t",
     "SELECT 1 WHERE 1 IN (SELECT java_method('java.lang.Math', 'abs', -1))",
-    # past the 25 select-list items a default plan string prints
     "SELECT " + ", ".join(f"{i} AS c{i}" for i in range(30))
     + ", reflect('java.lang.Math', 'abs', -1) AS c30",
+    "SELECT * FROM VALUES (1) t(x) LATERAL VIEW reflect('java.lang.Math', 'abs', -1) e AS y",
+    # IDENTIFIER(...) names the function only at analysis time.
+    "SELECT IDENTIFIER('re' || 'flect')"
+    "('java.lang.System', 'setProperty', 'ftdw.run_sql_probe', '1')",
+    "SELECT IDENTIFIER('java_method')"
+    "('java.lang.System', 'setProperty', 'ftdw.run_sql_probe', '1')",
+    # Script transformation runs a shell command on the executors.
+    "SELECT TRANSFORM(x) USING 'true' FROM VALUES (1) t(x)",
 ]
 
 
