@@ -372,14 +372,6 @@ def contamination_report(
     )
 
 
-def shingle_docs(docs: DataFrame, n: int = N_SHINGLE) -> DataFrame:
-    """doc_id + distinct word-n-gram shingle set (array form; element order
-    is not meaningful — consumers do set operations only)."""
-    return shingle_rows(docs, n).groupBy("doc_id").agg(
-        F.collect_list("s").alias("sh")
-    )
-
-
 def ngram_jaccard_pairs(
     docs: DataFrame,
     n: int = N_SHINGLE,

@@ -12,42 +12,17 @@ list slicing is 1-based inclusive; range(a,b) is exclusive; sum(BIGINT) is
 HUGEINT (cast back); `/` on integers is float division in BOTH engines.
 """
 
-
-
 from __future__ import annotations
 
-
-
 from pyspark.sql import DataFrame, SparkSession
-
-
 from pyspark.sql import functions as F
-
-
 from pyspark.sql.window import Window
 
-
-
 from ..functions import portable as _P
-
-
 from ..functions import text as T
-
-
 from ..operators import dedup as D
-
-
 from ..operators import sampling as SP
-
-
-from ..streaming import stream as ST
-
-
-from ..streaming import windows as W
-
-
 from .queries import _t, query
-
 
 
 # Shared DuckDB fragments -----------------------------------------------------

@@ -652,7 +652,7 @@ def tx_heavy_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY doc_id ORDER BY doc_id
     """,
     # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus unigram language-model scoring — the statistical quality
@@ -715,7 +715,7 @@ def tx_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY lang, doc_id
     """,
     # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-weighted per-language sample
@@ -815,7 +815,7 @@ def tx_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     # Locally-pinned (driver surface capped at 50): window-cumsum family
     # is driver-covered by w1/w5; the packing rule itself is pinned here.
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for training batches: documents laid out per
@@ -925,7 +925,7 @@ def tx_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     # Locally-pinned (driver surface capped at 50): same explode-free
     # array-expression family as tx_text_profile, which is driver-green.
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signal: the fraction of duplicate
@@ -1092,7 +1092,7 @@ def tx_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT ck AS custkey, b AS neg_brand, rnk
     FROM r WHERE rnk <= {NEG_K} ORDER BY custkey, rnk
     """,
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for contrastive training pairs:

@@ -387,7 +387,7 @@ def a20_basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS cum_events
     FROM g ORDER BY user_id, day
     """,
-    driver=False,  # rotated OUT r10 (driver-green; plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def w6_user_day_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-spine gap-filling: a contiguous per-user daily calendar from

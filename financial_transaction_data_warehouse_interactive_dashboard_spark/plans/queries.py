@@ -1199,4 +1199,3 @@ def x2_union_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
 from . import beyond  # noqa: E402,F401
 from . import drift  # noqa: E402,F401
 from . import finance  # noqa: E402,F401
-from . import tpch  # noqa: E402,F401

@@ -502,12 +502,14 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
         # below) was deleted from the registry, taking six driver seats
         # with it. The rest of the vector-search tier and the multimodal
         # tier followed, taking five more (four of them this round's own
-        # refills). NO first-timers: the seats refill as REFRESH
-        # promotions, the head of REFRESH_QUEUE once the retired names
-        # are dropped (ev_transition_matrix, tx_bigram_logprob,
-        # tx_bpe_apply, tx_bpe_pack, tx_chunk_documents,
-        # tx_heavy_collocations, tx_mixture_weights) — deliberately NOT
-        # listed as "in".
+        # refills), then the TPC-H tier, taking six more. NO
+        # first-timers: the seats refill as REFRESH promotions, the head
+        # of REFRESH_QUEUE once the retired names are dropped
+        # (ev_transition_matrix, tx_bigram_logprob, tx_bpe_apply,
+        # tx_bpe_pack, tx_chunk_documents, tx_heavy_collocations,
+        # tx_mixture_weights, tx_negative_sampling, tx_pack_sequences,
+        # tx_repetition_ratio, tx_unigram_logprob, tx_weighted_sample,
+        # w6_user_day_gapfill) — deliberately NOT listed as "in".
         "in": (),
         "out": (
             # deleted with the PQ search tier (not demoted: these
@@ -518,6 +520,10 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
             # deleted with the vector-search and multimodal tiers
             "sim_embedding_covariance", "sim_hybrid_rrf", "sim_ndcg_at_k",
             "sim_random_projection", "sim_recall_at_k",
+            # deleted with the TPC-H tier
+            "tpch_q3_shipping_priority", "tpch_q4_late_orders",
+            "tpch_q16_supplier_cnt", "tpch_q7_volume_shipping",
+            "tpch_q8_market_share", "tpch_q9_product_profit",
         ),
     },
 }
@@ -526,9 +532,10 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
 #: (PQ / IVF-PQ / OPQ search and its warehouse and stream lifecycle, the
 #: pipeline-fusion tier built on it, and the embedding-PSI monitors),
 #: then with the rest of the vector-search tier (exact and flat-index
-#: search, retrieval metrics, embedding linear algebra) and the
-#: multimodal tier. The history above still names them; they may no
-#: longer appear on the surface or in any queue.
+#: search, retrieval metrics, embedding linear algebra), the
+#: multimodal tier and the 22 TPC-H query shapes. The history above
+#: still names them; they may no longer appear on the surface or in any
+#: queue.
 RETIRED: frozenset[str] = frozenset({
     "pl_dedup_before_index", "pl_hybrid_rerank",
     "pl_incremental_curate", "pl_learned_rerank", "pl_retrain_on_drift",
@@ -551,6 +558,18 @@ RETIRED: frozenset[str] = frozenset({
     "mm_ahash_clusters", "mm_ahash_neardups", "mm_avi_frames",
     "mm_blob_meta", "mm_bmp_pixels", "mm_features_resize",
     "mm_frame_sample", "mm_wav_features",
+    # TPC-H tier
+    "tpch_q1_pricing_summary", "tpch_q2_min_cost_supplier",
+    "tpch_q3_shipping_priority", "tpch_q4_late_orders",
+    "tpch_q5_local_supplier_volume", "tpch_q6_forecast_revenue",
+    "tpch_q7_volume_shipping", "tpch_q8_market_share",
+    "tpch_q9_product_profit", "tpch_q10_returned_items",
+    "tpch_q11_important_stock", "tpch_q12_shipmode_priority",
+    "tpch_q13_customer_distribution", "tpch_q14_promo_revenue",
+    "tpch_q15_top_supplier", "tpch_q16_supplier_cnt",
+    "tpch_q17_small_qty_revenue", "tpch_q18_large_volume_customer",
+    "tpch_q19_bracket_revenue", "tpch_q20_excess_stock_suppliers",
+    "tpch_q21_waiting_suppliers", "tpch_q22_dormant_rich_customers",
 })
 
 #: Re-promotions: entries that already held a driver row but were
@@ -578,25 +597,8 @@ NEXT_QUEUE: tuple[str, ...] = (
     # The r16 flip promoted the full eight-entry r15 queue (see
     # ROTATION_HISTORY 16), leaving zero never-driver-checked entries
     # after a green r16 — 229/229 driver-row coverage. Operators
-    # authored after the r16 flip queue here for r17:
-    "tpch_q17_small_qty_revenue",  # the correlated SCALAR subquery decorrelated (VERDICT r15 ask #4): per-part avg-quantity aggregate-then-rejoin, exact integer predicate 5*cnt*qty < sum_qty (authored r16 post-flip, three-scale verified)
-    "tpch_q18_large_volume_customer",  # completes the subquery matrix: aggregate-IN (HAVING) semi-join next to EXISTS/NOT-IN/correlated-scalar; BIGINT-exact threshold, top-100 with orderkey tie-break (authored r16 post-flip, three-scale verified)
-    "tpch_q22_dormant_rich_customers",  # the last subquery-bearing TPC-H form: uncorrelated scalar threshold (decimal-exact bal*cnt > sum) COMPOSED with NOT EXISTS (broadcast anti-join); recent-year deviation documented (authored r16 post-flip, three-scale verified)
-    # --- r16 suite completion: the remaining eleven spec queries, taking
-    # --- the registry to ALL 22 TPC-H shapes (each authored r16
-    # --- post-flip, three-scale verified; dialect deviations documented
-    # --- per entry in plans/tpch.py)
-    "tpch_q2_min_cost_supplier",  # correlated MIN decorrelated, exact-decimal equality rejoin, magic-set part-class reduction
-    "tpch_q6_forecast_revenue",  # the pure-scan pushdown query: 4 pushed predicates, one combined global sum
-    "tpch_q10_returned_items",  # customer-grain top-20, page ordered on the exact decimal with tie-break
-    "tpch_q11_important_stock",  # grouped sum vs fraction-of-own-total, scale-invariant 1.5x-mean exact threshold
-    "tpch_q12_shipmode_priority",  # conditional-count pivot over a cross-table date residual
-    "tpch_q13_customer_distribution",  # predicate-in-ON left join + histogram-of-histogram
-    "tpch_q14_promo_revenue",  # conditional-share scalar, both sums one grouped pass
-    "tpch_q15_top_supplier",  # view reused twice: derived frame joined AND filtered vs its own broadcast max
-    "tpch_q19_bracket_revenue",  # disjunction-of-conjunctions residual, derived brand-IN pushdown
-    "tpch_q20_excess_stock_suppliers",  # nested-IN chain, conditional year sum in the same aggregate, BIGINT-exact
-    "tpch_q21_waiting_suppliers",  # double EXISTS/NOT-EXISTS decorrelated to grain+counts, no fact self-join
+    # authored after the r16 flip queue here for r17 (the fourteen
+    # TPC-H shapes queued with it were RETIRED in round 18):
     # --- r16: the RANGE JOIN (the task brief's named custom-operator
     # --- slot next to as-of): bucketed interval-overlap join in
     # --- operators/rangejoin.py, exercised by the concurrent-session
@@ -632,14 +634,11 @@ REFRESH_QUEUE: tuple[str, ...] = (
     # The round-16 flip consumed the previous queue's 25-name prefix
     # (the r8-rest names through tx_stratified_sample, plus the r9
     # vintage head through ev_top_paths). Round 18 dropped the
-    # RETIRED names and promoted the next eleven (ev_transition_matrix
-    # through tx_mixture_weights) into the seats the retired entries
-    # left; what remains is the tail of the r9 vintage followed by the
-    # full r10 and r12 vintages (alphabetical within a vintage = the
-    # ties-by-name rule).
-    # r9 rest
-    "tx_negative_sampling", "tx_pack_sequences", "tx_repetition_ratio",
-    "tx_unigram_logprob", "tx_weighted_sample", "w6_user_day_gapfill",
+    # RETIRED names and promoted the next seventeen (ev_transition_matrix
+    # through w6_user_day_gapfill, the rest of the r9 vintage) into the
+    # seats the retired entries left; what remains is the full r10 and
+    # r12 vintages (alphabetical within a vintage = the ties-by-name
+    # rule).
     # r10 vintage
     "a10_value_stats", "a1_count_by_segment", "a2_quarter_status_matrix",
     "a8_rollup_region_nation", "a9_cube_status_quarter",

@@ -70,39 +70,6 @@ COUNTRY = _st(
 )
 
 # ---------------------------------------------------------------------------
-# Star schema + gold outputs (FIXTURES.md section B; etl.ipynb:40-192)
-# ---------------------------------------------------------------------------
-
-DIM_TIME = _st(("time_id", IntegerType()), ("quarter", StringType()))
-DIM_GEOGRAPHY = _st(("geography_id", IntegerType()), ("country_name", StringType()))
-DIM_SYMBOL = _st(
-    ("symbol_id", IntegerType()),
-    ("symbol", StringType()),
-    ("company_name", StringType()),
-    ("sector", StringType()),
-    ("industry", StringType()),
-)
-DIM_TRANSACTION_TYPE = _st(
-    ("transaction_type_id", IntegerType()), ("transaction_type", StringType())
-)
-FACT_TRANSACTIONS = _st(
-    ("transaction_id", LongType()),
-    ("time_id", IntegerType()),
-    ("geography_id", IntegerType()),
-    ("symbol_id", IntegerType()),
-    ("transaction_type_id", IntegerType()),
-)
-GOLD = _st(
-    ("quarter", StringType()),
-    ("country_name", StringType()),
-    ("symbol", StringType()),
-    ("company_name", StringType()),
-    ("sector", StringType()),
-    ("industry", StringType()),
-    ("transaction_type", StringType()),
-)
-
-# ---------------------------------------------------------------------------
 # Driver-provided oracle tables (/root/testdata/sf*/; FIXTURES.md section C)
 # ---------------------------------------------------------------------------
 

@@ -10,6 +10,9 @@ import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from financial_transaction_data_warehouse_interactive_dashboard_spark.schemas import (
+    TESTDATA_TABLES,
+)
 from financial_transaction_data_warehouse_interactive_dashboard_spark.session import (
     get_spark,
 )
@@ -27,10 +30,6 @@ ETL_ACCOUNT = os.path.join(ETL_RAW_DIR, "account-statement.csv")
 ETL_SYMBOLS = os.path.join(ETL_RAW_DIR, "symbols.csv")
 ETL_COUNTRY = os.path.join(ETL_RAW_DIR, "country.csv")
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -42,7 +41,7 @@ def spark():
 def make_duck(sf_dir: str) -> duckdb.DuckDBPyConnection:
     """Mimic the driver: register each parquet table as a DuckDB view."""
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')")

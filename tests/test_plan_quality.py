@@ -170,33 +170,15 @@ def test_no_sort_merge_join_against_fixed_dims(spark):
     Registry-wide invariant (audited clean in r7: the 12 entries that
     do plan SMJ are all fact-fact or self-join shapes, where SMJ is the
     right call at 100 TB): no entry's plan may contain a SortMergeJoin
-    while also scanning region or nation. If a legitimate future entry
-    trips the co-occurrence (an SMJ between facts beside a broadcast
-    nation join in the same plan), split the check for it here with a
-    comment — same classify-don't-ignore rule as the other closed
-    inventories."""
-    # Classified co-occurrences (the rule's own escape hatch): entries
-    # whose SMJ is between DERIVED FACT-GRAIN frames while the fixed dim
-    # rides a broadcast in the same plan — the SMJ never touches the dim.
-    smj_is_fact_fact = {
-        # grain (order x supplier) SMJ per_order counts — both sides are
-        # lineitem-derived order-grain aggregates (the decorrelated
-        # double-EXISTS), nation joins via broadcast; pinned separately
-        # in test_tpch_q21_no_fact_self_join_and_reuse.
-        "tpch_q21_waiting_suppliers",
-    }
+    while also scanning region or nation. The invariant holds for every
+    entry, with no exception list."""
     offenders = [
         name
         for name, plan in _registry_plans(spark).items()
         if "SortMergeJoin" in plan
         and ("region.parquet" in plan or "nation.parquet" in plan)
-        and name not in smj_is_fact_fact
     ]
     assert not offenders, offenders
-    # The classified entries must still broadcast their dim joins.
-    for name in smj_is_fact_fact:
-        plan = _registry_plans(spark)[name]
-        assert "BroadcastHashJoin" in plan, name
 
 
 # The CLOSED inventory of registry entries whose default plan contains an
@@ -817,38 +799,8 @@ def test_cohort_ltv_window_is_partitioned(spark):
 
 
 # ---------------------------------------------------------------------------
-# TPC-H classic shapes: plan pins
+# Late-entry shapes, stream == batch, registry-wide column pruning
 # ---------------------------------------------------------------------------
-
-
-def test_tpch_q1_pushes_shipdate_and_combines_mapside(spark):
-    plan = plan_of(REGISTRY["tpch_q1_pricing_summary"].spark(spark, SF_SMOKE))
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "l_shipdate" in pushed
-    # partial_ aggregates before the exchange = map-side combine.
-    assert "partial_sum" in plan or "partial_count" in plan
-    assert "Join" not in plan
-
-
-def test_tpch_q3_broadcasts_dim_and_takes_ordered(spark):
-    plan = plan_of(
-        REGISTRY["tpch_q3_shipping_priority"].spark(spark, SF_SMOKE)
-    )
-    assert "BroadcastHashJoin" in plan
-    assert "TakeOrderedAndProject" in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q5_broadcasts_entire_dimension_chain(spark):
-    """Q5's only non-broadcast join may be orders-lineitem: customer,
-    supplier, nation, region all ride broadcasts, so the plan carries at
-    most one shuffle join."""
-    plan = plan_of(
-        REGISTRY["tpch_q5_local_supplier_volume"].spark(spark, SF_SMOKE)
-    )
-    assert plan.count("BroadcastHashJoin") >= 3
-    assert "CartesianProduct" not in plan
-    assert plan.count("SortMergeJoin") + plan.count("ShuffledHashJoin") <= 1
 
 
 def test_new_r6_late_entries_plan_shapes(spark):
@@ -881,29 +833,6 @@ def test_new_r6_late_entries_plan_shapes(spark):
         assert "CartesianProduct" not in plan, name
 
 
-def test_tpch_q4_semi_join_is_hashed_with_residual(spark):
-    """Q4's EXISTS must plan as a LEFT SEMI **hash** join: the equi key
-    (l_orderkey = o_orderkey) carries the join and the cross-table date
-    comparison rides as a residual condition — never a nested-loop or
-    cartesian evaluation of the mixed predicate, which would be
-    quadratic at scale."""
-    plan = plan_of(REGISTRY["tpch_q4_late_orders"].spark(spark, SF_SMOKE))
-    assert "LeftSemi" in plan
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_tpch_q16_anti_and_dim_joins_broadcast(spark):
-    """Q16's NOT-IN exclusion must plan as a broadcast LEFT ANTI join
-    (the blacklist is a filtered dim) and the part attachment as a
-    broadcast hash join — lineitem, the only corpus-scaled input, must
-    shuffle ONLY for the grouped COUNT(DISTINCT), not for either join."""
-    plan = plan_of(REGISTRY["tpch_q16_supplier_cnt"].spark(spark, SF_SMOKE))
-    assert "LeftAnti" in plan
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "SortMergeJoin" not in plan
-
-
 def test_cdc_stream_equals_batch(spark):
     """st_cdc_apply shares wh_cdc_apply's oracle because stream == batch
     is the checked contract (same base, same shared changelog, same
@@ -926,9 +855,8 @@ def test_no_full_width_fact_scans_in_registry(spark):
     may scan EVERY column of a wide (>3-col) input table — a full-width
     read of orders/lineitem/events/documents at 100 TB pays IO for
     columns the query provably never touches. Audited clean across all
-    166 lazy entries at introduction; any new entry tripping this either
-    needs a .select() before its first shuffle or a justified allowlist
-    entry here (none exist yet)."""
+    166 lazy entries at introduction; any new entry tripping this needs
+    a .select() before its first shuffle. There is no allowlist."""
     import os
 
     import pyarrow.parquet as pq
@@ -939,14 +867,6 @@ def test_no_full_width_fact_scans_in_registry(spark):
         p = os.path.join(SF_SMOKE, f"{t}.parquet")
         if os.path.exists(p):
             full[t] = len(pq.read_schema(p).names)
-    # Justified full-width reads (the rule's own escape hatch): entries
-    # whose OUTPUT CONTRACT covers the whole (broadcast-sized) dim row.
-    fullwidth_allowed = {
-        # Q2 emits s_acctbal/s_name and joins on s_suppkey/s_nationkey —
-        # all four supplier columns are genuinely consumed, and supplier
-        # is a broadcast dim (|suppliers|, never fact-sized IO).
-        ("tpch_q2_min_cost_supplier", "supplier"),
-    }
     offenders = {}
     for name, plan in _registry_plans(spark).items():
         hits = []
@@ -957,7 +877,7 @@ def test_no_full_width_fact_scans_in_registry(spark):
                 continue
             tbl = loc.group(1)
             ncols = rs.group(1).count(":") if rs.group(1).strip() else 0
-            if ncols >= full[tbl] > 3 and (name, tbl) not in fullwidth_allowed:
+            if ncols >= full[tbl] > 3:
                 hits.append((tbl, ncols, full[tbl]))
         if hits:
             offenders[name] = hits
@@ -986,171 +906,3 @@ def test_bpe_arrow_path_plan_shape(spark):
         read = plan[plan.index("ReadSchema"):].splitlines()[0]
         assert "text" in read and "doc_id" in read
         assert "lang" not in read and "source" not in read
-
-
-# ---------------------------------------------------------------------------
-# TPC-H suite completion (r16): plan pins for the remaining eleven
-# ---------------------------------------------------------------------------
-
-
-def _li_scans(plan: str) -> int:
-    return len(re.findall(r"Location: InMemoryFileIndex[^\n]*lineitem", plan))
-
-
-def test_tpch_q6_pure_scan_pushes_everything(spark):
-    """Q6 is the pushdown query: the date window, the discount band
-    (raw-double comparison — a DECIMAL cast here would block it), and
-    the quantity cap must ALL reach the parquet scan, the sum must
-    combine map-side, and no join may appear anywhere."""
-    plan = plan_of(REGISTRY["tpch_q6_forecast_revenue"].spark(spark, SF_SMOKE))
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "l_shipdate" in pushed
-    assert "l_discount" in pushed and "GreaterThanOrEqual(l_discount" in pushed
-    assert "LessThan(l_quantity" in pushed
-    assert "partial_sum" in plan
-    assert "Join" not in plan
-
-
-def test_tpch_q10_top20_takes_ordered_with_pruned_orders(spark):
-    """Q10's order-date window must prune orders BEFORE the lineitem
-    join (pushed to the orders scan), the returnflag filter must reach
-    the fact scan, dims must broadcast, and the page must come from
-    TakeOrderedAndProject — never a global sort of the aggregate."""
-    plan = plan_of(REGISTRY["tpch_q10_returned_items"].spark(spark, SF_SMOKE))
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "o_orderdate" in pushed and "EqualTo(l_returnflag,R)" in pushed
-    assert "TakeOrderedAndProject" in plan
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q12_residual_rides_hash_join(spark):
-    """Q12's cross-table lateness predicate cannot push to either scan;
-    it must evaluate on the equi-join's output (hash join + residual/
-    post-filter), while the two-year shipdate window DOES push, and the
-    CASE pivot combines map-side into 3 groups."""
-    plan = plan_of(
-        REGISTRY["tpch_q12_shipmode_priority"].spark(spark, SF_SMOKE)
-    )
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "l_shipdate" in pushed
-    assert "BroadcastHashJoin" in plan or "SortMergeJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "partial_sum" in plan
-
-
-def test_tpch_q13_keeps_outer_join_and_pushes_on_predicate(spark):
-    """Q13's defining trap: the priority filter lives in the LEFT
-    join's ON clause — the join must stay LeftOuter (zero-order
-    customers land in the 0 bucket; a WHERE placement would plan
-    Inner and drop them), while the filter itself still pushes to the
-    orders scan."""
-    plan = plan_of(
-        REGISTRY["tpch_q13_customer_distribution"].spark(spark, SF_SMOKE)
-    )
-    assert "LeftOuter" in plan
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "o_orderpriority" in pushed and "Not(EqualTo" in pushed
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q14_single_scan_conditional_share(spark):
-    """Q14's two sums (promo CASE + unconditional) must come from ONE
-    month-pruned lineitem scan in one grouped pass — the naive
-    two-query formulation scans twice — with part broadcast."""
-    plan = plan_of(REGISTRY["tpch_q14_promo_revenue"].spark(spark, SF_SMOKE))
-    assert _li_scans(plan) == 1
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "l_shipdate" in pushed
-
-
-def test_tpch_q15_reuses_revenue_exchange_at_runtime(spark):
-    """Q15 consumes the per-supplier revenue frame TWICE (join input +
-    its own broadcast max). The grouped exchange must be computed once
-    and REUSED — pinned on the EXECUTED AQE plan because static
-    explain hides reuse under AdaptiveSparkPlan. The explicit
-    isnotnull(l_suppkey) in the source filter is what keeps the two
-    consumers' subtrees canonically identical (without it the join
-    side's inferred null filter forks the scan — measured r16)."""
-    df = REGISTRY["tpch_q15_top_supplier"].spark(spark, SF_SMOKE)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert executed.count("ReusedExchange") >= 1
-    plan = plan_of(df)
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q19_derived_pushdown_and_single_join(spark):
-    """Q19's three OR-brackets must evaluate in ONE scan+join: the
-    implied brand-IN reaches the part scan as a pushed In(), the
-    quantity-band disjunction pushes to the lineitem scan, and no
-    union-of-three-scans or cartesian appears."""
-    plan = plan_of(REGISTRY["tpch_q19_bracket_revenue"].spark(spark, SF_SMOKE))
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "In(p_brand" in pushed
-    assert "l_quantity" in pushed and "Or(" in pushed
-    assert _li_scans(plan) == 1
-    assert "Union" not in plan
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q2_decorrelated_min_all_broadcast(spark):
-    """Q2's correlated MIN must decorrelate to aggregate-then-rejoin
-    with every dimension and the per-part min frame riding broadcasts
-    — the only shuffle is the offers groupBy; no cartesian, no
-    sort-merge join at fixture scale."""
-    plan = plan_of(
-        REGISTRY["tpch_q2_min_cost_supplier"].spark(spark, SF_SMOKE)
-    )
-    assert plan.count("BroadcastHashJoin") >= 4
-    assert "CartesianProduct" not in plan
-    assert "SortMergeJoin" not in plan
-    assert "TakeOrderedAndProject" in plan
-
-
-def test_tpch_q11_reuses_value_frame_at_runtime(spark):
-    """Q11 consumes the per-part value frame twice (grouped rows + its
-    own 1-row total). Like Q15 the exchange must be REUSED at runtime,
-    and the scalar total may arrive as the sanctioned 1-row
-    BroadcastNestedLoopJoin — but never a CartesianProduct."""
-    df = REGISTRY["tpch_q11_important_stock"].spark(spark, SF_SMOKE)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert executed.count("ReusedExchange") >= 1
-    assert "CartesianProduct" not in plan_of(df)
-
-
-def test_tpch_q20_nested_in_semi_join_single_fact_pass(spark):
-    """Q20's nested-IN chain must collapse to: one (partkey, suppkey)
-    grouped pass over the fact with the conditional year sum computed
-    IN the same aggregate (single lineitem scan), the part name class
-    pushed as StringEndsWith, and the final membership as a LEFT SEMI
-    join."""
-    plan = plan_of(
-        REGISTRY["tpch_q20_excess_stock_suppliers"].spark(spark, SF_SMOKE)
-    )
-    assert _li_scans(plan) == 1
-    assert "LeftSemi" in plan
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "StringEndsWith(p_name,widget)" in pushed
-    assert "CartesianProduct" not in plan
-
-
-def test_tpch_q21_no_fact_self_join_and_reuse(spark):
-    """Q21's double EXISTS/NOT-EXISTS must leave NO fact-fact
-    self-join: the (order, supplier) grain is aggregated once and its
-    exchange REUSED for the per-order counts (runtime pin), with the
-    F-status filter pushed to the orders scan and no nested-loop
-    anywhere."""
-    df = REGISTRY["tpch_q21_waiting_suppliers"].spark(spark, SF_SMOKE)
-    df.collect()
-    executed = df._jdf.queryExecution().executedPlan().toString()
-    assert executed.count("ReusedExchange") >= 1
-    plan = plan_of(df)
-    pushed = " ".join(re.findall(r"PushedFilters: \[[^\]]*\]", plan))
-    assert "EqualTo(o_orderstatus,F)" in pushed
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-

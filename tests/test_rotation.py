@@ -190,19 +190,3 @@ def test_keep_set_capped_and_on_surface():
         (first & set(keep)) - admitted_now
     )
     assert admitted_now <= set(keep), admitted_now - set(keep)
-
-
-def test_tpch_suite_complete():
-    """r16 suite completion: the registry carries ALL 22 TPC-H query
-    shapes — one entry per spec query number (dialect adaptations
-    documented per entry in plans/tpch.py). A regression that drops a
-    number breaks the 'complete decision-support benchmark' claim in
-    SURVEY/README."""
-    import re
-
-    numbers = {
-        int(m.group(1))
-        for name in Q.REGISTRY
-        if (m := re.match(r"tpch_q(\d+)_", name))
-    }
-    assert numbers == set(range(1, 23)), sorted(set(range(1, 23)) - numbers)

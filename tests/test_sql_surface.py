@@ -6,6 +6,8 @@ surfaces cannot drift — a user can switch between them freely."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (
@@ -160,6 +162,12 @@ def test_engine_wide_analyst_phrases(phrase, expected):
     assert route(phrase) == expected
 
 
+# Files that spark.sql.runSQLOnFiles would read through a path-addressed
+# relation (any file reads as text lines); both exist, so a missed
+# rejection returns their rows.
+_TEXT_FILE = os.path.join(SF_ORACLE, "region.parquet")
+_PARQUET_FILE = os.path.join(SF_ORACLE, "orders.parquet")
+
 # run_sql is read-only: every command or write is rejected by Spark's
 # query-only parser before a view is registered or a job starts.
 NOT_A_QUERY = [
@@ -196,6 +204,21 @@ NOT_A_QUERY = [
     "('java.lang.System', 'setProperty', 'ftdw.run_sql_probe', '1')",
     # Script transformation runs a shell command on the executors.
     "SELECT TRANSFORM(x) USING 'true' FROM VALUES (1) t(x)",
+    # Only the registered warehouse views (and CTEs) may be read: a
+    # path-addressed relation reads any local file, at any depth.
+    f"SELECT * FROM text.`{_TEXT_FILE}`",
+    f"SELECT * FROM parquet.`{_PARQUET_FILE}`",
+    f"WITH t AS (SELECT * FROM text.`{_TEXT_FILE}`) SELECT * FROM t",
+    f"WITH t AS (SELECT * FROM parquet.`{_PARQUET_FILE}`) SELECT * FROM t",
+    f"SELECT 1 WHERE 'x' IN (SELECT value FROM text.`{_TEXT_FILE}`)",
+    "SELECT count(*) FROM orders WHERE o_orderkey IN "
+    f"(SELECT o_orderkey FROM parquet.`{_PARQUET_FILE}`)",
+    f"SELECT * FROM orders JOIN text.`{_TEXT_FILE}` f ON f.value = o_orderstatus",
+    f"SELECT * FROM orders o JOIN parquet.`{_PARQUET_FILE}` p "
+    "ON o.o_orderkey = p.o_orderkey",
+    # Any other multi-part or unregistered name.
+    "SELECT * FROM spark_catalog.default.orders",
+    "SELECT * FROM run_sql_probe_view",
 ]
 
 
@@ -227,7 +250,17 @@ def test_run_sql_runs_read_only_queries(spark):
         rows.append(nlq.run_sql(
             spark, SF_ORACLE, "SELECT 'reflect(' AS s"
         ).collect()[0]["s"])
+        # CTE names are relations too: read from a subquery and a join,
+        # and by a later CTE of the same WITH.
+        rows.append(nlq.run_sql(
+            spark, SF_ORACLE,
+            "WITH f AS (SELECT o_orderkey FROM orders WHERE o_orderstatus = 'F'), "
+            "g AS (SELECT o_orderkey FROM f) "
+            "SELECT count(*) AS n FROM ORDERS o JOIN g ON o.o_orderkey = g.o_orderkey "
+            "WHERE o.o_orderkey IN (SELECT o_orderkey FROM f)",
+        ).collect()[0]["n"])
 
     assert jobs_in_group(spark, "run_sql_accept", call)
     assert 0 < rows[0] < rows[1]
     assert rows[2] == "reflect("
+    assert rows[3] == rows[0]

@@ -24,11 +24,6 @@ import time
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 
 def normalize(rows, columns):
     order = sorted(range(len(columns)), key=lambda i: columns[i])
@@ -56,6 +51,9 @@ def main() -> None:
     from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (  # noqa: E501
         REGISTRY,
     )
+    from financial_transaction_data_warehouse_interactive_dashboard_spark.schemas import (  # noqa: E501
+        TESTDATA_TABLES,
+    )
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or sorted(
@@ -73,7 +71,7 @@ def main() -> None:
     )
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         path = os.path.join(sf_dir, f"{t}.parquet")
         if os.path.exists(path):
             con.execute(
