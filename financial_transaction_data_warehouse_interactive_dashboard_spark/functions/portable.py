@@ -1,7 +1,7 @@
 """Portable (Spark <-> DuckDB bit-identical) hashing and array primitives.
 
 The driver's correctness gate hashes query outputs from Spark and from a
-DuckDB oracle and compares them. Anything hash-based (minhash, simhash,
+DuckDB oracle and compares them. Anything hash-based (minhash,
 fingerprints, LSH buckets) therefore needs a hash function that produces
 the SAME integer in both engines. Spark's ``hash``/``xxhash64`` and
 DuckDB's ``hash`` are different algorithms, so we build one from the only

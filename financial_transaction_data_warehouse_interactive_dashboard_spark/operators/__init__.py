@@ -1,1 +1,1 @@
-"""Beyond-reference operators: dedup, graph, sketches, sampling, temporal joins."""
+"""Beyond-reference operators: MinHash/LSH, graph, sketches, sampling, temporal joins."""

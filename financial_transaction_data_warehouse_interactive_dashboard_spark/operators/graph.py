@@ -1,8 +1,8 @@
 """Iterative graph algorithms on DataFrames — the Pregel-lite pattern.
 
-Beyond-reference scope. The driving use case is dedup: near-dup PAIRS
-(MinHash-LSH, SimHash, embedding cosine) define an undirected graph whose
-CONNECTED COMPONENTS are the real duplicate clusters — pair-at-a-time
+Beyond-reference scope. The driving use case is near-dup clustering:
+MinHash-LSH PAIRS define an undirected graph whose CONNECTED COMPONENTS
+are the real duplicate clusters (tx_split_by_cluster) — pair-at-a-time
 policies ("drop the higher id of each pair") under-merge whenever
 similarity is transitive but not reflexively detected (A~B, B~C, A!~C).
 

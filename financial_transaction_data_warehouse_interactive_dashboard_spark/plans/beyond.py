@@ -1,4 +1,4 @@
-"""Beyond-reference named queries: dedup, text, events, streaming, warehouse.
+"""Beyond-reference named queries: text, events, streaming, warehouse.
 
 Each entry pairs an operator from operators/ / functions/ / streaming/ with
 a DuckDB oracle that implements the SAME algorithm on the same portable
@@ -42,22 +42,6 @@ SQL_JACCARD = (
 
 
 
-SQL_SIMHASH = """
-  tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS t FROM documents),
-  th AS (SELECT doc_id, ('0x' || substr(md5(t), 1, 8))::BIGINT AS h FROM tok),
-  bits AS (SELECT doc_id, b,
-             sum(CASE WHEN (h >> b) & 1 = 1 THEN 1 ELSE -1 END) AS s
-           FROM th, range(0, 32) AS r(b)
-           GROUP BY 1, 2),
-  simh AS (SELECT doc_id,
-             sum(CASE WHEN s > 0 THEN 1::BIGINT << b ELSE 0 END)::BIGINT
-               AS simhash
-           FROM bits GROUP BY doc_id)
-"""
-
-
-
-
 def _sql_lexicon(words: tuple[str, ...]) -> str:
     lst = ", ".join(f"'{x}'" for x in words)
     return f"len(list_filter(w, t -> list_contains([{lst}], t)))"
@@ -84,60 +68,11 @@ _STOP_SQL = _sql_lexicon(T.STOPWORDS)
 
 
 
-# dd_corpus_clean's oracle composes the lexicon/quality/shingle/LSH
-# fragments — same SQL fragments as the per-stage oracles, so the
-# pipeline and its stages cannot drift apart.
 _SQL_QUALITY_PTS = f"""( (least(len(w), 100) * 25) // 100
            + (len(list_distinct(w)) * 35) // len(w)
            + least(({_STOP_SQL} * 100) // len(w), 20)
            + least((list_sum([length(t) for t in w]) * 20) // (8 * len(w)), 20)
          )::BIGINT"""
-
-
-
-_SQL_CORPUS_CLEAN = f"""
-    WITH base AS (SELECT doc_id, text, string_split(text, ' ') AS w
-                  FROM documents),
-    sc AS (SELECT doc_id, text, w,
-             len(w)::BIGINT AS n_tokens,
-             {_HITS['en']}::BIGINT AS hits_en,
-             {_HITS['es']}::BIGINT AS hits_es,
-             {_HITS['zh']}::BIGINT AS hits_zh,
-             {_SQL_QUALITY_PTS} AS quality_pts
-           FROM base),
-    filt AS (SELECT doc_id, text, w, n_tokens, quality_pts FROM sc
-             WHERE {_LANG_CASE} = 'en' AND quality_pts >= 45),
-    s2 AS (SELECT * FROM filt
-           QUALIFY row_number() OVER (PARTITION BY md5(text)
-                                      ORDER BY doc_id) = 1),
-    sh AS (SELECT doc_id, {_P.sql_shingles('w', D.N_SHINGLE)} AS sh FROM s2),
-    ab AS (SELECT doc_id,
-             [{_P.sql_md5_long('s', 15, 1)} % {_P.ROLL_MOD} for s in sh] AS ha,
-             [{_P.sql_md5_long('s', 15, 16)} % {_P.ROLL_MOD} for s in sh] AS hb
-           FROM sh),
-    sig AS (SELECT doc_id,
-              [list_min([(ha[i] + j * hb[i]) % {_P.ROLL_MOD}
-                         for i in range(1, len(ha) + 1)])
-               for j in range(0, {D.MINHASH_N})] AS sig
-            FROM ab),
-    bands AS (SELECT doc_id, b AS band,
-                array_to_string(
-                  sig[b*{D.LSH_ROWS}+1 : b*{D.LSH_ROWS}+{D.LSH_ROWS}], ',')
-                  AS key
-              FROM sig, range(0, {D.LSH_BANDS}) AS r(b)),
-    cand AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-             FROM bands a
-             JOIN bands b ON a.band = b.band AND a.key = b.key
-                         AND a.doc_id < b.doc_id),
-    nd AS (SELECT DISTINCT id_b
-           FROM cand JOIN sh sa ON cand.id_a = sa.doc_id
-                     JOIN sh sb ON cand.id_b = sb.doc_id
-           WHERE {SQL_JACCARD} >= 0.5)
-    SELECT doc_id, n_tokens, quality_pts FROM s2
-    WHERE doc_id NOT IN (SELECT id_b FROM nd)
-    ORDER BY doc_id
-"""
-
 
 
 
@@ -706,36 +641,6 @@ def sk_salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# r5 batch: normalization dedup + duplicated-passage report
-# ---------------------------------------------------------------------------
-
-_SQL_NORM = (
-    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9 ]', '', 'g'),"
-    " ' +', ' ', 'g'))"
-)
-
-
-
-
-# ---------------------------------------------------------------------------
-# dd_segment_dedup: C4-style line-level corpus dedup (segment granularity)
-# ---------------------------------------------------------------------------
-
-SEG_TOKENS = 12
-
-
-
-
-# ---------------------------------------------------------------------------
-# dd_er_blocked_pairs: entity-resolution blocking + edit-distance verify
-# ---------------------------------------------------------------------------
-
-ER_MAX_DIST = 3
-
-
-
-
-# ---------------------------------------------------------------------------
 # tx_negative_sampling: deterministic contrastive negatives per user
 # ---------------------------------------------------------------------------
 
@@ -787,22 +692,6 @@ HLL_WINDOW_DAYS = 14
 
 
 HLL_TOL = 0.05
-
-
-
-
-# ---------------------------------------------------------------------------
-# dd_qgram_edit_join: PassJoin-style segment-blocked edit-distance join
-# ---------------------------------------------------------------------------
-
-EDJ_PLEN = 16  # fixed-length prefix key
-
-
-EDJ_K = 2  # edit-distance threshold
-
-
-# k+1 = 3 segments (start, length): pigeonhole over the 16-char key
-EDJ_SEGS = ((1, 1, 6), (2, 7, 5), (3, 12, 5))
 
 
 
@@ -860,15 +749,13 @@ def _orphan_edge_sql(rel, child, ck, parent, pk) -> str:
 # (b) the tier modules can import this module's shared helpers while it
 # is mid-initialization. The star re-exports keep every historical
 # `from plans.beyond import <entry>` import path working.
-from .beyond_dedup import *  # noqa: E402,F401,F403
 from .beyond_text import *  # noqa: E402,F401,F403
 from .beyond_events import *  # noqa: E402,F401,F403
 from .beyond_streaming import *  # noqa: E402,F401,F403
 from .beyond_warehouse import *  # noqa: E402,F401,F403
 
 _TIER_MODULES = (
-    "beyond_dedup", "beyond_text", "beyond_events", "beyond_streaming",
-    "beyond_warehouse",
+    "beyond_text", "beyond_events", "beyond_streaming", "beyond_warehouse",
 )
 
 

@@ -39,8 +39,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "a10_value_stats": ("average", "median", "min", "max", "price", "stats"),
     "w1_quarter_trend": ("trend", "growth", "change", "over", "time"),
     "o2_top5_types": ("part", "type", "types", "popular"),
-    "dd_exact_dedup": ("duplicate", "duplicates", "dedup", "exact"),
-    "dd_minhash_lsh": ("near", "similar", "documents", "minhash"),
     "ev_tumbling_hourly": ("hourly", "events", "window"),
     "ev_sessionize": ("session", "sessions", "user", "activity"),
     "ev_funnel_vcp": ("funnel", "conversion", "purchase"),
@@ -51,7 +49,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "a14_grouping_sets": ("grouping", "sets", "levels", "subtotal", "subtotals"),
     "ev_value_histogram": ("histogram", "distribution", "bins", "buckets"),
     "ev_asof_nearest_error": ("closest", "error", "asof", "before", "after"),
-    "dd_corpus_clean": ("clean", "curate", "corpus", "filter", "quality", "pipeline"),
     "tx_hash_split": ("split", "train", "test", "validation", "holdout"),
     "st_sessionize": ("streaming", "stream", "live", "realtime"),
     "sk_salted_hot_join": ("skew", "skewed", "hot", "salted", "straggler"),
@@ -82,8 +79,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "a19_benford_first_digit": ("benford", "digit", "digits", "forensic", "audit"),
     "a20_basket_pair_lift": ("basket", "lift", "affinity", "together", "crosssell"),
     "w6_user_day_gapfill": ("gap", "gaps", "gapfill", "calendar", "spine", "resample"),
-    "dd_normalized_dedup": ("normalized", "normalize", "canonical", "case", "punctuation"),
-    "dd_passage_dupes": ("passage", "passages", "substring", "spans", "templated"),
     "ev_attribution_last_touch": ("attribution", "attribute", "touch", "credit", "channel"),
     "a21_order_reconciliation": ("reconcile", "reconciliation", "mismatch", "discrepancy", "close"),
     "a22_brand_pagerank": ("pagerank", "centrality", "influence", "influential", "graph"),
@@ -107,10 +102,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "ev_asof_purchase": ("asof", "latest", "preceding", "carry"),
     "ev_range_views_before_purchase": ("range", "interval", "views", "lookback"),
     "w5_rank_functions": ("dense", "ntile", "rownumber", "percentrank", "rank"),
-    "dd_ngram_jaccard": ("jaccard", "ngram", "ngrams", "overlap"),
-    "dd_simhash": ("simhash", "hamming", "bitwise", "64bit"),
-    "dd_embedding_neardup_blocked": ("semantic", "neardup", "cosine", "paraphrase", "embedding"),
-    "dd_neardup_components": ("connected", "components", "clusters", "transitive"),
     "tx_lang_id": ("language", "lang", "identify", "detect", "detection"),
     "tx_quality_score": ("quality", "score", "scores", "heuristic", "lowquality"),
     "tx_token_count": ("token", "tokens", "count", "counts", "bpe"),
@@ -130,8 +121,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "ev_top_paths": ("paths", "journeys", "sequences", "flows", "trigram"),
     "a27_dow_seasonal_outliers": ("seasonal", "weekday", "baseline", "spike", "spikes"),
     "a28_customer_kmeans": ("kmeans", "centroids", "unsupervised", "cluster", "segmentation"),
-    "dd_incremental_dedup": ("incremental", "ingest", "daily", "batch", "index"),
-    "dd_incremental_minhash": ("incremental", "near", "nearduplicate", "fuzzy", "indexed"),
     "wh_vacuum_retention": ("vacuum", "retention", "reclaim", "expire", "cleanup"),
     "wh_compaction": ("compact", "compaction", "fragmented", "fragmentation", "defragment"),
     "wh_schema_evolution": ("schema", "evolution", "column", "added", "mergeschema"),
@@ -162,8 +151,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "ev_seasonal_decompose": ("decompose", "decomposition", "components", "residual", "deseasonalize"),
     "ev_autocorr_daily": ("autocorrelation", "autocorrelated", "persistence", "lag", "daily"),
     "ev_ewma_daily": ("ewma", "smoothed", "smoothing", "exponential", "exponentially"),
-    "dd_segment_dedup": ("line", "lines", "c4", "boilerplate", "remove", "repeated"),
-    "dd_er_blocked_pairs": ("entity", "resolution", "matching", "linkage", "misspelled", "blocking"),
     "ev_peak_concurrency": ("peak", "concurrent", "concurrency", "simultaneous", "capacity"),
     "a31_brand_khop": ("hops", "hop", "degrees", "reachable", "within", "bfs"),
     "ev_wau_stickiness": ("wau", "dau", "stickiness", "active", "users", "weekly"),
@@ -172,7 +159,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "wh_bucketed_join": ("bucketed", "bucketing", "colocated", "shuffle", "free"),
     "wh_incremental_join": ("materialized", "view", "delta", "deltas", "refresh", "join", "incrementally", "maintain"),
     "ev_active_users_hll": ("mau", "monthly", "active", "sketches", "estimate"),
-    "dd_qgram_edit_join": ("edit", "distance", "typo", "typos", "levenshtein", "spelling"),
     "a32_brand_cheapest_path": ("shortest", "cheapest", "route", "weighted", "distance"),
     "a33_segment_skyline": ("skyline", "pareto", "frontier", "dominated", "tradeoff", "tradeoffs"),
     "ev_forecast_backtest": ("forecast", "backtest", "mape", "smape", "baseline", "naive"),
@@ -181,8 +167,6 @@ ROUTES: dict[str, tuple[str, ...]] = {
     "ev_time_to_convert": ("latency", "convert", "timing", "median", "long", "takes"),
     "st_daily_actives_hll": ("streaming", "distinct", "actives", "sketch", "daily"),
     "a34_brand_closeness": ("closeness", "harmonic", "central", "wellconnected", "proximity"),
-    "dd_containment_pairs": ("containment", "contained", "embedded", "superset", "subset"),
-    "dd_novelty_fractions": ("novelty", "novel", "fresh", "recrawl", "marginal"),
     "qa_higher_moments": ("skewness", "skew", "kurtosis", "tail", "tails", "moments", "distribution"),
     "a35_survival_km": ("survival", "churn", "churned", "kaplan", "meier", "censored"),
     "tx_curriculum_order": ("curriculum", "ordering", "easy", "hard", "difficulty", "training", "schedule"),
@@ -203,8 +187,6 @@ NO_ROUTE: frozenset[str] = frozenset({
     "a2_quarter_status_matrix",   # a11 pivot is the routed face
     "a6_distinct_dims",           # driver-list parity shape
     "c1_timestamp_roundtrip",     # C1-C3 parity shape
-    "dd_embedding_neardup",       # blocked variant is the routed face
-    "dd_simhash_pairs",           # dd_simhash is the routed face
     "ev_asof_view_purchase",      # ev_asof_purchase is the routed face
     "f4_contains",                # F4 parity shape
     "j1_fact_build",              # J1/J2 parity shape

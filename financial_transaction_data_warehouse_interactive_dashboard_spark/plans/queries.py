@@ -263,7 +263,7 @@ def a4_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY quarter, status
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a2_quarter_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-key group-by count (stacked-bar input).
@@ -789,7 +789,7 @@ def c1_timestamp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY 1 ORDER BY segment
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a1_count_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-key group-by count (A1) — the dashboard's most common shape.
@@ -818,9 +818,7 @@ def a1_count_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (r_name, n_name)
     ORDER BY lvl, region_name NULLS FIRST, nation_name NULLS FIRST
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a8_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP region -> nation -> grand total in ONE pass.
@@ -902,7 +900,7 @@ def a9_cube_status_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1 ORDER BY status
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
+    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a10_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN/MAX/AVG/median per group — the aggregate family SURVEY.md

@@ -502,14 +502,17 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
         # below) was deleted from the registry, taking six driver seats
         # with it. The rest of the vector-search tier and the multimodal
         # tier followed, taking five more (four of them this round's own
-        # refills), then the TPC-H tier, taking six more. NO
+        # refills), then the TPC-H tier, taking six more, then the
+        # near-duplicate (dedup) tier, taking four more. NO
         # first-timers: the seats refill as REFRESH promotions, the head
         # of REFRESH_QUEUE once the retired names are dropped
         # (ev_transition_matrix, tx_bigram_logprob, tx_bpe_apply,
         # tx_bpe_pack, tx_chunk_documents, tx_heavy_collocations,
         # tx_mixture_weights, tx_negative_sampling, tx_pack_sequences,
         # tx_repetition_ratio, tx_unigram_logprob, tx_weighted_sample,
-        # w6_user_day_gapfill) — deliberately NOT listed as "in".
+        # w6_user_day_gapfill, a10_value_stats, a1_count_by_segment,
+        # a2_quarter_status_matrix, a8_rollup_region_nation) —
+        # deliberately NOT listed as "in".
         "in": (),
         "out": (
             # deleted with the PQ search tier (not demoted: these
@@ -524,6 +527,9 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
             "tpch_q3_shipping_priority", "tpch_q4_late_orders",
             "tpch_q16_supplier_cnt", "tpch_q7_volume_shipping",
             "tpch_q8_market_share", "tpch_q9_product_profit",
+            # deleted with the dedup tier
+            "dd_normalized_dedup", "dd_er_blocked_pairs",
+            "dd_containment_pairs", "dd_novelty_fractions",
         ),
     },
 }
@@ -533,7 +539,8 @@ ROTATION_HISTORY: dict[int, dict[str, tuple[str, ...]]] = {
 #: pipeline-fusion tier built on it, and the embedding-PSI monitors),
 #: then with the rest of the vector-search tier (exact and flat-index
 #: search, retrieval metrics, embedding linear algebra), the
-#: multimodal tier and the 22 TPC-H query shapes. The history above
+#: multimodal tier, the 22 TPC-H query shapes and the near-duplicate
+#: (dedup) tier. The history above
 #: still names them; they may no longer appear on the surface or in any
 #: queue.
 RETIRED: frozenset[str] = frozenset({
@@ -570,6 +577,14 @@ RETIRED: frozenset[str] = frozenset({
     "tpch_q17_small_qty_revenue", "tpch_q18_large_volume_customer",
     "tpch_q19_bracket_revenue", "tpch_q20_excess_stock_suppliers",
     "tpch_q21_waiting_suppliers", "tpch_q22_dormant_rich_customers",
+    # dedup tier
+    "dd_containment_pairs", "dd_corpus_clean", "dd_embedding_neardup",
+    "dd_embedding_neardup_blocked", "dd_er_blocked_pairs",
+    "dd_exact_dedup", "dd_incremental_dedup", "dd_incremental_minhash",
+    "dd_minhash_lsh", "dd_neardup_components", "dd_ngram_jaccard",
+    "dd_normalized_dedup", "dd_novelty_fractions", "dd_passage_dupes",
+    "dd_qgram_edit_join", "dd_segment_dedup", "dd_simhash",
+    "dd_simhash_pairs",
 })
 
 #: Re-promotions: entries that already held a driver row but were
@@ -634,17 +649,15 @@ REFRESH_QUEUE: tuple[str, ...] = (
     # The round-16 flip consumed the previous queue's 25-name prefix
     # (the r8-rest names through tx_stratified_sample, plus the r9
     # vintage head through ev_top_paths). Round 18 dropped the
-    # RETIRED names and promoted the next seventeen (ev_transition_matrix
-    # through w6_user_day_gapfill, the rest of the r9 vintage) into the
-    # seats the retired entries left; what remains is the full r10 and
-    # r12 vintages (alphabetical within a vintage = the ties-by-name
-    # rule).
+    # RETIRED names and promoted the next names (ev_transition_matrix
+    # through w6_user_day_gapfill, the rest of the r9 vintage, then the
+    # r10 head a10_value_stats through a8_rollup_region_nation) into the
+    # seats the retired entries left; what remains is the rest of the
+    # r10 vintage and the full r12 vintage (alphabetical within a
+    # vintage = the ties-by-name rule).
     # r10 vintage
-    "a10_value_stats", "a1_count_by_segment", "a2_quarter_status_matrix",
-    "a8_rollup_region_nation", "a9_cube_status_quarter",
-    "c1_timestamp_roundtrip", "dd_embedding_neardup", "dd_simhash",
-    "dd_simhash_pairs", "ev_props_extract", "ev_sessionize",
-    "ev_tumbling_hourly", "ev_value_histogram", "f4_contains",
+    "a9_cube_status_quarter", "c1_timestamp_roundtrip", "ev_props_extract",
+    "ev_sessionize", "ev_tumbling_hourly", "ev_value_histogram", "f4_contains",
     "j7_name_remap", "o2_top5_types", "qa_fdr_bh_segments",
     "qa_fdr_bh_spike_in", "tx_bpe_apply_arrow", "tx_bpe_train", "tx_bpe_train_apply",
     "tx_fingerprint", "tx_lang_id", "tx_quality_score", "tx_token_count",
@@ -653,8 +666,6 @@ REFRESH_QUEUE: tuple[str, ...] = (
     "a11_pivot_quarter_status", "a12_star_measures",
     "a13_percentile_sketch", "a14_grouping_sets", "a22_brand_pagerank",
     "a4_kpis", "a5_unique_customers_approx", "a6_distinct_dims",
-    "dd_corpus_clean", "dd_embedding_neardup_blocked", "dd_exact_dedup",
-    "dd_minhash_lsh", "dd_neardup_components", "dd_ngram_jaccard",
     "ev_asof_purchase", "ev_funnel_vcp", "ev_rolling_7d",
     "q2_top_priorities_q4", "q3_quarter_ranking",
     "st_bpe_tokenize", "st_bpe_tokenize_learned", "st_sessionize_stateful",

@@ -11,9 +11,7 @@ section 1.3).
 from __future__ import annotations
 
 from pyspark.sql.types import (
-    ArrayType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -136,11 +134,6 @@ TESTDATA = {
         ("lang", StringType()),
         ("source", StringType()),
         ("n_chars", LongType()),
-    ),
-    "embeddings": _st(
-        ("vec_id", LongType()),
-        ("embedding", ArrayType(FloatType())),
-        ("label", IntegerType()),
     ),
 }
 

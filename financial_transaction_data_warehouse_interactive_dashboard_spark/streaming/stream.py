@@ -411,8 +411,8 @@ def dedup_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
     """Streaming exact-dedup on event_id: dropDuplicatesWithinWatermark
     keeps per-key state only until the watermark passes, so state size is
     bounded by the watermark horizon instead of growing with the stream —
-    the streaming twin of operators.dedup.exact_dedup. (Plain
-    dropDuplicates on a stream would accumulate every key forever.)"""
+    the streaming form of a batch dropDuplicates. (Plain dropDuplicates
+    on a stream would accumulate every key forever.)"""
     return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
         ["event_id"]
     )

@@ -1,6 +1,6 @@
-"""Semantic tests for the round-5 finance/curation batch (plans.finance +
-the normalized/passage dedup operators) — cross-checks against independent
-in-Python recomputation, beyond the DuckDB oracle sweep."""
+"""Semantic tests for the round-5 finance batch (plans.finance) —
+cross-checks against independent in-Python recomputation, beyond the
+DuckDB oracle sweep."""
 
 from __future__ import annotations
 
@@ -100,43 +100,6 @@ def test_gapfill_contiguous_and_carry(spark):
         # First/last day of each user's spine is active by construction.
         assert rows[0]["n_events"] > 0 and rows[-1]["n_events"] > 0
     assert saw_gap, "fixture produced no gap days; spine untested"
-
-
-def test_normalized_dedup_merges_planted_mutants(spark, duck_smoke):
-    n_docs = duck_smoke.execute("SELECT count(*) FROM documents").fetchone()[0]
-    out = REGISTRY["dd_normalized_dedup"].spark(spark, SF_SMOKE).collect()
-    # Every group = {original, mutant}: the mutation (case, punctuation,
-    # spacing) must vanish under normalization, and no two originals
-    # collide (fixture corpus is exact-duplicate-free).
-    assert len(out) == n_docs
-    for r in out:
-        assert r["doc_id"] < 1_000_000  # representative is the original
-        assert r["n_copies"] == 2
-
-
-def test_passage_dupes_matches_bruteforce(spark, duck_smoke):
-    texts = dict(
-        duck_smoke.execute("SELECT doc_id, text FROM documents").fetchall()
-    )
-    pass_docs = defaultdict(set)
-    per_doc = {}
-    for did, text in texts.items():
-        w = text.split(" ")
-        ps = {" ".join(w[i : i + 16]) for i in range(len(w) - 15)}
-        if ps:
-            per_doc[did] = ps
-            for p in ps:
-                pass_docs[p].add(did)
-    out = REGISTRY["dd_passage_dupes"].spark(spark, SF_SMOKE).collect()
-    assert {r["doc_id"] for r in out} == set(per_doc)
-    some_dup = False
-    for r in out:
-        ps = per_doc[r["doc_id"]]
-        ndup = sum(1 for p in ps if len(pass_docs[p]) > 1)
-        assert r["n_passages"] == len(ps)
-        assert r["n_dup_passages"] == ndup
-        some_dup = some_dup or ndup > 0
-    assert some_dup, "no duplicated passages in fixture; operator untested"
 
 
 def test_attribution_matches_bruteforce(spark, duck_smoke):
@@ -314,30 +277,6 @@ def test_star_contraction_components(spark):
     }
     assert set(star) == set(range(60))
     assert set(star.values()) == {0}
-
-
-def test_normalized_dedup_empty_canonical_falls_back_to_raw_hash(spark):
-    """ADVICE r5: punctuation-only / non-ASCII docs canonicalize to the
-    empty string; without the raw-hash fallback they'd ALL mass-merge
-    under hash(''). They must dedup exactly (by raw text) instead."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators.dedup import (
-        normalized_dedup,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "!!!"),        # canonical = ''
-            (2, "???"),        # canonical = '' but different raw text
-            (3, "!!!"),        # raw-exact copy of doc 1
-            (4, "Hello, World"),
-            (5, "hello world!"),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["doc_id"]: r["n_copies"] for r in normalized_dedup(docs).collect()}
-    # 1 and 3 merge (raw-exact); 2 stays its own group; 4 and 5 merge
-    # (normalization); NOT one giant empty-canonical group.
-    assert out == {1: 2, 2: 1, 4: 2}
 
 
 def test_pagerank_dangling_redistribution_oracle_pinned(spark):

@@ -811,9 +811,6 @@ def test_new_r6_late_entries_plan_shapes(spark):
     BroadcastNestedLoopJoin (the sanctioned scalar-stat pattern) are
     checked for no-cartesian only."""
     equi_only = [
-        "dd_segment_dedup",
-        "dd_er_blocked_pairs",
-        "dd_qgram_edit_join",
         "ev_peak_concurrency",
         "ev_wau_stickiness",
         "ev_forecast_backtest",
@@ -862,8 +859,8 @@ def test_no_full_width_fact_scans_in_registry(spark):
     import pyarrow.parquet as pq
 
     full = {}
-    for t in ("orders", "lineitem", "events", "documents", "embeddings",
-              "customer", "supplier", "part"):
+    for t in ("orders", "lineitem", "events", "documents", "customer",
+              "supplier", "part"):
         p = os.path.join(SF_SMOKE, f"{t}.parquet")
         if os.path.exists(p):
             full[t] = len(pq.read_schema(p).names)

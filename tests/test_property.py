@@ -12,9 +12,6 @@ from pyspark.sql import functions as F
 from financial_transaction_data_warehouse_interactive_dashboard_spark.functions import (
     portable as P,
 )
-from financial_transaction_data_warehouse_interactive_dashboard_spark.operators.dedup import (
-    normalize_text,
-)
 
 SET = settings(
     max_examples=10,
@@ -55,53 +52,6 @@ def test_md5_long_parity_arbitrary_strings(spark, strings):
     )
     con.close()
     assert got == want
-
-
-# Case-stable alphabet for the MUTATION property: characters like 'ß'
-# (upper -> 'SS' -> lower 'ss') or 'ſ' break lower(upper(x)) == lower(x),
-# so uppercase-then-normalize is NOT invariant over full unicode — and the
-# dd_normalized_dedup mutation class only ever uppercases ASCII-like text.
-# Idempotence below keeps the full alphabet (it holds unconditionally).
-ascii_texts = st.text(
-    alphabet=st.characters(min_codepoint=32, max_codepoint=126), max_size=60
-)
-
-
-@given(st.lists(texts, min_size=1, max_size=30))
-@SET
-def test_normalize_text_idempotent(spark, strings):
-    """normalize(normalize(x)) == normalize(x) for ARBITRARY unicode:
-    the first pass's output is [a-z0-9 ]-only, single-spaced, trimmed —
-    a fixed point of every stage."""
-    rows = [(i, s) for i, s in enumerate(strings)]
-    df = spark.createDataFrame(rows, ["i", "t"])
-    out = df.select(
-        "i",
-        normalize_text("t").alias("n1"),
-        normalize_text(normalize_text("t")).alias("n2"),
-    ).collect()
-    for r in out:
-        assert r["n2"] == r["n1"], "not idempotent"
-
-
-@given(st.lists(ascii_texts, min_size=1, max_size=30))
-@SET
-def test_normalize_text_mutation_invariant(spark, strings):
-    """The dd_normalized_dedup mutation class (ASCII case flips,
-    punctuation injection, space runs) never changes the canonical
-    form."""
-    rows = [(i, s) for i, s in enumerate(strings)]
-    df = spark.createDataFrame(rows, ["i", "t"])
-    mutated = F.concat(
-        F.upper(F.regexp_replace("t", " ", ",  ")), F.lit("!!")
-    )
-    out = df.select(
-        "i",
-        normalize_text("t").alias("n1"),
-        normalize_text(mutated).alias("nm"),
-    ).collect()
-    for r in out:
-        assert r["nm"] == r["n1"], "mutation leaked into canonical form"
 
 
 @given(
@@ -240,50 +190,6 @@ SET5 = settings(
     derandomize=True,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-
-words = st.sampled_from(["aa", "bb", "cc", "dd", "ee", "ff"])
-docs_strategy = st.lists(
-    st.lists(words, min_size=1, max_size=18).map(" ".join),
-    min_size=1,
-    max_size=12,
-)
-
-
-@given(docs_strategy)
-@SET5
-def test_segment_dedup_matches_python_reference(spark, texts):
-    """segment_dedup == the obvious sequential implementation of the C4
-    rule (global first occurrence by (doc_id, seg_idx), ordered
-    reassembly) on arbitrary small corpora."""
-    from financial_transaction_data_warehouse_interactive_dashboard_spark.operators.dedup import (
-        segment_dedup,
-    )
-
-    k = 4
-    docs = {i: t for i, t in enumerate(texts)}
-    first: dict[str, tuple[int, int]] = {}
-    segmented = {}
-    for did in sorted(docs):
-        toks = docs[did].split(" ")
-        segs = [
-            " ".join(toks[i : i + k]) for i in range(0, len(toks), k)
-        ]
-        segmented[did] = segs
-        for idx, s in enumerate(segs):
-            first.setdefault(s, (did, idx))
-    want = {}
-    for did, segs in segmented.items():
-        kept = [
-            s for idx, s in enumerate(segs) if first[s] == (did, idx)
-        ]
-        want[did] = (len(segs), len(kept), " ".join(kept))
-    df = spark.createDataFrame(list(docs.items()), ["doc_id", "text"])
-    got = {
-        r["doc_id"]: (r["n_segments"], r["n_kept"], r["clean_text"])
-        for r in segment_dedup(df, seg_tokens=k).collect()
-    }
-    assert got == want
-
 
 edges_strategy = st.lists(
     st.tuples(

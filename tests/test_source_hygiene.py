@@ -107,8 +107,7 @@ def test_beyond_tier_first_import_order():
     # silently broke the invariant for the other tiers while CI stayed
     # green).
     tiers = [
-        "beyond_dedup", "beyond_events", "beyond_streaming", "beyond_text",
-        "beyond_warehouse",
+        "beyond_events", "beyond_streaming", "beyond_text", "beyond_warehouse",
     ]
     pkg = "financial_transaction_data_warehouse_interactive_dashboard_spark"
     # The expected count is the NORMAL-order registry size, read from

@@ -23,7 +23,7 @@ from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.re
 from conftest import SF_ORACLE, jobs_in_group
 
 # Oracles written in the ANSI subset both Spark SQL and DuckDB parse.
-# Excluded by dialect: DuckDB list comprehensions/lambdas (dd_*, tx_* except
+# Excluded by dialect: DuckDB list comprehensions/lambdas (tx_* except
 # token_count's regexp_extract_all arity), strftime/strptime (c1),
 # GROUP BY ROLLUP/CUBE syntax position (a8/a9 use Spark's own rollup test),
 # make_timestamp/epoch signatures (ev_sliding), FILTER-less engines: none.
@@ -120,10 +120,8 @@ def test_statistical_tier_analyst_phrases(phrase, expected):
 
 
 # Engine-wide analyst phrases (r7 extension of the statistical-tier set):
-# warehouse lifecycle, dedup/curation, streaming and finance families.
+# warehouse lifecycle, curation, streaming and finance families.
 ANALYST_PHRASES_WIDE = [
-    ("find near duplicate documents", "dd_minhash_lsh"),
-    ("remove exact duplicate documents", "dd_exact_dedup"),
     ("which documents leak benchmark test data", "tx_decontaminate"),
     ("redact emails and phone numbers from documents", "tx_pii_scrub"),
     ("leakage safe train test split by cluster", "tx_split_by_cluster"),
@@ -219,6 +217,8 @@ NOT_A_QUERY = [
     # Any other multi-part or unregistered name.
     "SELECT * FROM spark_catalog.default.orders",
     "SELECT * FROM run_sql_probe_view",
+    # A testdata file that no entry reads is not a registered view.
+    "SELECT * FROM embeddings",
 ]
 
 
