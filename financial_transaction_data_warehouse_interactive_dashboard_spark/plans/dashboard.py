@@ -7,25 +7,53 @@ query_data(quarter_range, types) filter; every chart re-filters the same
 frame). This module is that architecture on Spark:
 
 - ``Dashboard`` materializes the gold star-join once per (sf_dir) and
-  ``cache()``s it — the Spark analogue of @st.cache_data; every
-  subsequent query is a filtered agg over the InMemoryRelation, no
-  re-join, no re-scan.
-- widget parameters (quarter range, status list, top-k) are function
-  arguments, exactly like the reference's sidebar state (streamlit.py:
-  60-96), so an app layer maps widgets -> calls 1:1.
+  ``cache()``s it — the Spark analogue of @st.cache_data. A plan that
+  re-reads the gold lineage hits the InMemoryRelation through Spark's
+  cache manager.
+- The action that fills the cache also computes the widget cube: the
+  gold row count per distinct combination of every gold column but
+  ``o_orderkey``, collected to the driver as a pandas frame. Region is
+  a function of nation and quarter of qnum, so over the testdata
+  domains (4 quarters, 3 statuses, 5 segments, 25 nations, 5
+  priorities) the cube has at most 7,500 cells however many orders
+  there are.
+- Widgets are driver-side projections of that cube: filter the cells,
+  sum their counts, and return the result as a DataFrame over local
+  rows (a LocalRelation, whose ``collect()`` runs no Spark job).
+  Widget parameters (quarter range, status list, group key, top-k) are
+  function arguments, exactly like the reference's sidebar state
+  (streamlit.py:60-96), so an app layer maps widgets -> calls 1:1.
 
 Scale: at 100 TB the gold table is written partitioned (plans.etl.
 write_gold / sources.warehouse) and 'cache' becomes the storage layer +
-partition pruning; the query shapes below are unchanged — that is the
-point of authoring them against the gold schema, not the raw star.
+partition pruning; the cube stays a few thousand cells, because it grows
+with the dimension domains, not with the fact rows.
 """
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from .queries import _t
+
+KPI_SCHEMA = StructType(
+    [
+        StructField(c, LongType(), False)
+        for c in ("total", "open_tx", "finished_tx", "segments")
+    ]
+)
+
+
+def _counted(*keys: str) -> StructType:
+    """String group keys plus their ``n`` count, as Spark's groupBy
+    count would type them."""
+    return StructType(
+        [StructField(k, StringType(), True) for k in keys]
+        + [StructField("n", LongType(), False)]
+    )
 
 
 def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -60,66 +88,100 @@ def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 class Dashboard:
-    """Cached-gold query facade; one instance per session + scale dir."""
+    """Cached-gold widget facade; one instance per session + scale dir."""
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
         self.gold = build_gold(spark, sf_dir).cache()
+        dims = [c for c in self.gold.columns if c != "o_orderkey"]
+        # One action both fills the cache and collects the cube. The cube
+        # is aggregated in one task: that skips a shuffle and a job,
+        # which in a fresh session cost more set-up time than the
+        # aggregation itself (the gold of a single-row-group orders file
+        # is one partition anyway).
+        cells = self.gold.coalesce(1).groupBy(*dims).count().collect()
+        self.cube = pd.DataFrame(cells, columns=dims + ["n"])
+        self._statuses = sorted(self.cube["status"].dropna().unique())
+        # Every dimension but qnum (the quarter filter's key) can group.
+        self._keys = tuple(c for c in dims if c != "qnum")
 
-    def _filtered(
+    def _cells(
         self,
         quarters: tuple[int, int] = (1, 4),
         statuses: list[str] | None = None,
-    ) -> DataFrame:
-        """query_data analogue (streamlit.py:44-49): widget filters.
-
-        Bad parameters raise ``ValueError`` here, before any Spark job."""
+    ) -> pd.DataFrame:
+        """query_data analogue (streamlit.py:44-49): the cube cells the
+        widget filters keep. Bad parameters raise ``ValueError``."""
         lo, hi = quarters
         if not 1 <= lo <= hi <= 4:
             raise ValueError(
                 f"quarters must be (lo, hi) with 1 <= lo <= hi <= 4; got {quarters!r}"
             )
-        if statuses is not None and not statuses:
-            raise ValueError("statuses must be None (all) or a non-empty list; got []")
-        df = self.gold.filter(F.col("qnum").between(lo, hi))
         if statuses is not None:
-            df = df.filter(F.col("status").isin(statuses))
-        return df
+            if not statuses or any(s not in self._statuses for s in statuses):
+                raise ValueError(
+                    "statuses must be None (all) or a non-empty list drawn "
+                    f"from {self._statuses}; got {statuses!r}"
+                )
+        c = self.cube
+        keep = c["qnum"].between(lo, hi)
+        if statuses is not None:
+            keep &= c["status"].isin(statuses)
+        return c[keep]
+
+    def _frame(self, pdf: pd.DataFrame, schema: StructType) -> DataFrame:
+        """A DataFrame over driver-side rows. With Arrow on, a non-empty
+        pandas frame becomes a LocalRelation; an empty one would take the
+        RDD path, whose collect runs a job, so an empty result is the
+        zero-row limit of a one-row placeholder instead."""
+        if pdf.empty:
+            pdf = pd.DataFrame({f.name: [None if f.nullable else 0] for f in schema})
+            return self.spark.createDataFrame(pdf, schema).limit(0)
+        return self.spark.createDataFrame(pdf, schema)
 
     def kpis(self, **filters) -> DataFrame:
-        """KPI strip (streamlit.py:99-119) — one pass, conditional aggs."""
-        return self._filtered(**filters).agg(
-            F.count("*").alias("total"),
-            F.count(F.when(F.col("status") == "O", 1)).alias("open_tx"),
-            F.count(F.when(F.col("status") == "F", 1)).alias("finished_tx"),
-            F.countDistinct("segment").alias("segments"),
+        """KPI strip (streamlit.py:99-119)."""
+        c = self._cells(**filters)
+        n, status = c["n"], c["status"]
+        # Every cube cell counts at least one order, so the distinct
+        # non-null segments of the kept cells are countDistinct(segment).
+        row = [
+            n.sum(),
+            n[status == "O"].sum(),
+            n[status == "F"].sum(),
+            c["segment"].nunique(),
+        ]
+        return self._frame(
+            pd.DataFrame([row], columns=KPI_SCHEMA.names, dtype="int64"), KPI_SCHEMA
         )
 
     def quarter_matrix(self, **filters) -> DataFrame:
         """Stacked-bar input (streamlit.py:125-146)."""
-        return (
-            self._filtered(**filters)
-            .groupBy("quarter", "status")
-            .agg(F.count("*").alias("n"))
-            .orderBy("quarter", "status")
+        keys = ["quarter", "status"]
+        m = (
+            self._cells(**filters)
+            .groupby(keys, dropna=False, sort=False)["n"]
+            .sum()
+            .reset_index()
+            .sort_values(keys, na_position="first")
         )
+        return self._frame(m, _counted(*keys))
 
     def top_groups(self, key: str = "segment", k: int = 5, **filters) -> DataFrame:
-        """Top-k panel family (streamlit.py:249-356), deterministic ties."""
-        # Every gold column but o_orderkey (row identity) and qnum (the
-        # quarter filter's key) is a dimension; the schema needs no job.
-        dims = tuple(c for c in self.gold.columns if c not in ("o_orderkey", "qnum"))
-        if key not in dims:
-            raise ValueError(f"key must be one of {dims}; got {key!r}")
+        """Top-k panel family (streamlit.py:249-356), ties broken by key."""
+        if key not in self._keys:
+            raise ValueError(f"key must be one of {self._keys}; got {key!r}")
         if k < 1:
             raise ValueError(f"k must be >= 1; got {k!r}")
-        return (
-            self._filtered(**filters)
-            .groupBy(key)
-            .agg(F.count("*").alias("n"))
-            .orderBy(F.desc("n"), F.asc(key))
-            .limit(k)
+        top = (
+            self._cells(**filters)
+            .groupby(key, dropna=False, sort=False)["n"]
+            .sum()
+            .reset_index()
+            .sort_values(["n", key], ascending=[False, True], na_position="first")
+            .head(k)
         )
+        return self._frame(top, _counted(key))
 
     def close(self) -> None:
         self.gold.unpersist()

@@ -2454,7 +2454,7 @@ KM_BUCKET_DAYS = 30  # lifetime granularity (months)
     x AS (SELECT max(o_orderdate) AS mx FROM orders),
     s AS (SELECT CAST(floor(date_diff('day', f, l) / 30.0)
                       AS BIGINT) AS t,
-                 CASE WHEN l < mx - INTERVAL 90 DAY
+                 CASE WHEN l < mx - INTERVAL {KM_CHURN_GAP_DAYS} DAY
                       THEN 1 ELSE 0 END AS churned
           FROM c CROSS JOIN x),
     tot AS (SELECT count(*) AS total FROM s),
@@ -2487,7 +2487,7 @@ KM_BUCKET_DAYS = 30  # lifetime granularity (months)
 def a35_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KAPLAN-MEIER customer survival curve: S(t) = prod over lifetime
     buckets t' <= t of (1 - churned_t'/at_risk_t'), with customers whose
-    last order falls within 90 days of the corpus end
+    last order falls within KM_CHURN_GAP_DAYS (90) days of the corpus end
     treated as CENSORED (still alive — they leave the at-risk set
     without a churn event, the estimator's whole point and what a naive
     churn-rate cumsum gets wrong). Lifetime = days between first and
@@ -2516,7 +2516,7 @@ def a35_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("t"),
         F.when(
             F.col("l")
-            < F.col("mx") - F.expr(f"INTERVAL 90 DAY"),
+            < F.col("mx") - F.expr(f"INTERVAL {KM_CHURN_GAP_DAYS} DAY"),
             1,
         )
         .otherwise(0)

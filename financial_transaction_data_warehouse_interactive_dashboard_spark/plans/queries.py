@@ -91,11 +91,6 @@ def oracle_queries() -> dict[str, str]:
     }
 
 
-def all_queries() -> dict[str, SparkQuery]:
-    """Full registry including locally-pinned (driver=False) variants."""
-    return {n: q.spark for n, q in REGISTRY.items()}
-
-
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return load_table(spark, sf_dir, name)
 
@@ -110,11 +105,6 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def dsum(col, scale: int = 2):
     """Exact distributed sum of a monetary double: decimal-sum cast to double."""
     return F.sum(F.col(col).cast(f"decimal(30,{scale})")).cast("double")
-
-
-def dsum_expr(expr, scale: int = 6):
-    """Exact sum of a computed decimal expression, output as double."""
-    return F.sum(expr.cast(f"decimal(30,{scale})")).cast("double")
 
 
 # ===========================================================================

@@ -1,7 +1,7 @@
 """Rotation ledger — the machine-readable driver-surface history.
 
 The external driver caps its per-round correctness sweep at 50 queries,
-so the registry (181+ entries, every one oracle-pinned locally by
+so the registry (156 entries, every one oracle-pinned locally by
 tests/test_oracle_parity.py) rotates through the surface: each round a
 batch of never-driver-checked entries is promoted (``driver=True``) in
 place of siblings whose operator family already holds multiple green

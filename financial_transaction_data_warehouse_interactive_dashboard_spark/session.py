@@ -48,6 +48,11 @@ def get_spark(app_name: str = "ftdw-spark") -> SparkSession:
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # The engine caches one table, the dashboard's gold (150k rows at
+        # sf0.1). Compressing its column batches made the cache fill
+        # ~0.3 s slower (of ~0.8 s) in exchange for memory it does not
+        # need; uncompressed batches are also read back without decoding.
+        .config("spark.sql.inMemoryColumnarStorage.compressed", "false")
         # Small-dim broadcast is the backbone of the star-join plans; keep
         # the default 10 MB threshold explicit so it is documented here.
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))

@@ -3,6 +3,12 @@ consistent with the registry's star-join queries."""
 
 from __future__ import annotations
 
+import datetime as dt
+import os
+from itertools import combinations
+
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,10 +25,10 @@ from conftest import SF_SMOKE, jobs_in_group
 def test_dashboard_widget_queries(spark):
     d = Dashboard(spark, SF_SMOKE)
     try:
-        # Gold is cached: the plan of a second query must hit the
-        # InMemoryRelation, not re-scan parquet.
-        plan = d.kpis()._jdf.queryExecution().toString()
-        assert "InMemoryTableScan" in plan or "InMemoryRelation" in plan
+        # Gold stays cached; widgets read the cube that the cache fill
+        # collected, so they run no job.
+        assert d.gold.is_cached
+        assert jobs_in_group(spark, "widget_kpis", lambda: d.kpis().collect()) == []
 
         # Unfiltered top-segments == the registry's a1 ordering by count.
         top = {r["segment"]: r["n"] for r in d.top_groups("segment", k=10).collect()}
@@ -58,6 +64,8 @@ BAD_WIDGET_CALLS = [
     ("top_groups", {"key": "o_orderkey"}),
     ("top_groups", {"key": "bogus"}),
     ("top_groups", {"k": 0}),
+    ("kpis", {"statuses": ["Z"]}),
+    ("quarter_matrix", {"statuses": ["F", "Z"]}),
 ]
 
 
@@ -75,3 +83,218 @@ def test_widget_rejects_bad_parameters_before_any_job(spark, dash, widget, param
             getattr(dash, widget)(**params)
 
     assert jobs_in_group(spark, f"widget_reject_{widget}", call) == []
+
+
+def test_unknown_status_names_the_domain(spark, dash):
+    """An unknown status code fails before any job, naming the status
+    domain the cube holds."""
+
+    def call():
+        with pytest.raises(ValueError, match=r"\['F', 'O', 'P'\].*'Z'"):
+            dash.top_groups(statuses=["O", "Z"])
+
+    assert jobs_in_group(spark, "widget_reject_status", call) == []
+
+
+# ---------------------------------------------------------------------------
+# Cube parity: every widget call against DuckDB over the same gold
+# ---------------------------------------------------------------------------
+
+# The gold table as perfbench/checks.py:GOLD_SQL builds it.
+DUCK_GOLD = """
+CREATE OR REPLACE TEMP VIEW dash_gold AS
+SELECT o_orderkey, quarter(o_orderdate) AS qnum,
+       'Q' || CAST(quarter(o_orderdate) AS VARCHAR) AS quarter,
+       n_name AS nation_name, r_name AS region_name,
+       c_mktsegment AS segment, o_orderstatus AS status,
+       o_orderpriority AS priority
+FROM orders
+LEFT JOIN customer ON o_custkey = c_custkey
+LEFT JOIN nation ON c_nationkey = n_nationkey
+LEFT JOIN region ON n_regionkey = r_regionkey
+"""
+
+STATUSES = ("F", "O", "P")
+QUARTER_RANGES = [(lo, hi) for lo in range(1, 5) for hi in range(lo, 5)]
+STATUS_FILTERS = [None] + [
+    list(c) for r in range(1, len(STATUSES) + 1) for c in combinations(STATUSES, r)
+]
+GROUP_KEYS = ("segment", "nation_name", "region_name", "priority")
+TOP_K = (1, 3, 10)
+
+
+def _duck_widget(con, widget, quarters, statuses, key="segment", k=5):
+    """The widget's answer in DuckDB, in Spark's order (ascending sorts
+    put nulls first)."""
+    where = f"qnum BETWEEN {quarters[0]} AND {quarters[1]}"
+    if statuses is not None:
+        where += " AND status IN (" + ",".join(f"'{s}'" for s in statuses) + ")"
+    if widget == "kpis":
+        sql = f"""SELECT count(*), count(*) FILTER (WHERE status = 'O'),
+                  count(*) FILTER (WHERE status = 'F'), count(DISTINCT segment)
+                  FROM dash_gold WHERE {where}"""
+    elif widget == "quarter_matrix":
+        sql = f"""SELECT quarter, status, count(*) AS n FROM dash_gold
+                  WHERE {where} GROUP BY 1, 2 ORDER BY 1 NULLS FIRST, 2 NULLS FIRST"""
+    else:
+        sql = f"""SELECT {key}, count(*) AS n FROM dash_gold WHERE {where}
+                  GROUP BY 1 ORDER BY n DESC, 1 ASC NULLS FIRST LIMIT {k}"""
+    return [tuple(r) for r in con.execute(sql).fetchall()]
+
+
+def _widget_calls(widget):
+    for quarters in QUARTER_RANGES:
+        for statuses in STATUS_FILTERS:
+            if widget != "top_groups":
+                yield {"quarters": quarters, "statuses": statuses}
+                continue
+            for key in GROUP_KEYS:
+                for k in TOP_K:
+                    yield {"quarters": quarters, "statuses": statuses,
+                           "key": key, "k": k}
+
+
+WIDGET_COLUMNS = {
+    "kpis": lambda p: ["total", "open_tx", "finished_tx", "segments"],
+    "quarter_matrix": lambda p: ["quarter", "status", "n"],
+    "top_groups": lambda p: [p["key"], "n"],
+}
+
+
+@pytest.mark.parametrize("widget", sorted(WIDGET_COLUMNS))
+def test_cube_widgets_match_duckdb_with_no_job(spark, dash, duck_smoke, widget):
+    """Every quarter range x status subset (x group key x k) answers
+    row for row, in order, as DuckDB over the same gold does, and no
+    call's build or collect starts a Spark job."""
+    duck_smoke.execute(DUCK_GOLD)
+    domain = duck_smoke.execute(
+        "SELECT list(DISTINCT status ORDER BY status) FROM dash_gold"
+    ).fetchone()[0]
+    assert tuple(domain) == STATUSES
+    calls = list(_widget_calls(widget))
+    got = []
+
+    def run():
+        for params in calls:
+            df = getattr(dash, widget)(**params)
+            got.append((df.columns, [tuple(r) for r in df.collect()]))
+
+    assert jobs_in_group(spark, f"cube_sweep_{widget}", run) == []
+    bad = [
+        params
+        for params, (cols, rows) in zip(calls, got)
+        if cols != WIDGET_COLUMNS[widget](params)
+        or rows != _duck_widget(duck_smoke, widget, **params)
+    ]
+    assert not bad, bad[:5]
+    assert len(calls) == {"kpis": 80, "quarter_matrix": 80, "top_groups": 960}[widget]
+
+
+# ---------------------------------------------------------------------------
+# Null keys, ties and empty filters: the cube keeps the Spark semantics
+# ---------------------------------------------------------------------------
+
+
+def _spark_widget(gold, widget, quarters=(1, 4), statuses=None, key="segment", k=5):
+    """The widget as a Spark plan over the cached gold (how widgets were
+    answered before the cube): the reference for types and null order."""
+    df = gold.filter(F.col("qnum").between(*quarters))
+    if statuses is not None:
+        df = df.filter(F.col("status").isin(statuses))
+    if widget == "kpis":
+        return df.agg(
+            F.count("*").alias("total"),
+            F.count(F.when(F.col("status") == "O", 1)).alias("open_tx"),
+            F.count(F.when(F.col("status") == "F", 1)).alias("finished_tx"),
+            F.countDistinct("segment").alias("segments"),
+        )
+    if widget == "quarter_matrix":
+        return (
+            df.groupBy("quarter", "status")
+            .agg(F.count("*").alias("n"))
+            .orderBy("quarter", "status")
+        )
+    return (
+        df.groupBy(key)
+        .agg(F.count("*").alias("n"))
+        .orderBy(F.desc("n"), F.asc(key))
+        .limit(k)
+    )
+
+
+def _write_null_star(sf_dir):
+    """A tiny star whose gold has null quarters, statuses, priorities,
+    segments, nations and regions, tied counts, and no Q4 orders."""
+    pa_schema = {
+        "region": [("r_regionkey", pa.int32()), ("r_name", pa.string())],
+        "nation": [("n_nationkey", pa.int32()), ("n_name", pa.string()),
+                   ("n_regionkey", pa.int32())],
+        "customer": [("c_custkey", pa.int64()), ("c_name", pa.string()),
+                     ("c_nationkey", pa.int32()), ("c_acctbal", pa.float64()),
+                     ("c_mktsegment", pa.string())],
+        "orders": [("o_orderkey", pa.int64()), ("o_custkey", pa.int64()),
+                   ("o_orderstatus", pa.string()), ("o_totalprice", pa.float64()),
+                   ("o_orderdate", pa.timestamp("us")),
+                   ("o_orderpriority", pa.string())],
+    }
+    n_orders = 40
+    cols = {
+        "region": [[0, 1], ["R0", "R1"]],
+        # N2's region is missing: its orders have a null region_name.
+        "nation": [[0, 1, 2], ["N0", "N1", "N2"], [0, 1, 9]],
+        "customer": [
+            list(range(6)),
+            [f"C{i}" for i in range(6)],
+            [0, 1, 2, None, 0, 1],
+            [0.0] * 6,
+            ["A", "B", None, "A", "B", "C"],
+        ],
+        # Customer 6 does not exist: its orders have null dimensions.
+        "orders": [
+            list(range(n_orders)),
+            [i % 7 for i in range(n_orders)],
+            [("F", "O", "P", None)[i % 4] for i in range(n_orders)],
+            [1.0] * n_orders,
+            [None if i % 9 == 0 else dt.datetime(2024, 1 + i % 9, 1)
+             for i in range(n_orders)],
+            [(None, "1-URGENT", "2-HIGH")[i % 3] for i in range(n_orders)],
+        ],
+    }
+    for name, fields in pa_schema.items():
+        schema = pa.schema(fields)
+        pq.write_table(
+            pa.table(dict(zip(schema.names, cols[name])), schema=schema),
+            os.path.join(sf_dir, f"{name}.parquet"),
+        )
+
+
+def test_cube_keeps_spark_null_order_types_and_empty_results(spark, tmp_path):
+    _write_null_star(str(tmp_path))
+    d = Dashboard(spark, str(tmp_path))
+    try:
+        calls = [("kpis", {}), ("quarter_matrix", {})]
+        for quarters in [(2, 3), (4, 4)]:
+            for statuses in [None, ["O", "P"]]:
+                f = {"quarters": quarters, "statuses": statuses}
+                calls += [("kpis", f), ("quarter_matrix", f)]
+                for key in d.gold.columns[2:]:
+                    for k in (1, 10):
+                        calls.append(("top_groups", {**f, "key": key, "k": k}))
+        empty = 0
+        for widget, params in calls:
+            got = getattr(d, widget)(**params)
+            want = _spark_widget(d.gold, widget, **params)
+            rows = got.collect()
+            assert (got.schema, rows) == (want.schema, want.collect()), (widget, params)
+            empty += widget == "kpis" and rows[0]["total"] == 0
+        assert empty == 2  # both Q4-only filters
+        empty_call = lambda: d.top_groups(quarters=(4, 4)).collect()  # noqa: E731
+        assert jobs_in_group(spark, "widget_empty", empty_call) == []
+        # The comparison is not vacuous: null statuses sort first, and
+        # every group key but quarter (a null quarter never passes the
+        # quarter filter) has a null group.
+        assert tuple(d.quarter_matrix().collect()[0])[:2] == ("Q1", None)
+        for key in d.gold.columns[3:]:
+            assert None in {r[key] for r in d.top_groups(key, k=10).collect()}, key
+    finally:
+        d.close()

@@ -64,6 +64,10 @@ COLLECT_ALLOWED: dict[str, int] = {
     # a production 50k-merge vocab is still MBs — bounded by Heaps'
     # law, never by corpus size) to feed the Arrow tokenizer.
     f"{PKG}/plans/beyond_text.py": 1,
+    # plans/dashboard.py: the widget cube, one row per distinct gold
+    # dimension combination (<= 7,500 at any scale: the product of the
+    # quarter, status, segment, nation and priority domains).
+    f"{PKG}/plans/dashboard.py": 1,
 }
 
 
@@ -135,3 +139,47 @@ def test_beyond_tier_first_import_order():
         assert res.returncode == 0 and "OK" in res.stdout, (
             tier, res.stderr[-2000:]
         )
+
+
+def test_testdata_footers_match_declared_schemas():
+    """``sources.registry.load_table`` reads every testdata table but
+    ``events`` with its declared ``schemas.TESTDATA`` schema instead of
+    inferring one, so each parquet footer must declare the same columns,
+    in the same order, with the same types. Spark-free: pyarrow reads
+    the footers."""
+    import glob
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from conftest import SF_SMOKE
+    from financial_transaction_data_warehouse_interactive_dashboard_spark.schemas import (
+        TESTDATA,
+    )
+
+    # TimestampType is written tz-naive; the session reads it as
+    # TIMESTAMP (spark.sql.parquet.inferTimestampNTZ.enabled=false).
+    arrow_type = {
+        T.IntegerType(): pa.int32(),
+        T.LongType(): pa.int64(),
+        T.DoubleType(): pa.float64(),
+        T.StringType(): pa.string(),
+        T.TimestampType(): pa.timestamp("us"),
+    }
+    dirs = sorted(glob.glob(os.path.join(os.path.dirname(SF_SMOKE), "sf*")))
+    fixtures = os.path.join(REPO, "tests", "fixtures")
+    checked, mismatched = 0, []
+    for name, schema in TESTDATA.items():
+        if name == "events":
+            continue
+        paths = [os.path.join(d, f"{name}.parquet") for d in dirs]
+        paths += glob.glob(os.path.join(fixtures, "**", f"{name}.parquet"), recursive=True)
+        for path in filter(os.path.exists, paths):
+            footer = pq.read_schema(path)
+            declared = [(f.name, arrow_type[f.dataType]) for f in schema.fields]
+            if [(f.name, f.type) for f in footer] != declared:
+                mismatched.append((path, footer.names, footer.types))
+            checked += 1
+    assert dirs and checked >= 8 * len(dirs), (dirs, checked)
+    assert not mismatched, mismatched
