@@ -32,7 +32,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """One entry per implemented operator from SURVEY.md section 2."""
+    """The fixed ``DRIVER_SURFACE``: the paper's queries, its four gap
+    rows and the write paths the benchmark runs."""
     return _q.spark_queries()
 
 

@@ -130,7 +130,6 @@ _PII_PHONE = r"\+?\d[\d-]{7,}\d"
            CAST(ntile(4)     OVER (ORDER BY n DESC, nation) AS INTEGER) AS quartile
     FROM counts ORDER BY rnk
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def w5_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """rank / dense_rank / ntile over grouped counts (SURVEY.md section 2.5
@@ -166,7 +165,6 @@ def w5_rank_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS approx_in_bound
     FROM orders GROUP BY 1 ORDER BY status
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a5_unique_customers_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COUNT(DISTINCT) at 100 TB: approx_count_distinct (HyperLogLog++,
@@ -231,7 +229,6 @@ def a5_unique_customers_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ELSE 'regular' END AS segment
     FROM scored ORDER BY custkey
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a16_rfm_segmentation(
     spark: SparkSession, sf_dir: str, *, scale_safe: bool = False
@@ -345,7 +342,6 @@ def a16_rfm_segmentation(
                 ELSE 'C' END AS abc_class
     FROM c ORDER BY cum_share, custkey
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a17_pareto_customers(
     spark: SparkSession, sf_dir: str, *, scale_safe: bool = False
@@ -425,8 +421,6 @@ def a17_pareto_customers(
     SELECT 0, count(DISTINCT o_custkey), TRUE FROM orders
     ORDER BY quarter
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a15_hll_mergeable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGEABLE sketch architecture — the reason sketches matter at
@@ -594,7 +588,6 @@ _CDC_ORACLE = """
     FROM probe JOIN build USING (uid)
     GROUP BY 1 ORDER BY segment
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def sk_salted_hot_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skew-mitigation salted join under the correctness gate: the probe

@@ -37,7 +37,6 @@ from .queries import _t, query
            sum(value::DECIMAL(30,6))::DOUBLE AS total_value
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def ev_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tumbling 1-hour windows per event_type (streaming.windows.tumbling)."""
@@ -58,7 +57,6 @@ def ev_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events, range(0, 4) AS r(k)
     GROUP BY 1 ORDER BY 1
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def ev_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding 1h/15m windows (each event in 4 windows; the oracle expands
@@ -89,7 +87,6 @@ def ev_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, sid
     ORDER BY user_id, first_ts
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def ev_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """30-min-gap sessions per user via F.session_window; the oracle is the
@@ -119,7 +116,6 @@ def ev_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS purchased_after_click
     FROM firsts
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def ev_funnel_vcp(spark: SparkSession, sf_dir: str) -> DataFrame:
     """view -> click -> purchase funnel by first-occurrence ordering.
@@ -169,7 +165,6 @@ def ev_funnel_vcp(spark: SparkSession, sf_dir: str) -> DataFrame:
            day_value
     FROM daily ORDER BY day
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def ev_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day rolling event count — a RANGE window frame over epoch
@@ -218,8 +213,6 @@ def ev_rolling_7d(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(new_users) OVER (ORDER BY day) AS BIGINT) AS cum_users
     FROM daily ORDER BY day
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def ev_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily new + cumulative distinct users via the FIRST-SEEN
@@ -265,8 +258,6 @@ def ev_cumulative_uniques(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(*) AS n_active
     FROM c GROUP BY 1, 2 ORDER BY cohort_week, week_offset
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weekly cohort retention triangle — users grouped by first-active
@@ -320,9 +311,6 @@ def ev_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM px
     GROUP BY 1 ORDER BY event_type
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def ev_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi-structured extraction via ONE schematized parse: from_json
@@ -371,11 +359,6 @@ def ev_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS bucket_lo
     FROM b GROUP BY bucket ORDER BY bucket
     """,
-    # Demoted r4 to fund st_foreach_batch_sink under the 50-row driver
-    # cap: the distribution-summary family keeps a13_percentile_sketch
-    # driver-green (and this entry went driver-green r3); locally
-    # oracle-pinned.
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def ev_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram of a continuous measure — the dashboard
@@ -440,8 +423,6 @@ def ev_value_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT path, count(*) AS n
     FROM t GROUP BY 1 ORDER BY n DESC, path LIMIT 10
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def ev_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top event PATHS — sequence mining over per-user journeys: the ten
@@ -492,8 +473,6 @@ def ev_top_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(n::DOUBLE / sum(n) OVER (PARTITION BY src), 6) AS p
     FROM t ORDER BY src, dst
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def ev_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type transition matrix (first-order Markov estimate of user
@@ -541,7 +520,6 @@ def ev_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND p.ts >= v.ts
     ORDER BY event_id
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def ev_asof_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """As-of join: each purchase to the user's latest prior-or-equal view
@@ -603,7 +581,6 @@ def ev_asof_view_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM b JOIN f USING (event_id)
     ORDER BY event_id
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def ev_asof_nearest_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAREST-direction as-of join: each purchase to the user's closest
@@ -683,14 +660,13 @@ def ev_asof_nearest_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM bv JOIN ne USING (event_id)
     ORDER BY event_id
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def ev_asof_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BOTH as-of directions on one driver row: each purchase gets (a) the
-    user's latest prior-or-equal view (backward as-of — the demoted
+    """BOTH as-of directions in one entry: each purchase gets (a) the
+    user's latest prior-or-equal view (backward as-of — the
     ev_asof_view_purchase operator) and (b) the user's closest error
     event in either time direction, ties to backward (nearest as-of —
-    the demoted ev_asof_nearest_error operator). Two invocations of
+    the ev_asof_nearest_error operator). Two invocations of
     operators.temporal.asof_join (union + carry-forward window; one
     shuffle each), merged on event_id. The oracle composes DuckDB's
     native directional ASOF joins with the same tie-break CASE, so both
@@ -748,7 +724,6 @@ def ev_asof_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY event_id
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def ev_range_views_before_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Range (interval) join: views in the hour before each purchase,
@@ -807,9 +782,6 @@ def ev_range_views_before_purchase(spark: SparkSession, sf_dir: str) -> DataFram
            round(min(value), 6) AS lo, round(max(value), 6) AS hi
     FROM b GROUP BY 1 ORDER BY bin
     """,
-    # New r5 (locally pinned; distribution-summary family's driver row is
-    # a13_percentile_sketch).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def ev_equidepth_histogram(
     spark: SparkSession, sf_dir: str, *, scale_safe: bool = False
@@ -874,7 +846,6 @@ def ev_equidepth_histogram(
              AS n_session_days
     FROM c GROUP BY day ORDER BY day
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily PEAK concurrent sessions — the sweep-line / interval-overlap
@@ -970,7 +941,6 @@ def ev_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(d.dau::DOUBLE / w.wau, 6) AS stickiness
     FROM dau d JOIN wau w ON d.day = w.day ORDER BY day
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DAU, trailing-7-day WAU, and the DAU/WAU stickiness ratio per
@@ -1039,7 +1009,6 @@ def ev_wau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
            1 AS hll_within_tol
     FROM days d JOIN mau m ON d.day = m.day ORDER BY day
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_active_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing 14-day active users two ways: EXACT (the
@@ -1158,7 +1127,6 @@ def ev_active_users_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / 1000000.0, 6) AS p90_s
     FROM r GROUP BY day ORDER BY day
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """View-to-purchase conversion LATENCY per day (lower median and
@@ -1254,7 +1222,6 @@ def ev_time_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY overlap_us DESC, n_overlaps DESC, user_a, user_b
     LIMIT 20
     """,
-    driver=False,  # authored r16 (range join); queued in NEXT_QUEUE for r17
 )
 def ev_session_overlap_pairs(
     spark: SparkSession, sf_dir: str

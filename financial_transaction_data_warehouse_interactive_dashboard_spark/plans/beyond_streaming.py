@@ -28,8 +28,6 @@ from .queries import _t, query
 @query(
     "st_cdc_apply",
     _CDC_ORACLE,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=True,  # rotated IN r8 (first driver row; plans/rotation.py)
 )
 def st_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STREAMING face of wh_cdc_apply — same base, same synthetic
@@ -61,9 +59,6 @@ def st_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
            sum(value::DECIMAL(30,6))::DOUBLE AS total_value
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def st_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """streaming.windows.tumbling executed as a real Structured Streaming
@@ -90,7 +85,6 @@ def st_tumbling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
            sum(value::DECIMAL(30,6))::DOUBLE AS total_value
     FROM events GROUP BY 1, 2 ORDER BY 1, 2
     """,
-    driver=True,  # rotated IN r7 (first driver row; plans/rotation.py)
 )
 def st_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark late-data semantics under the gate
@@ -118,7 +112,6 @@ def st_late_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_id, ts, user_id, event_type, value, props
     FROM events ORDER BY event_id
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def st_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming exact-dedup (dropDuplicatesWithinWatermark) against an
@@ -153,7 +146,6 @@ def st_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, sid
     ORDER BY user_id, first_ts
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def st_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The CUSTOM stateful streaming operator (applyInPandasWithState +
@@ -213,7 +205,6 @@ def st_sessionize_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, sid
     ORDER BY user_id, first_ts
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def st_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """APPEND-mode streaming session windows (the hard case: a session is
@@ -237,7 +228,6 @@ def st_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS total_value
     FROM events GROUP BY 1 ORDER BY event_type
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def st_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming egress through foreachBatch into a PARQUET sink (the
@@ -271,8 +261,6 @@ def st_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CAST(value AS DECIMAL(30,6))) AS DOUBLE) AS total_value
     FROM events GROUP BY 1, 2 ORDER BY day, event_type
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # rotated IN r8 (first driver row; plans/rotation.py)
 )
 def st_stream_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming warehouse ingest — the Kappa capstone composing the
@@ -306,10 +294,6 @@ def st_stream_merge_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM events JOIN customer ON user_id = c_custkey
     GROUP BY 1 ORDER BY segment
     """,
-    # Locally-pinned (driver surface capped at 50): the stateless
-    # broadcast-enrichment half of the streaming join story; the
-    # stateful half is st_stream_stream_join.
-    driver=True,  # rotated IN r9 (first driver row; plans/rotation.py)
 )
 def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static broadcast enrichment executed as a real streaming
@@ -337,8 +321,6 @@ def st_stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
      AND v.ts < p.ts
     ORDER BY event_id, v_ts
     """,
-    # Promoted r5 into the driver surface (rotation: first driver row).
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream event-time interval join run end-to-end as a real
@@ -377,7 +359,6 @@ def st_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
            1 AS hll_within_tol
     FROM events GROUP BY 1 ORDER BY 1
     """,
-    driver=True,  # rotated IN r7 wave-2 (first driver row; plans/rotation.py)
 )
 def st_daily_actives_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day distinct active users computed by a REAL Structured
@@ -443,7 +424,6 @@ _ST_BPE_IDS_DUCK = _T.bpe_token_ids_sql("duckdb")
            md5(coalesce(array_to_string(ids, ','), '')) AS tokens_md5
     FROM ids ORDER BY doc_id
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def st_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming BPE tokenization (streaming.stream.run_stream_tokenize)
@@ -468,9 +448,6 @@ def st_bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     # contract — the streamed two-microbatch union must reproduce
     # every symbol of the batch train->apply composition.
     _T.bpe_train_apply_sql(),
-    # New r11 (VERDICT r10 ask #5); first-timer on the r11 surface
-    # after all-three-scale pre-validation (plans/rotation.py).
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def st_bpe_tokenize_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize-on-ingest with the LEARNED vocabulary — the production

@@ -58,7 +58,6 @@ from .queries import _t, query
            lang AS labeled_lang
     FROM h ORDER BY doc_id
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def tx_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lexicon-overlap language ID: argmax of marker hits, ties to the
@@ -118,9 +117,6 @@ def tx_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id)
     ORDER BY doc_id
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    # promoted r6 (rotation: first driver row)
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def tx_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LEAKAGE-SAFE train/test split: a document's split is decided by
@@ -204,15 +200,13 @@ def tx_split_by_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM h JOIN hw USING (doc_id)
     ORDER BY doc_id
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def tx_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full per-document text-analysis profile in ONE driver row:
+    """The full per-document text-analysis profile in ONE entry:
     language-ID (lexicon argmax), quality scoring, token counting, and
-    rolling-hash fingerprinting — the four operators the demoted
+    rolling-hash fingerprinting — the four operators the
     tx_lang_id / tx_quality_score / tx_token_count / tx_fingerprint
-    entries pin individually (each still locally oracle-checked; this
-    merged projection is what the capped driver sweep verifies).
+    entries pin individually.
 
     Plan shape: three branches over one documents scan — the
     explode+codegen profile shuffle (functions.text.text_profile), a
@@ -270,7 +264,6 @@ def tx_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            )::BIGINT AS quality_pts
     FROM d ORDER BY doc_id
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def tx_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Composite document-quality score (C4/Gopher-filter shape), computed
@@ -315,8 +308,6 @@ def tx_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS expected_epochs
     FROM pw, s ORDER BY source
     """,
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Temperature-scaled source mixture (the multilingual-sampling
@@ -386,7 +377,6 @@ def tx_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
            length(text)::BIGINT AS n_chars_seen
     FROM documents ORDER BY doc_id
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def tx_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + regex letter/digit runs."""
@@ -418,7 +408,6 @@ def tx_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS min_window_hash
     FROM hw ORDER BY doc_id
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def tx_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rolling-hash doc fingerprint + winnowing-style min 4-token window.
@@ -451,7 +440,6 @@ def tx_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) <= 3
     ORDER BY doc_id, tfidf DESC, term
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def tx_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus TF-IDF, top-3 terms per document.
@@ -492,7 +480,6 @@ def tx_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(n_chars) AS BIGINT) AS chars
     FROM documents GROUP BY 1, 2 ORDER BY split, lang
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def tx_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 80/10/10 train/val/test split by key hash
@@ -535,8 +522,6 @@ def tx_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1 HAVING count(*) >= 2
     ORDER BY n_shared DESC, doc_id ASC
     """,
-    # Promoted r5 into the driver surface (rotation: first driver row).
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def tx_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Test-set decontamination report
@@ -569,9 +554,6 @@ def tx_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM documents)
     SELECT doc_id, lang FROM r WHERE rk <= 20 ORDER BY lang, doc_id
     """,
-    # Locally-pinned (driver surface capped at 50): same portable-md5
-    # determinism family as tx_hash_split, which is driver-green.
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exactly-20-docs-per-language stratified sample
@@ -602,8 +584,6 @@ def tx_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v, t WHERE n > 0.001 * total
     ORDER BY n DESC, gram
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_heavy_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequent collocations (word bigrams with >0.1% corpus share) via
@@ -651,8 +631,6 @@ def tx_heavy_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM tok JOIN lp USING (term)
     GROUP BY doc_id ORDER BY doc_id
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus unigram language-model scoring — the statistical quality
@@ -714,8 +692,6 @@ def tx_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT doc_id, lang, n_chars FROM r WHERE rk <= 15
     ORDER BY lang, doc_id
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Length-weighted per-language sample
@@ -755,8 +731,6 @@ def tx_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS chunk_text
     FROM s ORDER BY doc_id, chunk_idx
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-window document CHUNKING — the context-window splitter of
@@ -813,9 +787,6 @@ def tx_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(n_chars) AS BIGINT) AS total_chars
     FROM o GROUP BY 1, 2 ORDER BY lang, bin
     """,
-    # Locally-pinned (driver surface capped at 50): window-cumsum family
-    # is driver-covered by w1/w5; the packing rule itself is pinned here.
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing for training batches: documents laid out per
@@ -860,8 +831,6 @@ def tx_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
                               '{_PII_PHONE}', '<PHONE>', 'g')) AS clean_md5
     FROM injected ORDER BY doc_id
     """,
-    # Promoted r5 into the driver surface (rotation: first driver row).
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def tx_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrubbing — the redaction pass every LLM training pipeline
@@ -923,9 +892,6 @@ def tx_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS rep_ratio
     FROM b WHERE len(bg) > 0 ORDER BY doc_id
     """,
-    # Locally-pinned (driver surface capped at 50): same explode-free
-    # array-expression family as tx_text_profile, which is driver-green.
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gopher-style repetition quality signal: the fraction of duplicate
@@ -1001,8 +967,6 @@ def tx_repetition_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(sum(logp) AS DOUBLE) / count(*), 6) AS avg_logp
     FROM lp GROUP BY doc_id ORDER BY doc_id
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interpolated BIGRAM language-model scoring — the second-order
@@ -1092,7 +1056,6 @@ def tx_bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT ck AS custkey, b AS neg_brand, rnk
     FROM r WHERE rnk <= {NEG_K} ORDER BY custkey, rnk
     """,
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic negative sampling for contrastive training pairs:
@@ -1185,7 +1148,6 @@ def tx_negative_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM corrupted c LEFT JOIN target tg ON c.doc_id = tg.doc_id
     ORDER BY doc_id
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5-style SPAN CORRUPTION (Raffel et al. 2020 §3.1.4): mask
@@ -1326,7 +1288,6 @@ def tx_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS curriculum_pos
     FROM q ORDER BY curriculum_pos
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_curriculum_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Curriculum ordering of the training corpus: every document gets a
@@ -1380,9 +1341,6 @@ _BPE_PACK_BUDGET = 512  # tokens per packed training sequence
            md5(coalesce(array_to_string(ids, ','), '')) AS tokens_md5
     FROM ids ORDER BY doc_id
     """,
-    # New r9 (VERDICT r8 ask #6); flipped onto the driver surface in the
-    # r9 rotation commit after both-scale pre-validation.
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer-grade BPE merge-table application
@@ -1456,10 +1414,6 @@ def tx_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(n_tokens) AS BIGINT) AS total_tokens
     FROM o GROUP BY 1, 2 ORDER BY lang, bin
     """,
-    # New r9 (VERDICT r8 ask #6 follow-through: packing consumes REAL
-    # tokenizer lengths); flipped onto the driver surface in the r9
-    # rotation commit after both-scale pre-validation.
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def tx_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sequence packing over REAL tokenizer lengths: the offset-bin
@@ -1494,10 +1448,6 @@ def tx_bpe_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_bpe_train",
     T.bpe_train_sql(),
-    # New r9 (tokenizer-training capstone next to tx_bpe_apply);
-    # promoted from NEXT_QUEUE in the r10 rotation after all-scale
-    # pre-validation.
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def tx_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed BPE TRAINING (functions.text.bpe_train): learn the
@@ -1534,9 +1484,6 @@ def tx_bpe_train(spark: SparkSession, sf_dir: str) -> DataFrame:
            md5(coalesce(array_to_string(ids, ','), '')) AS tokens_md5
     FROM ids ORDER BY doc_id
     """,
-    # New r10 (VERDICT r9 ask #3); first-timer on the r10 surface after
-    # all-three-scale pre-validation (plans/rotation.py).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def tx_bpe_apply_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ARROW tokenizer path (functions.text.bpe_tokenize_arrow)
@@ -1589,9 +1536,6 @@ def tx_bpe_apply_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_bpe_train_apply",
     T.bpe_train_apply_sql(),
-    # New r10 (VERDICT r9 ask #3); first-timer on the r10 surface after
-    # all-three-scale pre-validation (plans/rotation.py).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def tx_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRAIN -> APPLY composition: the merge table comes from
@@ -1642,9 +1586,6 @@ def tx_bpe_train_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "tx_bpe_apply64",
     T.bpe_apply_fixed_sql(T.BPE_MERGES64),
-    # New r11 (VERDICT r10 ask #2); first-timer on the r11 surface
-    # after all-three-scale pre-validation (plans/rotation.py).
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def tx_bpe_apply64(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Arrow tokenizer at a 64-MERGE table — the depth where the
@@ -1723,9 +1664,6 @@ _BPE_WORDS_SPARK = T.bpe_words_sql("spark")
              AS merged_frac6
     FROM g ORDER BY lang
     """,
-    # New r10 (tokenizer-eval tier, authored after the r10 flip); joins
-    # the r11 NEXT_QUEUE — locally oracle-pinned at all three scales.
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def tx_bpe_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer FERTILITY evaluation per language — the standard

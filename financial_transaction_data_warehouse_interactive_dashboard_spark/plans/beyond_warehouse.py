@@ -72,8 +72,6 @@ from .queries import _t, query
       FROM n
     ) ORDER BY col_name
     """,
-    # Promoted r5 into the driver surface (rotation: first driver row).
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def wh_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column table profile (operators.quality.profile): counts,
@@ -130,8 +128,6 @@ def wh_table_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
            n = 0 AS passed
     FROM checks ORDER BY check_name
     """,
-    # Promoted r5 into the driver surface (rotation: first driver row).
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def wh_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Data-quality expectations battery (operators.quality) over the
@@ -189,8 +185,6 @@ def wh_expectations(spark: SparkSession, sf_dir: str) -> DataFrame:
             IS NULL) AS is_current
     FROM v ORDER BY custkey, version
     """,
-    # Promoted r6 (rotation: first driver row).
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def wh_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD type-2 dimension history (operators.scd.scd2_from_changes):
@@ -253,8 +247,6 @@ def wh_scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
       ON f.custkey = h.custkey AND f.ts >= h.valid_from
     ORDER BY f.custkey, f.ts
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # rotated IN r9 (first driver row; plans/rotation.py)
 )
 def wh_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Point-in-time dimension lookup (operators.scd.scd2_lookup): every
@@ -312,8 +304,6 @@ def wh_scd2_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS total_price
     FROM orders GROUP BY 1, 2 ORDER BY quarter, status
     """,
-    # New r5 (locally pinned; rotation candidate for r6's driver swap).
-    driver=True,  # rotated IN r8 (first driver row; plans/rotation.py)
 )
 def wh_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INCREMENTAL summary-table maintenance — the other half of the
@@ -420,7 +410,6 @@ def wh_incremental_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS total_price
     FROM final GROUP BY 1, 2 ORDER BY quarter, status
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def wh_gold_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The STORAGE layer under the driver's correctness gate: build a
@@ -512,7 +501,6 @@ def wh_gold_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM v2
     ORDER BY version
     """,
-    driver=True,  # rotated IN r7 wave-2 (first driver row; plans/rotation.py)
 )
 def wh_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time travel under the correctness gate: commit version 0 (the raw
@@ -588,7 +576,6 @@ def wh_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     UNION ALL SELECT 3, 1, (SELECT count(*) FROM v3)
     ORDER BY version
     """,
-    driver=True,  # rotated IN r7 wave-2 (first driver row; plans/rotation.py)
 )
 def wh_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retention VACUUM under the gate: build four snapshot versions
@@ -664,7 +651,6 @@ def wh_vacuum_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS n_null_channel
     FROM g GROUP BY 1 ORDER BY 1
     """,
-    driver=True,  # rotated IN r7 wave-2 (first driver row; plans/rotation.py)
 )
 def wh_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema evolution on plain parquet: batch 1 (H1 orders) lands
@@ -717,8 +703,6 @@ def wh_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
 @query(
     "wh_cdc_apply",
     _CDC_ORACLE,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=True,  # rotated IN r9 (first driver row; plans/rotation.py)
 )
 def wh_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC changelog apply (operators.scd.apply_changelog): a
@@ -794,9 +778,6 @@ def wh_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM pl CROSS JOIN s)
     SELECT * FROM az UNION ALL SELECT * FROM al ORDER BY layout
     """,
-    # New r6 (driver-facing from birth — VERDICT r5 ask #5: put the
-    # Z-order storage-layout claim under the hard signal).
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def wh_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Z-order/file-skipping proof as a DRIVER query (r5 verdict ask
@@ -951,7 +932,6 @@ def wh_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / (n_probe - n_true_members), 6) AS fpr
     FROM audit
     """,
-    driver=True,  # rotated IN r7 (first driver row; plans/rotation.py)
 )
 def wh_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit portable Bloom-filter join pruning with an EXACT
@@ -1032,7 +1012,6 @@ def wh_bloom_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY 1 ORDER BY 1
     """,
-    driver=True,  # rotated IN r7 (first driver row; plans/rotation.py)
 )
 def wh_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed CO-LOCATED join proof under the hash gate: orders and
@@ -1170,7 +1149,6 @@ def wh_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                                  0) AS DOUBLE) FROM full_j)
              AS revenue_full
     """,
-    driver=True,  # rotated IN r7 wave-2 (first driver row; plans/rotation.py)
 )
 def wh_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance for a materialized JOIN, proved by
@@ -1267,7 +1245,6 @@ def wh_incremental_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     "wh_orphan_audit",
     "\nUNION ALL\n".join(_orphan_edge_sql(*e) for e in _FK_EDGES)
     + "\nORDER BY relationship",
-    driver=True,  # rotated IN r7 wave-2 (first driver row; plans/rotation.py)
 )
 def wh_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Referential-integrity audit over EVERY foreign-key edge of the
@@ -1330,9 +1307,6 @@ def wh_orphan_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
            n_rows, total_price
     FROM g ORDER BY q
     """,
-    # New r8 (locally pinned; backlog — rotation candidate once the r9
-    # queue clears).
-    driver=True,  # rotated IN r9 (first driver row; plans/rotation.py)
 )
 def wh_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Small-files COMPACTION under the oracle gate — the standing

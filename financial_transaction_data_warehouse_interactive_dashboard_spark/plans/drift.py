@@ -67,7 +67,6 @@ from .queries import _t, query
                          * least(nr - 1, nc - 1))), 6) AS cramers_v
     FROM dims
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def qa_chi_square_segment_status(
     spark: SparkSession, sf_dir: str
@@ -190,7 +189,6 @@ PSI_WIDTH = 60000  # fixed-width bins over o_totalprice (~850..530k)
            (SELECT round(CAST(sum(x) AS DOUBLE), 6) FROM contrib) AS psi_total
     FROM contrib ORDER BY bin
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def qa_psi_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index of the order-price distribution, 1995
@@ -298,7 +296,6 @@ def qa_psi_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM cum, n) AS ks_d
     FROM n
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def qa_ks_two_sample(
     spark: SparkSession, sf_dir: str, scale_safe: bool = False
@@ -393,7 +390,6 @@ def qa_ks_two_sample(
                  6) AS autocorr_lag1
     FROM m
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_autocorr_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lag-1 autocorrelation of daily event revenue: Pearson r over
@@ -475,8 +471,6 @@ EWMA_WEIGHTS = [0.5**k for k in range(EWMA_K)]
     SELECT d AS day, round(num / den, 6) AS ewma
     FROM e ORDER BY day
     """,
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exponentially-weighted moving average of daily event revenue with
@@ -567,7 +561,6 @@ def ev_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6) AS r2
     FROM m
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     """OLS trend of daily event revenue — slope (revenue change per
@@ -650,7 +643,6 @@ def ev_trend_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + (v2 / n2) * (v2 / n2) / (n2 - 1)), 6) AS welch_df
     FROM w
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def qa_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Welch's unequal-variance t statistic (+ Welch-Satterthwaite df)
@@ -756,7 +748,6 @@ def qa_welch_t(spark: SparkSession, sf_dir: str) -> DataFrame:
                  6) AS z
     FROM u
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def qa_mann_whitney(
     spark: SparkSession, sf_dir: str, scale_safe: bool = False
@@ -870,7 +861,6 @@ def qa_mann_whitney(
            round(CAST(cum - runmin AS DOUBLE) / n, 6) AS cusum_pos
     FROM r ORDER BY day
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-sided CUSUM change detection on daily revenue: the classic
@@ -970,8 +960,6 @@ def ev_cusum_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(ssb / (ssb + ssw), 6) AS eta_squared
     FROM f
     """,
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def qa_anova_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of order value across the five market segments —
@@ -1071,7 +1059,6 @@ def qa_anova_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dev JOIN se USING (dow) CROSS JOIN ctr
     ORDER BY day
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classical additive decomposition of daily revenue into trend
@@ -1188,7 +1175,6 @@ def ev_seasonal_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(CAST(sum(sape) AS DOUBLE) / count(*), 6) AS smape
     FROM t GROUP BY model ORDER BY model
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-step-ahead forecast BACKTEST of the daily revenue series for
@@ -1284,7 +1270,6 @@ WILSON_Z = 1.959963984540054  # 97.5th normal quantile, repr-exact
                  / (1 + z * z / n), 6) AS ci_hi
     FROM m ORDER BY segment
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def qa_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """95% WILSON score interval for the finalized-order share per
@@ -1371,7 +1356,6 @@ def qa_wilson_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
                  / pow(r2 - mu * mu, 2) - 3, 6) AS kurtosis_excess
     FROM c ORDER BY event_type
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def qa_higher_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact POPULATION skewness and excess kurtosis of event values per
@@ -1514,9 +1498,6 @@ _BH_Q = "CAST('0.1' AS DOUBLE)"  # target false-discovery rate
     FROM r2, k
     ORDER BY bh_rank
     """,
-    # New r9 (multiple-testing capstone for the drift tier); promoted
-    # from NEXT_QUEUE in the r10 rotation after all-scale pre-validation.
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def qa_fdr_bh_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BENJAMINI-HOCHBERG FDR control over a FAMILY of drift tests —
@@ -1659,9 +1640,6 @@ _SPIKE_Z = (
     FROM r2, k
     ORDER BY bh_rank
     """,
-    # New r10 (VERDICT r9 ask #6); first-timer on the r10 surface after
-    # all-three-scale pre-validation (plans/rotation.py).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def qa_fdr_bh_spike_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPIKE-IN calibration of the Benjamini-Hochberg machinery — the
@@ -1831,10 +1809,6 @@ _STOREY_THR = f"round(bh_rank * {_BH_Q} / (m * pi0_6), 6)"
     FROM r3, k
     ORDER BY bh_rank
     """,
-    # Authored r11 (after the r11 flip); queued for r12, whose
-    # interrupted landing never flipped the rotation (VERDICT r12) —
-    # locally oracle-pinned at all three scales meanwhile.
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def qa_fdr_storey_spike_in(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Storey's ADAPTIVE FDR (q-value procedure, Storey 2002) over the

@@ -106,8 +106,6 @@ Z_CUT = 2.5
     FROM z WHERE abs(zval) >= {Z_CUT}
     ORDER BY c_custkey
     """,
-    # New r5 batch (locally pinned; r6 driver-rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a18_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort-relative anomaly screen: customers whose total spend sits
@@ -215,7 +213,6 @@ BENFORD_EXP = {d: round(math.log10(1 + 1 / d), 6) for d in range(1, 10)}
     FROM counts JOIN exp USING (digit) CROSS JOIN tot
     ORDER BY digit
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a19_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benford's-law first-digit audit on order amounts — the classic
@@ -289,7 +286,6 @@ PAIR_TOP_K = 50
     ORDER BY lift DESC, brand_a, brand_b
     LIMIT {PAIR_TOP_K}
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a20_basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Market-basket affinity: brand pairs co-purchased in one order,
@@ -387,7 +383,6 @@ def a20_basket_pair_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 AS BIGINT) AS cum_events
     FROM g ORDER BY user_id, day
     """,
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def w6_user_day_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Time-spine gap-filling: a contiguous per-user daily calendar from
@@ -477,8 +472,6 @@ ATTR_LOOKBACK_S = 7 * 86400
              AS attributed_value
     FROM m GROUP BY 1 ORDER BY channel
     """,
-    # promoted r6 (rotation: first driver row)
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def ev_attribution_last_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Last-touch revenue attribution: each purchase is credited to the
@@ -564,7 +557,6 @@ RECON_TOL_MICROS = 1_000_000  # micro-dollars of |header - detail| tolerated
              AS max_abs_delta
     FROM d GROUP BY 1 ORDER BY status
     """,
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a21_order_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Header-vs-detail reconciliation: recompute each order's total from
@@ -688,10 +680,6 @@ def _pr_iter_cte(i: int) -> str:
     SELECT node AS brand, round(rank, 6) AS rank
     FROM r{PR_ITER} ORDER BY rank DESC, brand
     """,
-    # Promoted r5 (rotation, second wave): first driver row for the
-    # iterative tier's second algorithm; funded by demoting
-    # w4_surrogate_keys (driver-green r1-r4, equivalence-tested).
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a22_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank centrality over the brand co-purchase graph (edge = two
@@ -744,7 +732,6 @@ def a22_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
              AS attributed_value
     FROM a GROUP BY 1 ORDER BY channel
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_attribution_first_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FIRST-touch attribution: each purchase is credited to the EARLIEST
@@ -819,8 +806,6 @@ _MAD_K = "0.6745"
     FROM rz WHERE abs(rzv) >= {MAD_CUT}
     ORDER BY user_id
     """,
-    # New r5 (locally pinned; r6 rotation candidate).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROBUST anomaly screen — the median/MAD sibling of the z-score
@@ -904,9 +889,6 @@ FX_MONTHS = 80  # 1995-01 .. 2001-08 covers the orders fixture
              AS converted_total
     FROM j GROUP BY 1 ORDER BY ccy
     """,
-    # New r5 (locally pinned; r6 rotation candidate).
-    # promoted r6 (rotation: first driver row)
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def j8_fx_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Currency conversion through an AS-OF rate lookup — the canonical
@@ -1004,9 +986,6 @@ def j8_fx_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT node AS brand, count(*) AS n_triangles
     FROM m GROUP BY 1 ORDER BY brand
     """,
-    # New r5 (locally pinned; r6 rotation candidate).
-    # promoted r6 (rotation: first driver row)
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a23_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand triangle participation in the co-purchase graph — the
@@ -1058,9 +1037,6 @@ def a23_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
            round(2 * wsum / (nd * tot) - (nd + 1) / nd, 6) AS gini
     FROM t
     """,
-    # New r5 (locally pinned; r6 rotation candidate).
-    # promoted r6 (rotation: first driver row)
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a24_revenue_gini(
     spark: SparkSession, sf_dir: str, *, scale_safe: bool = False
@@ -1146,7 +1122,6 @@ def a24_revenue_gini(
            0 AS n_global_windows, 1 AS used_two_phase_rank
     FROM t
     """,
-    driver=True,  # rotated IN r7 (first driver row; plans/rotation.py)
 )
 def a24_revenue_gini_scale_safe(
     spark: SparkSession, sf_dir: str
@@ -1215,8 +1190,6 @@ def a24_revenue_gini_scale_safe(
              AS spearman_rho
     FROM t WHERE n > 1 ORDER BY segment
     """,
-    # New r5 (locally pinned; r6 rotation candidate).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def a25_spearman_freq_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between order frequency and total spend
@@ -1325,8 +1298,6 @@ def a25_spearman_freq_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS spearman_rho
     FROM t WHERE n > 1 ORDER BY segment
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a25_spearman_avg_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman with CLASSICAL average-rank tie handling (the statistical
@@ -1452,8 +1423,6 @@ def a25_spearman_avg_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM un WHERE n_credits > 0
     ORDER BY channel
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LINEAR multi-touch attribution — the third member of the
@@ -1545,8 +1514,6 @@ def ev_attribution_linear(spark: SparkSession, sf_dir: str) -> DataFrame:
            END AS w_std
     FROM a ORDER BY event_type
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def ev_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Winsorized moments per event type: clip the value at its exact
@@ -1640,7 +1607,6 @@ def _lpa_iter_cte(i: int) -> str:
     SELECT node AS brand, lbl AS community
     FROM l{LPA_ITER} ORDER BY brand
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a26_brand_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Community detection on the brand co-purchase graph — the FOURTH
@@ -1701,8 +1667,6 @@ DOW_Z_CUT = 2.0
     FROM z WHERE abs(zval) >= {DOW_Z_CUT}
     ORDER BY day
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a27_dow_seasonal_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SEASONAL anomaly screen: daily revenue compared against its own
@@ -1807,8 +1771,6 @@ def _km_centroid_cte(i: int) -> str:
                  / count(*) / 100, 6) AS c_spend
     FROM a{KM_ITER - 1} GROUP BY 1 ORDER BY 1
     """,
-    # New r6 (locally pinned; future rotation candidate).
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def a28_customer_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TABULAR k-means — customer segmentation by (order frequency,
@@ -1932,8 +1894,6 @@ def a28_customer_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM cum JOIN sz USING (cq)
     ORDER BY cohort_year, cohort_quarter, age_quarters
     """,
-    # New r6 (locally pinned; r7 rotation candidate).
-    driver=True,  # REFRESH r16 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a29_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohort lifetime value: customers are grouped by acquisition
@@ -2046,7 +2006,6 @@ def _ppr_iter_cte(i: int) -> str:
            END AS is_seed
     FROM p{PR_ITER} ORDER BY rank DESC, brand
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a30_brand_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank from the Brand#1x seed family over the
@@ -2123,7 +2082,6 @@ def _khop_cte(i: int) -> str:
     {", ".join(_khop_cte(i) for i in range(1, KHOP_MAX + 1))}
     SELECT node AS brand, hops FROM d3 ORDER BY hops, brand
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a31_brand_khop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-hop BFS distances from the lexicographically-first brand over
@@ -2212,7 +2170,6 @@ def _bf_iter_cte(i: int) -> str:
     SELECT node AS brand, CAST(dist AS DOUBLE) AS cost
     FROM b4 ORDER BY cost, brand
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a32_brand_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cheapest-path costs from the lexicographically-first brand over
@@ -2274,7 +2231,6 @@ def a32_brand_cheapest_path(spark: SparkSession, sf_dir: str) -> DataFrame:
         AND (b.spend > a.spend OR b.c_acctbal > a.c_acctbal))
     ORDER BY segment, custkey
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a33_segment_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment Pareto frontier (2-D SKYLINE): customers no other
@@ -2390,7 +2346,6 @@ def _cc_round_cte(i: int) -> str:
              AS harmonic
     FROM cnt ORDER BY harmonic DESC, brand
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def a34_brand_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HARMONIC closeness centrality of every brand in the
@@ -2482,7 +2437,6 @@ KM_BUCKET_DAYS = 30  # lifetime granularity (months)
     FROM arr, unnest(range(1, len(fl) + 1)) AS r(i)
     ORDER BY t_months
     """,
-    driver=False,  # demoted r16 (rotation; driver-green, plans/rotation.py)
 )
 def a35_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KAPLAN-MEIER customer survival curve: S(t) = prod over lifetime

@@ -40,55 +40,72 @@ class NamedQuery:
     name: str
     spark: SparkQuery
     oracle: str | None  # ANSI SQL for DuckDB; None => rows-only check
-    driver: bool = True  # exposed through __spark_entry__? (see below)
 
 
 REGISTRY: dict[str, NamedQuery] = {}
 
 
-def query(name: str, oracle: str | None, driver: bool = True):
-    """Register a (spark_fn, oracle_sql) pair under ``name``.
-
-    ``driver=False`` keeps the entry fully registered (runnable, NLQ
-    routable, swept by tests/test_oracle_parity.py against its oracle)
-    but leaves it OUT of the driver-facing ``spark_queries()`` surface.
-    The external driver caps its per-round correctness sweep at 50
-    queries and samples beyond that, so the driver surface holds one
-    entry per operator family; strict-subset/sibling variants (e.g. the
-    64-merge BPE twin next to the 12-merge one, or the per-metric
-    text queries folded into tx_text_profile) are demoted to
-    locally-pinned status so every driver-facing query gets a
-    CORRECTNESS row every round.
-
-    ROTATION PROTOCOL (since r5): each round, a batch of locally-pinned
-    entries that have never had a driver CORRECTNESS row is swapped in
-    for siblings whose operator family already has multiple green rows,
-    so the whole registry accumulates driver-grade evidence over rounds
-    while the surface stays at exactly rotation.SURFACE_SIZE. The
-    per-round in/out ledger, the next-round queue, and the re-promotion
-    exceptions live in plans/rotation.py (rendered in ROTATION.md);
-    tests/test_rotation.py pins the ledger against the committed
-    CORRECTNESS_r{N}.json files.
-    """
+def query(name: str, oracle: str | None):
+    """Register a (spark_fn, oracle_sql) pair under ``name``. Every entry
+    is runnable, NLQ-routable and swept against its oracle by
+    tests/test_oracle_parity.py; ``DRIVER_SURFACE`` picks the ones the
+    external driver checks."""
 
     def deco(fn: SparkQuery) -> SparkQuery:
-        REGISTRY[name] = NamedQuery(name, fn, oracle, driver)
+        REGISTRY[name] = NamedQuery(name, fn, oracle)
         return fn
 
     return deco
 
 
+# The driver-checked surface, fixed: the paper's own queries (this
+# module), the four paper gap rows, and the write paths perfbench runs.
+DRIVER_SURFACE: tuple[str, ...] = (
+    "q1_top_segments",
+    "q2_top_priorities_q4",
+    "q3_quarter_ranking",
+    "a4_kpis",
+    "a2_quarter_status_matrix",
+    "a6_distinct_dims",
+    "w1_quarter_trend",
+    "w4_surrogate_keys",
+    "j1_fact_build",
+    "j3_gold_denorm",
+    "j5_anti_join",
+    "j6_topk_semi",
+    "j7_name_remap",
+    "f4_contains",
+    "o2_top5_types",
+    "o4_group_total_order",
+    "x1_except",
+    "c1_timestamp_roundtrip",
+    "a1_count_by_segment",
+    "a8_rollup_region_nation",
+    "a9_cube_status_quarter",
+    "a10_value_stats",
+    "a11_pivot_quarter_status",
+    "a12_star_measures",
+    "a13_percentile_sketch",
+    "a14_grouping_sets",
+    "x2_union_intersect",
+    "a5_unique_customers_approx",
+    "w5_rank_functions",
+    "ev_rolling_7d",
+    "ev_props_extract",
+    "st_stream_merge_rollup",
+    "st_sessionize",
+    "st_tumbling_hourly",
+    "wh_gold_maintenance",
+)
+
+
 def spark_queries() -> dict[str, SparkQuery]:
-    """Driver-facing surface: <= 50 entries, one per operator family."""
-    return {n: q.spark for n, q in REGISTRY.items() if q.driver}
+    """Driver-facing surface: the ``DRIVER_SURFACE`` entries, in order."""
+    return {n: REGISTRY[n].spark for n in DRIVER_SURFACE}
 
 
 def oracle_queries() -> dict[str, str]:
-    return {
-        n: q.oracle
-        for n, q in REGISTRY.items()
-        if q.driver and q.oracle is not None
-    }
+    return {n: REGISTRY[n].oracle for n in DRIVER_SURFACE}
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -125,7 +142,6 @@ def dsum(col, scale: int = 2):
     ORDER BY n DESC, segment ASC
     LIMIT 5
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def q1_top_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q1 shape — 2-predicate filter -> group count -> top-5 with tie-break.
@@ -160,7 +176,6 @@ def q1_top_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, priority ASC
     LIMIT 5
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def q2_top_priorities_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q2 shape — filter (type ∧ quarter) -> group count -> top-5.
@@ -190,7 +205,6 @@ def q2_top_priorities_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY n DESC, quarter ASC
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def q3_quarter_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q3 shape — IN-list filter -> group by derived quarter label -> rank.
@@ -221,7 +235,6 @@ def q3_quarter_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
            count(DISTINCT o_custkey) AS unique_customers
     FROM orders
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a4_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KPI strip — one-pass conditional aggregation (A4 + A5 + F4).
@@ -253,7 +266,6 @@ def a4_kpis(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY quarter, status
     """,
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a2_quarter_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-key group-by count (stacked-bar input).
@@ -280,7 +292,6 @@ def a2_quarter_status_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     ORDER BY priority
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a6_distinct_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DISTINCT projection, sorted — widget-population shape (A6/A7/O1).
@@ -317,7 +328,6 @@ def a6_distinct_dims(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM totals t LEFT JOIN focus f ON t.qnum = f.qnum
     ORDER BY quarter
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def w1_quarter_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quarterly trend — two aggregates outer-joined, share-of-total, LAG QoQ.
@@ -369,11 +379,6 @@ def w1_quarter_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM nation
     ORDER BY nation_id
     """,
-    # Demoted r5 (rotation, second wave): driver-green r1-r4 AND
-    # equivalence-tested against the parallel two-phase variant
-    # (tests/test_plan_quality.py); funds a22_brand_pagerank's first
-    # driver row so the iterative-algorithm tier sits under the gate.
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def w4_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordinal surrogate-key assignment over a dimension (W4/O1).
@@ -403,7 +408,6 @@ def w4_surrogate_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     JOIN region ON n_regionkey = r_regionkey
     ORDER BY o_orderkey
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j1_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fact build — chained inner FK-resolution joins (J1/J2).
@@ -450,7 +454,6 @@ def j1_fact_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN region r ON n.n_regionkey = r.r_regionkey
     ORDER BY o_orderkey
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j3_gold_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gold denormalization — star-join the fact back to all dims (J3).
@@ -501,7 +504,6 @@ def j3_gold_denorm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     ORDER BY p_partkey
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j5_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anti-join — keys absent from the other side (J5/F3/X1): parts never
@@ -536,7 +538,6 @@ def j5_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY segment, status
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def j6_topk_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k semi-join — restrict detail rows to the top-k groups (J6 + O2).
@@ -579,9 +580,6 @@ def j6_topk_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     ) m ON n.n_name = m.old_name
     ORDER BY n_nationkey
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def j7_name_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dict-lookup remap with pass-through fallback (J7/C4).
@@ -618,9 +616,6 @@ def j7_name_remap(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1
     ORDER BY n DESC, brand ASC
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def f4_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Substring predicate -> group count (F4 + A1).
@@ -647,7 +642,6 @@ def f4_contains(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY n DESC, part_type ASC
     LIMIT 5
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def o2_top5_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k over a fact-dim join (O2 on the biggest table).
@@ -678,7 +672,6 @@ def o2_top5_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY segment_total DESC, segment ASC, status ASC
     """,
-    driver=False,  # demoted r14 (rotation; driver-green, plans/rotation.py)
 )
 def o4_group_total_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Groups ordered by their total — stacked-bar display order (O4/A3/W3).
@@ -711,7 +704,6 @@ def o4_group_total_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT o_custkey FROM orders WHERE o_orderstatus = 'P'
     ORDER BY c_custkey
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def x1_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Set difference of key sets (X1) — high-balance customers with no
@@ -745,9 +737,6 @@ def x1_except(spark: SparkSession, sf_dir: str) -> DataFrame:
     ORDER BY o_orderkey
     LIMIT 100
     """,
-    # Demoted r5 (rotation: family already multiply driver-green; stays
-    # pinned by the local oracle sweep).
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def c1_timestamp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dd/MM/yyyy HH:mm:ss parse + quarter labeling (C1-C3).
@@ -779,7 +768,6 @@ def c1_timestamp_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders JOIN customer ON o_custkey = c_custkey
     GROUP BY 1 ORDER BY segment
     """,
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a1_count_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-key group-by count (A1) — the dashboard's most common shape.
@@ -808,7 +796,6 @@ def a1_count_by_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY ROLLUP (r_name, n_name)
     ORDER BY lvl, region_name NULLS FIRST, nation_name NULLS FIRST
     """,
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a8_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP region -> nation -> grand total in ONE pass.
@@ -854,7 +841,6 @@ def a8_rollup_region_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY CUBE (o_orderstatus, 'Q' || CAST(quarter(o_orderdate) AS STRING))
     ORDER BY lvl, status NULLS FIRST, quarter NULLS FIRST
     """,
-    driver=False,  # demoted r11 (rotation; driver-green, plans/rotation.py)
 )
 def a9_cube_status_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUBE over (status, quarter): all four grouping sets in one pass
@@ -890,7 +876,6 @@ def a9_cube_status_quarter(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1 ORDER BY status
     """,
-    driver=True,  # REFRESH r18 (evidence-age re-earn, not a first-timer; plans/rotation.py)
 )
 def a10_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MIN/MAX/AVG/median per group — the aggregate family SURVEY.md
@@ -930,7 +915,6 @@ def a10_value_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM orders
     GROUP BY 1 ORDER BY status
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a11_pivot_quarter_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PIVOT: quarters to columns (the dashboard-matrix orientation the
@@ -973,7 +957,6 @@ def a11_pivot_quarter_status(spark: SparkSession, sf_dir: str) -> DataFrame:
     GROUP BY 1, 2
     ORDER BY nation, part_type
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a12_star_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SUM/AVG of fact MEASURES through a multi-dim star join — the
@@ -1026,11 +1009,10 @@ def a12_star_measures(spark: SparkSession, sf_dir: str) -> DataFrame:
            TRUE AS sketch_in_bound
     FROM orders GROUP BY 1 ORDER BY status
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a13_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-group value stats (MIN/MAX/decimal-exact AVG — a10_value_stats'
-    aggregate family, folded in here so one driver row pins it) plus
+    aggregate family, folded in here so one entry pins it) plus
     quantiles by SKETCH next to the exact answer: percentile_approx
     (Greenwald-Khanna) is the 100 TB alternative to the exact per-group
     sort, mergeable map-side like the a5 HLL.
@@ -1092,14 +1074,12 @@ def a13_percentile_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                             (o_orderstatus), (o_orderpriority), ())
     ORDER BY gid, status, priority
     """,
-    driver=False,  # demoted r13 (rotation; driver-green, plans/rotation.py)
 )
 def a14_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Arbitrary GROUPING SETS: all four aggregation levels of
     (status, priority) in ONE pass over the fact — the spec equals
-    CUBE(status, priority), so this driver row also pins the cube
-    operator family (the df.cube API spelling stays locally oracled via
-    the demoted a9_cube_status_quarter). Spark expands the sets into a
+    CUBE(status, priority), so this entry also pins the cube
+    operator family (the df.cube API spelling is a9_cube_status_quarter). Spark expands the sets into a
     single Expand + hash-aggregate plan (one shuffle total, vs one
     scan+shuffle per level if issued separately). grouping()
     disambiguates real NULL keys from superaggregate rows.
@@ -1143,12 +1123,11 @@ def a14_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT custkey FROM big_buyers UNION SELECT custkey FROM urgent_buyers)
     ORDER BY set_op
     """,
-    driver=False,  # demoted r15 (rotation; driver-green, plans/rotation.py)
 )
 def x2_union_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNION (distinct) / INTERSECT / EXCEPT over key sets — the whole
     set-op family SURVEY.md section 2.7 notes as unused by the reference
-    (EXCEPT is x1_except's operator, folded in here so one driver row
+    (EXCEPT is x1_except's operator, folded in here so one entry
     pins all three). Each leg is a single-shuffle distinct-aggregate plan.
 
     ONE LAZY PLAN: each leg becomes a 1-row aggregate frame and the

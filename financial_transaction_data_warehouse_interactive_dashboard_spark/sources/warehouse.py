@@ -1,20 +1,15 @@
-"""Warehouse layout: partitioned + bucketed tables, stats for the CBO.
+"""Warehouse layout: partitioned tables, partition-scoped upserts,
+compaction, the Z-order code, and versioned snapshots.
 
 The reference pre-joins its star into one gold CSV so the dashboard never
 joins at query time (etl.ipynb:210 — its one real optimization). At 100 TB
-the same idea splits into three storage-level decisions, all encoded here:
+the gold is stored **partitioned** on low-cardinality filter columns, so a
+dashboard's quarter/date filter skips files instead of reading and
+dropping rows, and a refresh rewrites only the partitions its updates
+touch.
 
-- **partition columns** for coarse pruning (a dashboard's quarter/date
-  filter should skip files, not read-and-drop rows);
-- **bucketing on the join key** so repeated fact<->dim or fact<->fact
-  joins are co-located: both sides hash-partitioned identically at WRITE
-  time, so the join plans with zero Exchange — the shuffle is paid once,
-  not per query (verified by tests/test_warehouse.py on the plan);
-- **column statistics** (ANALYZE TABLE) so the cost-based optimizer can
-  reorder star joins and pick broadcast sides from real row counts.
-
-Bucketing metadata lives in the session catalog (saveAsTable); on a real
-cluster back it with a shared metastore so every session sees the layout.
+Tables live in the session catalog (saveAsTable); on a real cluster back
+it with a shared metastore so every session sees the layout.
 """
 
 from __future__ import annotations
@@ -35,24 +30,6 @@ def _drop_stale(spark: SparkSession, table: str) -> None:
     shutil.rmtree(f"{wh_dir}/{table}", ignore_errors=True)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_col: str,
-    num_buckets: int = 8,
-    sort_col: str | None = None,
-) -> None:
-    """Persist as a bucketed (and bucket-sorted) parquet table. Sorting
-    within buckets lets sort-merge joins skip their sort stage too."""
-    _drop_stale(df.sparkSession, table)
-    w = df.write.mode("overwrite").format("parquet").bucketBy(
-        num_buckets, bucket_col
-    )
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.saveAsTable(table)
-
-
 def write_partitioned(
     df: DataFrame, table: str, partition_cols: list[str]
 ) -> None:
@@ -64,37 +41,6 @@ def write_partitioned(
     ).saveAsTable(table)
 
 
-def upsert_overwrite(
-    spark: SparkSession, table: str, updates: DataFrame, key: str
-) -> None:
-    """SCD-1 refresh on plain parquet tables: new rows inserted, matched
-    keys replaced (last-write-wins), everything else carried forward —
-    MERGE semantics without a transactional format.
-
-    Implementation: anti-join current state against the update keys, union
-    the updates, rewrite. The rewrite is atomic at the catalog level via
-    an intermediate table swap (write to ``<table>__staged``, then swap
-    names), so a failed job never leaves a half-written target; a real
-    deployment upgrades this to Delta/Iceberg MERGE, which this function
-    signature maps onto 1:1.
-
-    Scale: cost is one anti-join + full rewrite — right for dimension
-    tables and small-to-medium golds; for fact-scale upserts partition the
-    table and rewrite only partitions containing update keys (dynamic
-    partition overwrite).
-    """
-    current = spark.table(table)
-    keys = updates.select(key).distinct()
-    merged = current.join(keys, key, "left_anti").unionByName(updates)
-    staged = f"{table}__staged"
-    _drop_stale(spark, staged)
-    merged.write.mode("overwrite").format("parquet").saveAsTable(staged)
-    _drop_stale(spark, table)
-    # Rename via CTAS-free catalog swap: parquet tables support ALTER
-    # RENAME in the session catalog.
-    spark.sql(f"ALTER TABLE {staged} RENAME TO {table}")
-
-
 def upsert_partition_overwrite(
     spark: SparkSession,
     table: str,
@@ -104,8 +50,7 @@ def upsert_partition_overwrite(
 ) -> None:
     """Fact-scale SCD-1 MERGE on a PARTITIONED parquet table: rewrite only
     the partitions that contain update keys, via dynamic partition
-    overwrite — the upgrade path the full-rewrite ``upsert_overwrite``
-    docstring promises.
+    overwrite.
 
     Mechanics:
     1. touched = partitions named by the updates UNION partitions where
@@ -238,17 +183,6 @@ def compact_partitions(
     return victims
 
 
-def analyze(spark: SparkSession, table: str, columns: list[str] | None = None) -> None:
-    """Collect table + column stats for the cost-based optimizer."""
-    if columns:
-        spark.sql(
-            f"ANALYZE TABLE {table} COMPUTE STATISTICS FOR COLUMNS "
-            + ", ".join(columns)
-        )
-    else:
-        spark.sql(f"ANALYZE TABLE {table} COMPUTE STATISTICS")
-
-
 def morton_code(
     cols: list[str],
     mins: dict,
@@ -261,10 +195,9 @@ def morton_code(
     UDF. Default bucketizer is LINEAR between each dim's min and max;
     pass ``quantiles`` ({col: sorted interior boundaries}) to bucket by
     RANK instead, so a skewed dim still spreads its mass evenly across
-    the 2^bits cells (the write_zorder_layout(quantile_buckets=True)
-    path). Quantile assignment counts boundaries <= value with one
+    the 2^bits cells. Quantile assignment counts boundaries <= value with one
     higher-order filter over a literal boundary array — interpreted, but
-    this runs once inside a layout JOB, not on a query path. Built from
+    it runs once per layout write, not on a query path. Built from
     Column objects (F.array of F.lit), never SQL-text interpolation, so
     NaN boundaries or backtick-needing column names cannot break the
     plan at parse time.
@@ -273,8 +206,8 @@ def morton_code(
     the explicit guard the linear path's F.least skips the NULL floor()
     and yields the TOP bucket while the quantile path's F.filter drops
     every boundary on a NULL predicate and yields 0 — NULL rows would
-    cluster at opposite ends of the Z-curve depending on
-    quantile_buckets)."""
+    cluster at opposite ends of the Z-curve depending on the
+    bucketizer)."""
     nb = (1 << bits) - 1
     bucketed = []
     for c in cols:
@@ -303,56 +236,6 @@ def morton_code(
                 )
             )
     return code
-
-
-def write_zorder_layout(
-    df: DataFrame,
-    path: str,
-    dims: list[str],
-    n_files: int = 16,
-    bits: int = 8,
-    quantile_buckets: bool = False,
-) -> None:
-    """Multi-dimensional data-skipping layout (the OPTIMIZE ZORDER
-    primitive of lakehouse tables): rows are range-partitioned and
-    sorted by their Morton code, so every output file covers a small
-    HYPERCUBE of the dim space instead of a thin slab of one dimension.
-    A linear sort on dim A gives perfect pruning on A and NONE on B;
-    Z-order gives ~sqrt pruning on BOTH — parquet min/max row-group
-    stats and file-level skipping then work for every dim in ``dims``.
-    tests/test_warehouse.py proves the per-file span contraction and the
-    file-count reduction for a filtered scan against a linear layout.
-
-    Min/max per dim come from one tiny aggregate (driver round-trip at
-    write time — a layout JOB, not a query path).
-    ``quantile_buckets=True`` bucketizes each dim by approx-quantile
-    boundaries instead of linearly — on skewed dims, linear buckets
-    dump most rows into a few cells and the Z-curve degenerates to a
-    one-dimensional sort; rank bucketing keeps every cell's row count
-    ~equal regardless of the value distribution."""
-    qs = None
-    if quantile_buckets:
-        probs = [i / (1 << bits) for i in range(1, 1 << bits)]
-        # ONE multi-column approxQuantile pass — the per-column form
-        # would rescan the input once per dimension.
-        qlists = df.approxQuantile(dims, probs, 0.001)
-        qs = dict(zip(dims, qlists))
-        mins = maxs = {}
-    else:
-        stats = df.agg(
-            *[F.min(c).alias(f"mn_{c}") for c in dims],
-            *[F.max(c).alias(f"mx_{c}") for c in dims],
-        ).collect()[0]
-        mins = {c: stats[f"mn_{c}"] for c in dims}
-        maxs = {c: stats[f"mx_{c}"] for c in dims}
-    z = df.withColumn("_z", morton_code(dims, mins, maxs, bits, quantiles=qs))
-    (
-        z.repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
 
 
 # ---------------------------------------------------------------------------

@@ -148,13 +148,11 @@ def _registry_plans(spark) -> dict[str, str]:
 
 
 def test_no_cartesian_product_in_registry(spark):
-    """No registry query — driver-facing OR locally-pinned — may plan an
+    """No registry query — on the driver surface or not — may plan an
     unpartitioned CartesianProduct, the one join shape that cannot scale
     (every deliberate small-side cross join in the codebase is broadcast,
     which plans as BroadcastNestedLoopJoin with a 1-row/centroid side,
-    never CartesianProduct). Widened from driver-only in r5: local
-    entries are rotation candidates for the driver surface, so they meet
-    the same bar."""
+    never CartesianProduct)."""
     offenders = [
         name
         for name, plan in _registry_plans(spark).items()

@@ -1,5 +1,5 @@
-"""Storage-layout proofs: bucketed co-located joins plan with no Exchange;
-partitioned tables prune partitions at the scan."""
+"""Storage-layout proofs: partitioned tables prune partitions at the scan;
+upserts and compaction rewrite only the partitions they touch."""
 
 from __future__ import annotations
 
@@ -16,51 +16,6 @@ from financial_transaction_data_warehouse_interactive_dashboard_spark.sources.re
 
 from conftest import SF_SMOKE
 from test_plan_quality import plan_of
-
-
-def test_bucketed_join_is_exchange_free(spark):
-    """orders and customer bucketed on the join key: the join must plan
-    WITHOUT any shuffle Exchange — the 'pay the shuffle once at write
-    time' contract that makes repeated star joins cheap at 100 TB."""
-    orders = load_table(spark, SF_SMOKE, "orders")
-    customer = load_table(spark, SF_SMOKE, "customer")
-    WH.write_bucketed(orders, "wh_orders", "o_custkey", 8, sort_col="o_custkey")
-    WH.write_bucketed(customer, "wh_customer", "c_custkey", 8, sort_col="c_custkey")
-    WH.analyze(spark, "wh_orders", ["o_custkey"])
-
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("wh_orders").join(
-            spark.table("wh_customer"),
-            F.col("o_custkey") == F.col("c_custkey"),
-        )
-        plan = plan_of(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange" not in plan, "bucketed join should not shuffle"
-        # Cross-check the result is still correct.
-        n_bucketed = joined.count()
-        n_plain = orders.join(
-            customer, F.col("o_custkey") == F.col("c_custkey")
-        ).count()
-        assert n_bucketed == n_plain
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-
-
-def test_upsert_overwrite(spark):
-    """SCD-1 merge: updated keys replaced, new keys inserted, others kept."""
-    nation = load_table(spark, SF_SMOKE, "nation")
-    WH.write_partitioned(nation.select("n_nationkey", "n_name"), "wh_nation", [])
-    before = spark.table("wh_nation").count()
-    updates = spark.createDataFrame(
-        [(0, "RENAMED_0"), (999, "BRAND_NEW")], ["n_nationkey", "n_name"]
-    )
-    WH.upsert_overwrite(spark, "wh_nation", updates, "n_nationkey")
-    after = {r["n_nationkey"]: r["n_name"] for r in spark.table("wh_nation").collect()}
-    assert len(after) == before + 1
-    assert after[0] == "RENAMED_0" and after[999] == "BRAND_NEW"
-    assert after[1] == nation.filter(F.col("n_nationkey") == 1).collect()[0]["n_name"]
 
 
 def test_partition_pruning(spark):
@@ -229,80 +184,6 @@ def test_compact_partitions_small_files(spark):
     assert WH.compact_partitions(spark, "wh_orders_frag", "q") == []
 
 
-def test_zorder_layout_skips_on_both_dims(spark, tmp_path):
-    """Z-order vs linear-sort layout on (o_custkey, o_totalprice): the
-    Morton layout must contract every file's span in BOTH dimensions
-    (each file a hypercube, not a slab), and a range filter on the
-    dimension the linear layout does NOT sort by must touch strictly
-    fewer files under Z-order — the multi-dim data-skipping contract."""
-    orders = load_table(spark, SF_SMOKE, "orders").select(
-        "o_orderkey", "o_custkey", "o_totalprice"
-    )
-    dims = ["o_custkey", "o_totalprice"]
-    zpath = str(tmp_path / "zorder")
-    lpath = str(tmp_path / "linear")
-    WH.write_zorder_layout(orders, zpath, dims, n_files=16)
-    (
-        orders.repartitionByRange(16, "o_custkey")
-        .sortWithinPartitions("o_custkey")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-
-    def spans(path):
-        df = spark.read.parquet(path).withColumn(
-            "f", F.input_file_name()
-        )
-        rows = (
-            df.groupBy("f")
-            .agg(
-                (F.max("o_custkey") - F.min("o_custkey")).alias("ck"),
-                (F.max("o_totalprice") - F.min("o_totalprice")).alias("tp"),
-            )
-            .collect()
-        )
-        n = len(rows)
-        return (
-            sum(r["ck"] for r in rows) / n,
-            sum(r["tp"] for r in rows) / n,
-            n,
-        )
-
-    g = orders.agg(
-        (F.max("o_custkey") - F.min("o_custkey")).alias("ck"),
-        (F.max("o_totalprice") - F.min("o_totalprice")).alias("tp"),
-        F.min("o_totalprice").alias("tp_lo"),
-    ).collect()[0]
-    z_ck, z_tp, z_n = spans(zpath)
-    l_ck, l_tp, l_n = spans(lpath)
-    assert z_n > 1 and l_n > 1
-    # Z-order: every dim's mean file span well under the global span.
-    assert z_ck < 0.6 * g["ck"], (z_ck, g["ck"])
-    assert z_tp < 0.6 * g["tp"], (z_tp, g["tp"])
-    # Linear: sorted dim tight, other dim a full-range slab.
-    assert l_ck < 0.3 * g["ck"]
-    assert l_tp > 0.8 * g["tp"]
-    # The other dim contracts hard vs linear.
-    assert z_tp < 0.6 * l_tp
-
-    # Pruning proxy: a 10%-range filter on totalprice intersects fewer
-    # files under Z-order than under the custkey-sorted layout.
-    lo = g["tp_lo"]
-    hi = lo + 0.1 * g["tp"]
-    def files_touched(path):
-        return (
-            spark.read.parquet(path)
-            .filter(F.col("o_totalprice").between(lo, hi))
-            .select(F.input_file_name().alias("f"))
-            .distinct()
-            .count()
-        )
-    zt, lt = files_touched(zpath), files_touched(lpath)
-    assert zt < lt, (zt, lt)
-    # No rows lost by the rewrite.
-    assert spark.read.parquet(zpath).count() == orders.count()
-
-
 def test_observed_write_matches_posthoc_audit(spark, tmp_path):
     """observe()-collected metrics from the single write pass must equal
     an independent audit query over the written files — the
@@ -334,39 +215,6 @@ def test_observed_write_matches_posthoc_audit(spark, tmp_path):
     assert got["n_null_price"] == audit["n_null_price"] == 0
     assert got["n_bad_status"] == audit["n_bad_status"] == 0
     assert got["total_price"] == audit["total_price"]
-
-
-def test_zorder_quantile_buckets_balance_skewed_dim(spark, tmp_path):
-    """On a heavily skewed dimension, linear Morton bucketing collapses
-    (most rows share one cell -> the curve degenerates), while
-    quantile bucketing keeps per-file row counts balanced AND still
-    contracts per-file spans on the companion uniform dim."""
-    import math
-
-    rows = [
-        (i, float(i % 997), -math.log((i % 9973 + 1) / 9974.0) * 100)
-        for i in range(20000)
-    ]
-    df = spark.createDataFrame(rows, ["id", "uniform", "skewed"])
-    qpath = str(tmp_path / "zq")
-    WH.write_zorder_layout(
-        df, qpath, ["uniform", "skewed"], n_files=16, quantile_buckets=True
-    )
-    back = spark.read.parquet(qpath).withColumn("f", F.input_file_name())
-    per_file = back.groupBy("f").agg(
-        F.count("*").alias("n"),
-        (F.max("uniform") - F.min("uniform")).alias("uspan"),
-    ).collect()
-    n_files = len(per_file)
-    assert n_files > 1
-    counts = sorted(r["n"] for r in per_file)
-    # Balanced: largest file within 2x of the ideal equal share.
-    assert counts[-1] <= 2 * (20000 / n_files)
-    # The uniform dim still contracts per file (hypercube, not slab).
-    g = df.agg((F.max("uniform") - F.min("uniform")).alias("r")).collect()[0]
-    mean_uspan = sum(r["uspan"] for r in per_file) / n_files
-    assert mean_uspan < 0.6 * g["r"]
-    assert spark.read.parquet(qpath).count() == 20000
 
 
 def test_morton_null_dims_agree_across_bucketizers(spark):

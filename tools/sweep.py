@@ -1,17 +1,15 @@
-"""Fresh-process, driver-style full-registry sweep at an arbitrary
-scale — the flip-validation step of the LANDING CHECKLIST
-(plans/rotation.py): every rotation promotion must be verified
-bit-exact against its DuckDB oracle at sf0.001 / sf0.01 / sf0.1 BEFORE
-the driver-flag flip is committed. Earlier rounds ran this inline; the
-committed tool makes the recipe reproducible.
+"""Fresh-process, driver-style oracle sweep at an arbitrary scale.
 
 Usage:  python tools/sweep.py [sf_dir] [name ...]
 
-With no names, sweeps the FULL registry (not just the driver surface —
-the r9 convention). Compares columns (sorted by name, driver
-semantics), row counts, and every cell bit-exactly (floats compared
-with ==; NaN==NaN), mirroring tests/test_oracle_parity.py. Prints one
-line per failure and a summary; exit code 1 on any failure.
+Runs each named registry entry in one fresh Spark session and compares
+it against its DuckDB oracle over the same parquet files. With no
+names, sweeps the FULL registry (every entry with an oracle); pass the
+``plans.queries.DRIVER_SURFACE`` names to check what the driver checks.
+Compares columns (sorted by name, driver semantics), row counts, and
+every cell bit-exactly (floats compared with ==; NaN==NaN), mirroring
+tests/test_oracle_parity.py. Prints one line per failure and a summary;
+exit code 1 on any failure.
 """
 
 from __future__ import annotations
