@@ -7,9 +7,7 @@ query_data(quarter_range, types) filter; every chart re-filters the same
 frame). This module is that architecture on Spark:
 
 - ``Dashboard`` materializes the gold star-join once per (sf_dir) and
-  ``cache()``s it — the Spark analogue of @st.cache_data. A plan that
-  re-reads the gold lineage hits the InMemoryRelation through Spark's
-  cache manager.
+  ``cache()``s it — the Spark analogue of @st.cache_data.
 - The action that fills the cache also computes the widget cube: the
   gold row count per distinct combination of every gold column but
   ``o_orderkey``, collected to the driver as a pandas frame. Region is
@@ -23,6 +21,15 @@ frame). This module is that architecture on Spark:
   Widget parameters (quarter range, status list, group key, top-k) are
   function arguments, exactly like the reference's sidebar state
   (streamlit.py:60-96), so an app layer maps widgets -> calls 1:1.
+- The canned questions that are cube projections (``q1_top_segments``,
+  ``q2_top_priorities_q4``, ``q3_quarter_ranking``, ``w1_quarter_trend``;
+  streamlit.py:378-447) are answered the same way by ``cube_answer``,
+  which ``plans.nlq.answer`` asks first. It serves them only from the
+  live Dashboard of the same session and sf_dir, only when the gold is
+  one row per order (the cube's total equals the orders footer count)
+  and only while the four source tables' files are unchanged; otherwise
+  the registry's Spark plan answers. No question reads the cached gold
+  through Spark's cache manager: their plans re-read the star tables.
 
 Scale: at 100 TB the gold table is written partitioned (plans.etl.
 write_gold / sources.warehouse) and 'cache' becomes the storage layer +
@@ -32,10 +39,15 @@ with the dimension domains, not with the fact rows.
 
 from __future__ import annotations
 
+import os
+import weakref
+from decimal import ROUND_HALF_UP, Decimal
+
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType, StructField, StructType
+from pyspark.sql.types import DoubleType, LongType, StringType, StructField, StructType
 
 from .queries import _t
 
@@ -56,12 +68,78 @@ def _counted(*keys: str) -> StructType:
     )
 
 
+TREND_SCHEMA = StructType(
+    [StructField("quarter", StringType(), True)]
+    + [StructField(c, LongType(), False) for c in ("total_n", "focus_n")]
+    + [StructField(c, DoubleType(), True) for c in ("focus_pct", "qoq_pct")]
+)
+
+# The registry's ranked questions as cube projections: cell filters,
+# group key and top-k (plans/queries.py holds the Spark plans they equal).
+RANKED = {
+    "q1_top_segments": ({"status": ["F"], "nation_name": ["NATION_3"]}, "segment", 5),
+    "q2_top_priorities_q4": ({"status": ["O"], "qnum": [4]}, "priority", 5),
+    "q3_quarter_ranking": ({"status": ["F", "O"]}, "quarter", None),
+}
+# The gold's source tables.
+STAR = ("orders", "customer", "nation", "region")
+
+# The live Dashboard per (session, real sf_dir). Weak values: a closed
+# or dropped Dashboard is never kept alive, nor served, by this map.
+_LIVE: weakref.WeakValueDictionary = weakref.WeakValueDictionary()
+
+
+def _key(spark: SparkSession, sf_dir: str) -> tuple:
+    return id(spark), os.path.realpath(sf_dir)
+
+
+def _table_files(sf_dir: str, table: str) -> list[str]:
+    path = os.path.join(sf_dir, f"{table}.parquet")
+    if os.path.isfile(path):
+        return [path]
+    return sorted(os.path.join(d, f) for d, _, fs in os.walk(path) for f in fs)
+
+
+def _star_files(sf_dir: str) -> dict[str, tuple]:
+    """(size, mtime_ns, inode) of every file of the gold's source tables."""
+    sf_dir, out = os.path.realpath(sf_dir), {}
+    for t in STAR:
+        for f in _table_files(sf_dir, t):
+            st = os.stat(f)
+            out[f] = (st.st_size, st.st_mtime_ns, st.st_ino)
+    return out
+
+
+def _round1(x: float) -> float:
+    """``F.round(x, 1)`` on a double: HALF_UP on its decimal string."""
+    return float(Decimal(repr(x)).quantize(Decimal("0.1"), ROUND_HALF_UP))
+
+
+def cube_answer(spark: SparkSession, sf_dir: str, name: str) -> DataFrame | None:
+    """Registry entry ``name`` answered from the widget cube of the live
+    Dashboard for this session and ``sf_dir``, with no Spark job; None
+    when the registry's Spark plan must answer: ``name`` is not cube
+    shaped, no such Dashboard is live, its gold is not one row per
+    order, or a source file changed since its cube was filled."""
+    if name not in RANKED and name != "w1_quarter_trend":
+        return None
+    d = _LIVE.get(_key(spark, sf_dir))
+    if d is None or d._files is None:
+        return None
+    try:
+        if _star_files(sf_dir) != d._files:
+            return None
+    except OSError:
+        return None
+    if name == "w1_quarter_trend":
+        return d._trend()
+    where, key, k = RANKED[name]
+    return d._top(d._where(**where), key, k)
+
+
 def build_gold(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The denormalized analysis table (j3_gold_denorm's lineage)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
-    region = _t(spark, sf_dir, "region")
+    orders, customer, nation, region = (_t(spark, sf_dir, t) for t in STAR)
     return (
         orders.join(
             F.broadcast(customer), F.col("o_custkey") == F.col("c_custkey"), "left"
@@ -92,6 +170,7 @@ class Dashboard:
 
     def __init__(self, spark: SparkSession, sf_dir: str):
         self.spark = spark
+        files = _star_files(sf_dir)  # before Spark lists them
         self.gold = build_gold(spark, sf_dir).cache()
         dims = [c for c in self.gold.columns if c != "o_orderkey"]
         # One action both fills the cache and collects the cube. The cube
@@ -104,6 +183,17 @@ class Dashboard:
         self._statuses = sorted(self.cube["status"].dropna().unique())
         # Every dimension but qnum (the quarter filter's key) can group.
         self._keys = tuple(c for c in dims if c != "qnum")
+        # The canned questions count orders; the cube counts gold rows.
+        # They agree when each order joined at most one customer, nation
+        # and region, i.e. the gold has exactly the orders' row count.
+        rows = sum(
+            pq.read_metadata(f).num_rows
+            for f in _table_files(sf_dir, "orders")
+            if not os.path.basename(f).startswith(("_", "."))
+        )
+        self._files = files if rows == self.cube["n"].sum() else None
+        self._key = _key(spark, sf_dir)
+        _LIVE[self._key] = self
 
     def _cells(
         self,
@@ -123,10 +213,16 @@ class Dashboard:
                     "statuses must be None (all) or a non-empty list drawn "
                     f"from {self._statuses}; got {statuses!r}"
                 )
+        return self._where(qnum=range(lo, hi + 1), status=statuses)
+
+    def _where(self, **isin) -> pd.DataFrame:
+        """The cube cells whose columns hold one of the given values
+        (``None`` keeps every value)."""
         c = self.cube
-        keep = c["qnum"].between(lo, hi)
-        if statuses is not None:
-            keep &= c["status"].isin(statuses)
+        keep = pd.Series(True, index=c.index)
+        for col, values in isin.items():
+            if values is not None:
+                keep &= c[col].isin(values)
         return c[keep]
 
     def _frame(self, pdf: pd.DataFrame, schema: StructType) -> DataFrame:
@@ -173,15 +269,40 @@ class Dashboard:
             raise ValueError(f"key must be one of {self._keys}; got {key!r}")
         if k < 1:
             raise ValueError(f"k must be >= 1; got {k!r}")
+        return self._top(self._cells(**filters), key, k)
+
+    def _top(self, cells: pd.DataFrame, key: str, k: int | None) -> DataFrame:
+        """Order counts of ``cells`` per ``key``, largest first, ties by
+        key ascending (nulls first), the first ``k`` (all if None)."""
         top = (
-            self._cells(**filters)
-            .groupby(key, dropna=False, sort=False)["n"]
+            cells.groupby(key, dropna=False, sort=False)["n"]
             .sum()
             .reset_index()
             .sort_values(["n", key], ascending=[False, True], na_position="first")
-            .head(k)
         )
-        return self._frame(top, _counted(key))
+        return self._frame(top if k is None else top.head(k), _counted(key))
+
+    def _trend(self) -> DataFrame | None:
+        """w1_quarter_trend: orders and F/O orders per quarter, the F/O
+        share and its change on the previous quarter. A null quarter
+        sorts first and, like the Spark plan's join, has no F/O orders.
+        None when a previous quarter has none: Spark's division by zero
+        decides that case."""
+        c = self.cube
+        total = c.groupby("qnum", dropna=False)["n"].sum()
+        focus = c[c["status"].isin(["F", "O"])].groupby("qnum")["n"].sum()
+        rows, prev = [], None
+        for q, t in total.sort_index(na_position="first").items():
+            f = int(focus.get(q, 0))
+            if prev == 0:
+                return None
+            qoq = None if prev is None else _round1((f - prev) * 100.0 / prev)
+            label = None if pd.isna(q) else f"Q{int(q)}"
+            rows.append((label, int(t), f, _round1(f * 100.0 / t), qoq))
+            prev = f
+        return self._frame(pd.DataFrame(rows, columns=TREND_SCHEMA.names), TREND_SCHEMA)
 
     def close(self) -> None:
+        if _LIVE.get(self._key) is self:
+            del _LIVE[self._key]
         self.gold.unpersist()

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 from .. import schemas
 from ..sources.registry import register_views
 from . import queries as Q
+from .dashboard import cube_answer
 
 # Keyword profiles per registry query: every listed term scores 1; the
 # highest total wins (ties -> lexicographically first name, deterministic).
@@ -285,8 +286,19 @@ def route(text: str) -> str:
 
 
 def answer(spark: SparkSession, sf_dir: str, text: str) -> DataFrame:
-    """NL text -> routed named query -> DataFrame."""
-    return Q.REGISTRY[route(text)].spark(spark, sf_dir)
+    """NL text -> routed named query -> DataFrame.
+
+    ``q1_top_segments``, ``q2_top_priorities_q4``, ``q3_quarter_ranking``
+    and ``w1_quarter_trend`` are projections of the dashboard's widget
+    cube: while a ``Dashboard`` built in this session for this
+    ``sf_dir`` is live (not closed), its gold is one row per order and
+    the star's files are unchanged since its cube was filled, they are
+    answered from that cube on the driver with no Spark job
+    (``dashboard.cube_answer``). Every other entry, and these four
+    without such a Dashboard, run the registry's Spark plan."""
+    name = route(text)
+    df = cube_answer(spark, sf_dir, name)
+    return df if df is not None else Q.REGISTRY[name].spark(spark, sf_dir)
 
 
 def run_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:

@@ -4,7 +4,12 @@ consistent with the registry's star-join queries."""
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
+import shutil
+import subprocess
+import sys
+import weakref
 from itertools import combinations
 
 import pyarrow as pa
@@ -12,14 +17,19 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import (
+    nlq,
+)
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.dashboard import (
     Dashboard,
+    cube_answer,
 )
 from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (
     REGISTRY,
 )
 
-from conftest import SF_SMOKE, jobs_in_group
+from conftest import SF_ORACLE, SF_SMOKE, jobs_in_group, make_duck
+from test_oracle_parity import cells_equal, normalize
 
 
 def test_dashboard_widget_queries(spark):
@@ -298,3 +308,196 @@ def test_cube_keeps_spark_null_order_types_and_empty_results(spark, tmp_path):
             assert None in {r[key] for r in d.top_groups(key, k=10).collect()}, key
     finally:
         d.close()
+
+
+def test_cube_questions_keep_spark_nulls_and_empty_results(spark, tmp_path):
+    """On the null star, q1 (no NATION_3) and q2 (no Q4) are empty and
+    q3 has a null quarter; the cube answers equal the Spark plans. w1's
+    null quarter has no F/O orders, so Q1's change divides by zero and
+    the cube leaves that to Spark."""
+    _write_null_star(str(tmp_path))
+    d = Dashboard(spark, str(tmp_path))
+    try:
+        rows = {}
+        for entry in ("q1_top_segments", "q2_top_priorities_q4", "q3_quarter_ranking"):
+            got = cube_answer(spark, str(tmp_path), entry)
+            want = REGISTRY[entry].spark(spark, str(tmp_path))
+            rows[entry] = got.collect()
+            assert (got.schema, rows[entry]) == (want.schema, want.collect()), entry
+        assert rows["q1_top_segments"] == rows["q2_top_priorities_q4"] == []
+        assert None in {r["quarter"] for r in rows["q3_quarter_ranking"]}
+        assert cube_answer(spark, str(tmp_path), "w1_quarter_trend") is None
+    finally:
+        d.close()
+
+
+# ---------------------------------------------------------------------------
+# Cube-shaped questions: nlq.answer from the live Dashboard's cube
+# ---------------------------------------------------------------------------
+
+CUBE_QUESTIONS = {
+    "q1_top_segments": "top segment by nation",
+    "q2_top_priorities_q4": "priority counts for q4",
+    "q3_quarter_ranking": "quarter ranking",
+    "w1_quarter_trend": "trend over time",
+}
+
+
+def _answer(spark, sf_dir, entry, group):
+    """``nlq.answer`` for the entry's question, built and collected
+    under a job group: (job ids, columns, schema string, rows)."""
+    out = []
+
+    def run():
+        df = nlq.answer(spark, sf_dir, CUBE_QUESTIONS[entry])
+        out.extend([df.columns, df.schema.simpleString(), [tuple(r) for r in df.collect()]])
+
+    return [jobs_in_group(spark, group, run)] + out
+
+
+def _matches_oracle(sf_dir, entry, cols, rows):
+    con = make_duck(str(sf_dir))
+    try:
+        res = con.execute(REGISTRY[entry].oracle)
+        d_cols = [c[0] for c in res.description]
+        d_rows = res.fetchall()
+    finally:
+        con.close()
+    (got, got_cols), (want, want_cols) = normalize(rows, cols), normalize(d_rows, d_cols)
+    return got_cols == want_cols and len(got) == len(want) and all(
+        cells_equal(a, b) for g, w in zip(got, want) for a, b in zip(g, w)
+    )
+
+
+@pytest.fixture(scope="module", params=[SF_SMOKE, SF_ORACLE], ids=["smoke", "oracle"])
+def live(request, spark):
+    d = Dashboard(spark, request.param)
+    yield request.param
+    d.close()
+
+
+@pytest.mark.parametrize("entry", sorted(CUBE_QUESTIONS))
+def test_cube_shaped_question_runs_no_job(spark, live, entry):
+    """With a live Dashboard, the question is built and collected with
+    no Spark job, and returns the registry Spark plan's columns, schema
+    and rows, in order, which match the DuckDB oracle."""
+    jobs, cols, schema, rows = _answer(spark, live, entry, f"cube_{entry}")
+    assert jobs == []
+    want = REGISTRY[entry].spark(spark, live)
+    assert (cols, schema, rows) == (
+        want.columns, want.schema.simpleString(), [tuple(r) for r in want.collect()]
+    )
+    assert rows and _matches_oracle(live, entry, cols, rows)
+
+
+def _assert_spark_answers(spark, sf_dir, case):
+    """Every cube-shaped question runs Spark jobs and matches DuckDB;
+    returns the rows per entry."""
+    answers = {}
+    for entry in CUBE_QUESTIONS:
+        jobs, cols, _, rows = _answer(spark, str(sf_dir), entry, f"{case}_{entry}")
+        assert jobs, (case, entry)
+        assert _matches_oracle(sf_dir, entry, cols, rows), (case, entry)
+        answers[entry] = rows
+    return answers
+
+
+def _star_copy(dst):
+    os.makedirs(dst, exist_ok=True)
+    for t in ("orders", "customer", "nation", "region"):
+        shutil.copyfile(os.path.join(SF_SMOKE, f"{t}.parquet"), os.path.join(dst, f"{t}.parquet"))
+    return str(dst)
+
+
+def test_questions_fall_back_without_a_live_dashboard(spark, tmp_path):
+    """No Dashboard, a closed one, a dropped one and one for another
+    sf_dir: Spark answers. The same directory under another spelling is
+    served."""
+    a, b = _star_copy(tmp_path / "a"), _star_copy(tmp_path / "b")
+    _assert_spark_answers(spark, a, "none")
+    d = Dashboard(spark, a)
+    try:
+        for entry in CUBE_QUESTIONS:
+            assert _answer(spark, a + "/.", entry, f"served_{entry}")[0] == []
+        _assert_spark_answers(spark, b, "other_dir")
+    finally:
+        d.close()
+    _assert_spark_answers(spark, a, "closed")
+    d = Dashboard(spark, a)
+    d.gold.unpersist()
+    dropped = weakref.ref(d)
+    del d  # without close(): the lookup must not keep it alive
+    assert dropped() is None
+    _assert_spark_answers(spark, a, "dropped")
+
+
+def test_questions_fall_back_after_the_star_changes(spark, tmp_path):
+    """Rewriting orders after the cube was filled sends the questions to
+    Spark, which sees the new rows."""
+    sf = _star_copy(tmp_path)
+    d = Dashboard(spark, sf)
+    try:
+        before = {e: _answer(spark, sf, e, f"before_{e}")[3] for e in CUBE_QUESTIONS}
+        path = os.path.join(sf, "orders.parquet")
+        orders = pq.read_table(path)
+        pq.write_table(orders.slice(0, orders.num_rows // 2), path)
+        after = _assert_spark_answers(spark, sf, "rewritten")
+        assert all(after[e] != before[e] for e in CUBE_QUESTIONS)
+    finally:
+        d.close()
+
+
+def test_questions_fall_back_when_gold_is_not_one_row_per_order(spark, tmp_path):
+    """A duplicated customer key fans its orders out in the gold, so the
+    cube's counts are not order counts: Spark answers."""
+    sf = _star_copy(tmp_path)
+    path = os.path.join(sf, "customer.parquet")
+    customer = pq.read_table(path)
+    pq.write_table(pa.concat_tables([customer, customer.slice(0, 1)]), path)
+    d = Dashboard(spark, sf)
+    try:
+        assert d.cube["n"].sum() > pq.read_metadata(os.path.join(sf, "orders.parquet")).num_rows
+        _assert_spark_answers(spark, sf, "fanned_out")
+    finally:
+        d.close()
+
+
+STOPPED_SESSION = """
+import json, sys
+from conftest import SF_SMOKE, jobs_in_group
+from financial_transaction_data_warehouse_interactive_dashboard_spark.plans import nlq
+from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.dashboard import Dashboard
+from financial_transaction_data_warehouse_interactive_dashboard_spark.session import get_spark
+old = get_spark("ftdw-stopped")
+d = Dashboard(old, SF_SMOKE)
+old.stop()
+spark = get_spark("ftdw-restarted")
+out = {}
+for entry, text in json.loads(sys.argv[1]).items():
+    got = []
+    def run():
+        df = nlq.answer(spark, SF_SMOKE, text)
+        got.extend([df.columns, [list(r) for r in df.collect()]])
+    out[entry] = [len(jobs_in_group(spark, entry, run))] + got
+spark.stop()
+print("RESULT " + json.dumps(out))
+"""
+
+
+def test_questions_fall_back_after_the_session_stops(tmp_path):
+    """A Dashboard built in a session that has since stopped serves no
+    question of the next session (a fresh process: the suite shares one
+    session)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    path = os.pathsep.join(filter(None, [here, os.environ.get("PYTHONPATH")]))
+    env = dict(os.environ, SPARK_GRAFT_CPUS="1", SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=path)
+    res = subprocess.run(
+        [sys.executable, "-c", STOPPED_SESSION, json.dumps(CUBE_QUESTIONS)],
+        capture_output=True, text=True, cwd=str(tmp_path), env=env, timeout=300,
+    )
+    lines = [ln for ln in res.stdout.splitlines() if ln.startswith("RESULT ")]
+    assert res.returncode == 0 and lines, res.stderr[-2000:]
+    for entry, (jobs, cols, rows) in json.loads(lines[0][7:]).items():
+        assert jobs > 0, entry
+        assert _matches_oracle(SF_SMOKE, entry, cols, [tuple(r) for r in rows]), entry

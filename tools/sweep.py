@@ -2,8 +2,9 @@
 
 Usage:  python tools/sweep.py [sf_dir] [name ...]
 
-Runs each named registry entry in one fresh Spark session and compares
-it against its DuckDB oracle over the same parquet files. With no
+Runs each named registry entry in one fresh Spark session, built by
+``session.get_spark`` like the tests' and perfbench's, and compares it
+against its DuckDB oracle over the same parquet files. With no
 names, sweeps the FULL registry (every entry with an oracle); pass the
 ``plans.queries.DRIVER_SURFACE`` names to check what the driver checks.
 Compares columns (sorted by name, driver semantics), row counts, and
@@ -44,7 +45,6 @@ def cells_equal(a, b) -> bool:
 
 def main() -> None:
     import duckdb
-    from pyspark.sql import SparkSession
 
     from financial_transaction_data_warehouse_interactive_dashboard_spark.plans.queries import (  # noqa: E501
         REGISTRY,
@@ -52,21 +52,15 @@ def main() -> None:
     from financial_transaction_data_warehouse_interactive_dashboard_spark.schemas import (  # noqa: E501
         TESTDATA_TABLES,
     )
+    from financial_transaction_data_warehouse_interactive_dashboard_spark.session import (  # noqa: E501
+        get_spark,
+    )
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2:] or sorted(
         n for n, q in REGISTRY.items() if q.oracle is not None
     )
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("ftdw-sweep")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-    )
+    spark = get_spark("ftdw-sweep")
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb.connect()
     for t in TESTDATA_TABLES:
